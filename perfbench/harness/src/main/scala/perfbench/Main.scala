@@ -23,8 +23,10 @@ final case class PassRun(index: Int, traced: Boolean, start: Long, end: Long, op
   *
   * `--mode setup` creates the session, warms it up, records when it was
   * ready and exits. `--mode run` does the same, then runs the workload as a
-  * closed loop with one client: a cold pass, warm passes until `--seconds`
-  * have passed and `--min-passes` passes have run. Untimed, the result
+  * closed loop with one client: a cold pass, then warm passes for
+  * `--seconds` (each started only if it should end inside them), at least
+  * until `--min-passes` passes have run. The session cache is
+  * cleared, untimed, before every pass. Untimed, the result
   * frames of the last pass are then written as parquet for the oracle
   * compare. An operation is one call of `SparkEntry.queries(q)` followed by
   * a `noop` write, which consumes every column of every row (a `count()`
@@ -46,7 +48,7 @@ object Main {
     val spark = graft.LocalSession(opt("cpus"))
     spark.sparkContext.setLogLevel("ERROR")
     val sessionMs = System.currentTimeMillis()
-    warmUp(spark, data)
+    graft.LocalSession.warmup(spark, data)
     val readyMs = System.currentTimeMillis()
     val result = scala.collection.mutable.LinkedHashMap[String, Any](
       "ready_ms" -> readyMs,
@@ -64,14 +66,6 @@ object Main {
     result("peak_rss_mb") = peakRssMb()
     spark.stop()
     Files.writeString(Paths.get(runDir, "result.json"), Json(result))
-  }
-
-  /** Loads the parquet reader and whole-stage codegen: one full scan of the
-    * largest input table. */
-  private def warmUp(spark: SparkSession, data: String): Unit = {
-    val largest = new java.io.File(data).listFiles().filter(_.getName.endsWith(".parquet"))
-      .maxBy(_.length).getName.stripSuffix(".parquet")
-    graft.sources.Tables(spark, data, largest).write.format("noop").mode("overwrite").save()
   }
 
   private def runWorkload(spark: SparkSession, data: String, runDir: String,
@@ -101,6 +95,9 @@ object Main {
     val passes = ArrayBuffer.empty[PassRun]
     def runPass(): PassRun = {
       val index = passes.size
+      // untimed: every pass builds its shared stages afresh, as the cold pass
+      // does, so a change in building them shows in wall_s as well
+      spark.catalog.clearCache()
       val traced = tracer.isDefined && index % 2 == 0
       if (traced) tracer.get.attach()
       val order = new scala.util.Random(seed * 1000003L + index).shuffle(ops.map(_._1))
@@ -117,8 +114,10 @@ object Main {
     }
 
     runPass()
-    val windowStart = System.nanoTime()
-    while (passes.size < minPasses || (System.nanoTime() - windowStart) / 1e9 < seconds) runPass()
+    // warm passes while the next one, as long as the last, ends inside the window
+    val windowStart = Clock.nowUs
+    def fits = Clock.nowUs + (passes.last.end - passes.last.start) <= windowStart + seconds * 1e6
+    while (passes.size < minPasses || fits) runPass()
 
     // untimed: the last pass's results, executed once more and written out
     // for the oracle compare

@@ -82,7 +82,10 @@ final class Tracer(spark: SparkSession, modules: Map[String, String], cpus: Int,
   private var nextId = 0L
   private def id(): Long = { nextId += 1; nextId }
 
+  /** Starts a traced pass. Events of the untraced pass before it that are
+    * still queued are delivered first, so they do not reach the listeners. */
   def attach(): Unit = {
+    ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     spark.streams.addListener(streamListener)
   }

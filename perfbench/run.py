@@ -12,9 +12,10 @@ One run of a workload is one closed loop with one client, `local[n]` with
 n = min(cores, 4), over the read-only input tables in perfbench/data:
 
   1. set-up three times (two set-up-only JVMs, then the measuring JVM): JVM
-     start until the session is ready and the warm-up scan is done;
-  2. a cold pass over the workload's operations, then warm passes until
-     `--seconds` have passed; the seed permutes the operations of each pass;
+     start until the session is ready and graft.LocalSession.warmup is done;
+  2. a cold pass over the workload's operations, then warm passes for
+     `--seconds` (at least three); the session cache is cleared before each
+     pass, and the seed permutes the operations of each pass;
   3. an untimed check pass whose outputs are compared with the DuckDB oracle
      (`SparkEntry.oracleSql`), cached in perfbench/oracle.
 
@@ -52,24 +53,25 @@ ORACLE = os.path.join(HERE, "oracle")
 # Operations are SparkEntry query names, each with the src/main/scala/graft
 # module that owns its entry function (for the per-module busy time).
 WORKLOADS = {
-    # model -> graph -> search docs -> publish: GraphBuild's metadata stage
-    # shared by two consumers through SharedStage.cached, the search-doc
-    # joins and shuffles, and staging/publish writes beside them.
+    # the databuilder job's graph and publish side: node counts, lineage
+    # edges, a stale sweep and a CSV staging round trip. About 30 jobs a
+    # pass, nearly all single-task stages, at about 5% executor use: planning
+    # and dispatch on the driver dominate.
     "catalog_refresh": [
         ("q_graph_node_counts", "operators.GraphBuild"),
         ("q_table_lineage", "operators.GraphBuild"),
         ("q_stale_sweep", "operators.Publish"),
         ("q_csv_loader_roundtrip", "sources.Stage"),
     ],
-    # AvailableNow micro-batch streams with per-batch folds and commits:
-    # many small jobs at low executor utilisation, so dispatch, partition
-    # sizing and commit costs dominate.
+    # an AvailableNow micro-batch stream folding each batch into a published
+    # store: nearly all of its time is inside the entry call, in stream
+    # batches of small jobs at low executor use.
     "curation_stream": [
         ("q_stream_publish_fold", "streaming.StreamPublish"),
     ],
-    # compute-heavy, read-mostly training-data operators (near-dup hashing,
-    # perceptual codecs, span dedup): the control workload, which a change
-    # that narrows dispatch or partitions must not slow.
+    # near-dup hashing and perceptual codecs, read-mostly with persisted
+    # family stages: the busiest executors of the three, and the control
+    # that a change which narrows dispatch or partitions must not slow.
     "corpus_batch": [
         ("q_minhash_lsh", "operators.DedupOps"),
         ("q_image_dedup", "operators.MultimodalOps"),
@@ -153,7 +155,11 @@ def source_stamp():
 def build():
     """Compiles graft and the harness, jars the class directories (a CDS
     archive takes jars only) and dumps a class-data-sharing archive of the
-    set-up path. Returns the java command prefix."""
+    set-up path. Returns the java command prefix.
+
+    The archive is there for run length: it halves a set-up (about 7 s
+    against 12 s on a 4-core box), without which a run's three set-ups no
+    longer fit the time the benchmark's runs are given."""
     for p in ("build.sbt", os.path.join("src", "main", "scala", "graft", "SparkEntry.scala")):
         if not os.path.isfile(os.path.join(ROOT, p)):
             fail(f"{p} not found: run from the root of a graft checkout")
@@ -436,7 +442,9 @@ def main():
         setups_wanted, seconds, min_passes = 1, 0, 1
     else:
         ops = WORKLOADS[a.workload]
-        setups_wanted, seconds, min_passes = SETUPS, a.seconds, 4 if a.trace else 2
+        # wall_s leaves out the first warm pass, which still runs partly
+        # interpreted; at least three passes remain for its median
+        setups_wanted, seconds, min_passes = SETUPS, a.seconds, 6 if a.trace else 5
 
     setups, leftovers = [], []
     for _ in range(setups_wanted - 1):
@@ -478,7 +486,7 @@ def main():
     e2e = {
         "setup_s": statistics.median(s["setup_s"] for s in setups),
         "cold_s": wall_s(passes[0]),
-        "wall_s": median_pass_s(warm or passes[:1]),
+        "wall_s": median_pass_s(warm[1:] or warm or passes[:1]),
         "peak_rss_mb": res["peak_rss_mb"],
     }
     label = a.workload or "smoke"
