@@ -26,9 +26,9 @@ final case class PassRun(index: Int, traced: Boolean, start: Long, end: Long, op
   * closed loop with one client: a cold pass, then warm passes for
   * `--seconds` (each started only if it should end inside them), at least
   * until `--min-passes` passes have run. The session cache is
-  * cleared, untimed, before every pass. Untimed, the result
-  * frames of the last pass are then written as parquet for the oracle
-  * compare. An operation is one call of `SparkEntry.queries(q)` followed by
+  * cleared, untimed, before every pass. With `--check 1` the result
+  * frames of the last pass are then written, untimed, as parquet for the
+  * oracle compare. An operation is one call of `SparkEntry.queries(q)` followed by
   * a `noop` write, which consumes every column of every row (a `count()`
   * would let the optimiser prune columns).
   * The seed permutes the order of operations within each pass.
@@ -61,7 +61,7 @@ object Main {
       }
       result ++= runWorkload(spark, data, runDir, ops, opt("seed").toLong,
         opt("seconds").toDouble, opt("min-passes").toInt, opt("trace") == "1",
-        opt("cpus").toInt)
+        opt("check") == "1", opt("cpus").toInt)
     }
     result("peak_rss_mb") = peakRssMb()
     spark.stop()
@@ -70,7 +70,7 @@ object Main {
 
   private def runWorkload(spark: SparkSession, data: String, runDir: String,
       ops: Seq[(String, String)], seed: Long, seconds: Double, minPasses: Int,
-      trace: Boolean, cpus: Int): Seq[(String, Any)] = {
+      trace: Boolean, check: Boolean, cpus: Int): Seq[(String, Any)] = {
     val entries = graft.SparkEntry.queries
     // the last pass's result frames, written out by the check
     val frames = scala.collection.mutable.Map.empty[String, DataFrame]
@@ -121,7 +121,7 @@ object Main {
 
     // untimed: the last pass's results, executed once more and written out
     // for the oracle compare
-    val checkErrors = ops.map(_._1).flatMap { op =>
+    val checkErrors = if (!check) Nil else ops.map(_._1).flatMap { op =>
       try {
         frames.getOrElse(op, sys.error("the operation failed in the last pass"))
           .write.mode("overwrite").parquet(s"$runDir/out/$op")

@@ -11,11 +11,12 @@ directories; later calls reuse the build while the sources are unchanged.
 One run of a workload is one closed loop with one client, `local[n]` with
 n = min(cores, 4), over the read-only input tables in perfbench/data:
 
-  1. set-up three times (two set-up-only JVMs, then the measuring JVM): JVM
-     start until the session is ready and graft.LocalSession.warmup is done;
-  2. a cold pass over the workload's operations, then warm passes for
-     `--seconds` (at least three); the session cache is cleared before each
-     pass, and the seed permutes the operations of each pass;
+  1. three JVMs, one after the other, each timed from its start until the
+     session is ready and graft.LocalSession.warmup is done (set-up), then
+     through one cold pass over the workload's operations;
+  2. the last of them then runs warm passes for `--seconds`: three warm-up
+     passes, then at least three measured ones; the session cache is cleared
+     before each pass, and the seed permutes the operations of each pass;
   3. an untimed check pass whose outputs are compared with the DuckDB oracle
      (`SparkEntry.oracleSql`), cached in perfbench/oracle.
 
@@ -53,16 +54,6 @@ ORACLE = os.path.join(HERE, "oracle")
 # Operations are SparkEntry query names, each with the src/main/scala/graft
 # module that owns its entry function (for the per-module busy time).
 WORKLOADS = {
-    # the databuilder job's graph and publish side: node counts, lineage
-    # edges, a stale sweep and a CSV staging round trip. About 30 jobs a
-    # pass, nearly all single-task stages, at about 5% executor use: planning
-    # and dispatch on the driver dominate.
-    "catalog_refresh": [
-        ("q_graph_node_counts", "operators.GraphBuild"),
-        ("q_table_lineage", "operators.GraphBuild"),
-        ("q_stale_sweep", "operators.Publish"),
-        ("q_csv_loader_roundtrip", "sources.Stage"),
-    ],
     # an AvailableNow micro-batch stream folding each batch into a published
     # store: nearly all of its time is inside the entry call, in stream
     # batches of small jobs at low executor use.
@@ -102,7 +93,8 @@ PER_LAYER = ([("setup.session_s", "s"), ("setup.warmup_s", "s"),
                 ("stream.latest_offset_ms", "ms"), ("stream.batch_p50_ms", "ms"),
                 ("stream.batch_tail_ms", "ms"), ("trace.overhead_x", "x")])
 
-SETUPS = 3           # set-ups per run; setup_s is their median
+JVMS = 3             # JVMs per run; setup_s and cold_s are medians over them
+WARMUP_PASSES = 3    # warm passes left out of wall_s: the JIT is still compiling
 RUN_DEADLINE_S = 170  # a run must end within 180 s once built
 CPUS = min(os.cpu_count() or 1, 4)
 # The parallel collector has no concurrent marking threads competing with
@@ -361,7 +353,7 @@ def tail(xs):
 
 def trace_layers(result, setups):
     passes = result["trace"]["passes"]
-    warm = [p for p in passes if p["index"] > 0]
+    warm = [p for p in passes if p["index"] > WARMUP_PASSES]
     layers = {}
     spread = {}
     for name, _ in PER_LAYER:
@@ -375,9 +367,9 @@ def trace_layers(result, setups):
     layers["stream.batch_p50_ms"] = float(statistics.median(batch_ms)) if batch_ms else 0.0
     tp = tail(batch_ms)
     layers["stream.batch_tail_ms"] = percentile(batch_ms, tp) if batch_ms else 0.0
-    # pass 1, untraced, is still warming up the JIT: compare from pass 2 on
-    untraced = [p for p in result["passes"] if p["index"] > 1 and not p["traced"]]
-    traced = [p for p in result["passes"] if p["index"] > 1 and p["traced"]]
+    # the warm-up passes are left out, as in wall_s
+    untraced = [p for p in result["passes"] if p["index"] > WARMUP_PASSES and not p["traced"]]
+    traced = [p for p in result["passes"] if p["index"] > WARMUP_PASSES and p["traced"]]
     layers["trace.overhead_x"] = median_pass_s(traced) / median_pass_s(untraced)
     return layers, spread, (tp, len(batch_ms)), warm
 
@@ -439,63 +431,74 @@ def main():
     deadline = time.monotonic() + RUN_DEADLINE_S
     if a.smoke:
         ops = [op for name in WORKLOADS for op in WORKLOADS[name]]
-        setups_wanted, seconds, min_passes = 1, 0, 1
+        jvms, seconds, min_passes = 1, 0, 1
     else:
         ops = WORKLOADS[a.workload]
-        # wall_s leaves out the first warm pass, which still runs partly
-        # interpreted; at least three passes remain for its median
-        setups_wanted, seconds, min_passes = SETUPS, a.seconds, 6 if a.trace else 5
+        # the cold pass, the warm-up passes, then at least three measured
+        # passes (four when traced: two traced, two untraced)
+        jvms, seconds = JVMS, a.seconds
+        min_passes = 1 + WARMUP_PASSES + (4 if a.trace else 3)
+    names = [q for q, _ in ops]
+    op_args = ["--ops", ",".join(f"{q}:{m}" for q, m in ops), "--seed", str(a.seed)]
 
-    setups, leftovers = [], []
-    for _ in range(setups_wanted - 1):
-        run_dir = new_run_dir("setup")
-        rc, res, launched = jvm(java, "setup", run_dir, [], max(1, deadline - time.monotonic()))
+    # Every JVM but the last sets up and runs the cold pass (set-up only when
+    # traced: the traced run reports no cold pass); the last one goes on to
+    # the warm passes and the output check.
+    results, leftovers, mismatches = [], [], {}
+    for k in range(jvms):
+        last = k == jvms - 1
+        if last:
+            mode, args = "run", op_args + ["--seconds", str(seconds), "--min-passes",
+                                           str(min_passes), "--trace", str(a.trace), "--check", "1"]
+        elif a.trace:
+            mode, args = "setup", []
+        else:
+            mode, args = "run", op_args + ["--seconds", "0", "--min-passes", "1",
+                                           "--trace", "0", "--check", "0"]
+        run_dir = new_run_dir(a.workload or "smoke")
+        rc, res, launched = jvm(java, mode, run_dir, args, max(1, deadline - time.monotonic()))
+        if res is None:
+            with open(os.path.join(run_dir, "jvm.log"), errors="replace") as f:
+                log(f.read()[-4000:])
+            shutil.rmtree(run_dir, ignore_errors=True)
+            fail(f"benchmark JVM failed (exit {rc})", 1)
+        res["setup_s"] = res["ready_ms"] / 1e3 - launched
+        if last:
+            mismatches = check_outputs(run_dir, names, res["oracle_sql"], res["check_errors"])
         leftovers.append(leftover_bytes(run_dir))
         shutil.rmtree(run_dir, ignore_errors=True)
-        if res is None:
-            fail(f"set-up JVM failed (exit {rc})", 1)
-        setups.append(dict(res, setup_s=res["ready_ms"] / 1e3 - launched))
-
-    run_dir = new_run_dir(a.workload or "smoke")
-    args = ["--ops", ",".join(f"{q}:{m}" for q, m in ops), "--seed", str(a.seed),
-            "--seconds", str(seconds), "--min-passes", str(min_passes),
-            "--trace", str(a.trace)]
-    rc, res, launched = jvm(java, "run", run_dir, args, max(1, deadline - time.monotonic()))
-    if res is None:
-        with open(os.path.join(run_dir, "jvm.log"), errors="replace") as f:
-            log(f.read()[-4000:])
-        shutil.rmtree(run_dir, ignore_errors=True)
-        fail(f"benchmark JVM failed (exit {rc})", 1)
-    setups.append(dict(res, setup_s=res["ready_ms"] / 1e3 - launched))
-    names = [q for q, _ in ops]
-    mismatches = check_outputs(run_dir, names, res["oracle_sql"], res["check_errors"])
-    leftovers.append(leftover_bytes(run_dir))
-    shutil.rmtree(run_dir, ignore_errors=True)
+        results.append(res)
+    res = results[-1]
 
     passes = res["passes"]
-    threw = [(p["index"], o["op"], o["error"]) for p in passes for o in p["ops"] if o["error"]]
-    attempted = sum(len(p["ops"]) for p in passes) + len(names)
+    colds = [r["passes"][0] for r in results if r.get("passes")]
+    all_passes = [(k, p) for k, r in enumerate(results) for p in r.get("passes", [])]
+    threw = [(k, p["index"], o["op"], o["error"]) for k, p in all_passes for o in p["ops"]
+             if o["error"]]
+    attempted = sum(len(p["ops"]) for _, p in all_passes) + len(names)
     failed = len(threw) + len(mismatches)
-    for idx, op, err in threw:
-        print(f"FAIL {op} (pass {idx}): {err}")
+    for k, idx, op, err in threw:
+        print(f"FAIL {op} (JVM {k + 1}, pass {idx}): {err}")
     for op in names:
         print(f"{'FAIL' if op in mismatches else 'PASS'} {op}"
               + (f": {mismatches[op]}" if op in mismatches else ""))
 
-    warm = [p for p in passes if p["index"] > 0]
+    warm = passes[1:]
     e2e = {
-        "setup_s": statistics.median(s["setup_s"] for s in setups),
-        "cold_s": wall_s(passes[0]),
-        "wall_s": median_pass_s(warm[1:] or warm or passes[:1]),
+        "setup_s": statistics.median(r["setup_s"] for r in results),
+        "cold_s": median_pass_s(colds),
+        "wall_s": median_pass_s(warm[WARMUP_PASSES:] or warm or passes[:1]),
         "peak_rss_mb": res["peak_rss_mb"],
     }
     label = a.workload or "smoke"
-    print(f"{label}: seed {a.seed}, {len(passes)} passes ({len(warm)} warm), "
-          f"{len(names)} operations, local[{CPUS}], data {os.path.basename(DATA)}")
+    print(f"{label}: seed {a.seed}, {len(results)} JVMs, {len(passes)} passes in the last "
+          f"({len(warm)} warm, {WARMUP_PASSES} of them warm-up), {len(names)} operations, "
+          f"local[{CPUS}], data {os.path.basename(DATA)}")
     for name, unit in ([] if a.smoke else END_TO_END):
         print(f"  {name:<14} {e2e[name]:>12.4f} {unit}")
     print(f"  {'failed_frac':<14} {failed / attempted:>12.4f} ({failed} of {attempted} operations)")
-    print(f"  setups_s       {[round(s['setup_s'], 3) for s in setups]}")
+    print(f"  setups_s       {[round(r['setup_s'], 3) for r in results]}")
+    print(f"  cold passes s  {[round(wall_s(p), 3) for p in colds]}")
     print(f"  warm passes s  {[round(wall_s(p), 3) for p in warm]}")
     print(f"  left behind    {sum(leftovers)} bytes in the run directories (removed)")
     print(f"  {'operation':<32} {'cold build+exec ms':>20} {'warm median build+exec ms':>28}")
@@ -504,12 +507,12 @@ def main():
                       key=lambda r: (r[0] > 0, r[1]["end"] - r[1]["start"]))
         def ms(o):
             return f"{(o['built'] - o['start']) / 1e3:.0f}+{(o['end'] - o['built']) / 1e3:.0f}"
-        warm_ops = [o for i, o in runs if i > 0]
+        warm_ops = [o for i, o in runs if i > WARMUP_PASSES] or [o for i, o in runs if i > 0]
         print(f"  {op:<32} {ms(runs[0][1]):>20} "
               f"{ms(warm_ops[len(warm_ops) // 2]) if warm_ops else '-':>28}")
 
     if a.trace:
-        layers, spread, tail_info, warm_traced = trace_layers(res, setups)
+        layers, spread, tail_info, warm_traced = trace_layers(res, results)
         print_trace_report(label, layers, spread, tail_info, warm_traced)
         os.makedirs(RESULTS, exist_ok=True)
         dump = os.path.join(RESULTS, f"spans-{label}-seed{a.seed}.json")
