@@ -5,6 +5,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalSession(cpus)
+    // artifacts land in the checkout the bench is run from
+    def inWorkDir(name: String): String =
+      java.nio.file.Paths.get(name).toAbsolutePath.toString
     spark.sparkContext.setLogLevel("WARN")
     // JVM + codegen + parquet-reader warmup, not attributed to any query —
     // otherwise whichever query happens to run first pays ~5 s of it.
@@ -95,7 +98,7 @@ object Bench {
     // Informational, never fails the run: the sandbox's run-to-run noise
     // floor is ~±10%, so a flag is a pointer to investigate, not a verdict.
     val prevFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-      "/root/repo/BENCH_LAST.json")
+      inWorkDir("BENCH_LAST.json"))
     val prevQueries: Map[String, Double] =
       try {
         val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(prevFile))
@@ -170,8 +173,7 @@ object Bench {
     // complete JSON object. A FILTERED run must not clobber the last
     // full-run artifact others compare per-query values against.
     val defaultOut =
-      if (only.isEmpty) "/root/repo/BENCH_LAST.json"
-      else "/root/repo/BENCH_LAST.partial.json"
+      inWorkDir(if (only.isEmpty) "BENCH_LAST.json" else "BENCH_LAST.partial.json")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     // if the artifact write fails, the summary must not dangle a pointer at
     // a file that isn't there — report detail:null plus the write error
@@ -189,7 +191,7 @@ object Bench {
       val ts = java.time.format.DateTimeFormatter
         .ofPattern("yyyyMMdd'T'HHmmss").withZone(java.time.ZoneOffset.UTC)
         .format(java.time.Instant.now())
-      val d = new java.io.File("/root/repo/bench_runs")
+      val d = new java.io.File(inWorkDir("bench_runs"))
       d.mkdirs()
       new java.io.File(d, s"bench_${ts}_c${cpusNum}_${ProcessHandle.current.pid}.json").getPath
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
   * metadata, decoded with a REAL image codec (`javax.imageio` — PNG and
@@ -812,9 +813,6 @@ object MultimodalOps {
       .orderBy("doc_id", "frame_idx")
   }
 
-  /** A perceptual fingerprint row: asset key, provenance, 64-bit dHash. */
-  case class PerceptualHash(docId: Long, origId: Long, kind: String, dhash: Long)
-
   /** Planted near-duplicate twins for the perceptual dedup gate — the
     * two transforms byte-exact dedup is blind to. Planting is restricted
     * to high-contrast assets (|gA−gB| ≥ 64): a checkerboard whose two
@@ -832,11 +830,74 @@ object MultimodalOps {
   private[graft] def resizeTwinIds(id: Long): Boolean =
     id % 6 == 3 && highContrast(id)
 
-  /** Per-asset 64-bit dHash over the real decode path, for the corpus
-    * originals plus the planted twins. Everything binary stays
+  /** One planted near-duplicate transform of a modality: its `kind` tag,
+    * the byte transform applied to the original asset, and the corpus ids
+    * the batch fixture plants it on (as doc `id + idOffset`). */
+  final case class TwinKind(kind: String, idOffset: Long, planted: Long => Boolean,
+      transform: (Long, Array[Byte]) => Array[Byte])
+
+  /** A PERCEPTUAL MODALITY — everything the near-duplicate kernel knows
+    * about one media column: how an asset is synthesized (`encode`), how
+    * its fingerprint is recovered through the real decode path
+    * (`hashOf`), its planted twin transforms (the `kind → transform`
+    * map), and the verify radius. The one value drives the batch hash
+    * generator, the batch dedup ([[perceptualDedup]]) and the streaming
+    * gates' per-asset hasher ([[hashForKind]]). A 64-bit hash verifies
+    * by Hamming distance ≤ `radius` through the banded join, whose
+    * banding [[probeBands]] derives from the radius; radius 0 is an
+    * exact equi-join on the whole hash — the degenerate single-band case
+    * the 128-bit video signature uses. */
+  final case class Modality[H](encode: Long => Array[Byte],
+      hashOf: (Long, Array[Byte]) => H, twins: Seq[TwinKind], radius: Int) {
+
+    /** Synthesize the asset for one (orig id, kind) spec and hash it over
+      * the real decode path — the per-row codec step of the streaming
+      * gates; partition-local, binaries never leave the executor. */
+    def hashForKind(origId: Long, kind: String): H = {
+      val orig = encode(origId)
+      hashOf(origId, if (kind == "orig") orig else twins.find(_.kind == kind)
+        .getOrElse(throw new IllegalArgumentException(s"unknown asset kind $kind"))
+        .transform(origId, orig))
+    }
+  }
+
+  object Modality {
+    /** 64-bit dHash; JPEG-transcode and 3/4-downscale twins. Radius 15:
+      * measured worst case over the full asset period is Hamming 13 for
+      * resize twins and 0 for transcodes. */
+    val Image: Modality[Long] = Modality[Long](MediaCodec.encode, MediaCodec.dhashOf, Seq(
+      TwinKind("reencode", 3000000L, reencodeTwinIds, MediaCodec.transcodeJpeg),
+      TwinKind("resize", 4000000L, resizeTwinIds, (id, b) => MediaCodec.resizeBytes(
+        id, b, MediaCodec.widthOf(id) * 3 / 4, MediaCodec.heightOf(id) * 3 / 4))),
+      radius = 15)
+
+    /** 64-bit loudness-profile hash; 2× gain twins of every (6k+1)-th
+      * asset and 4-sample silence lead-in twins of every (6k+4)-th.
+      * Radius 7: the hash bounds are structural ([[AudioCodec.ahashOf]]:
+      * gain → Hamming 0, pad → ≤ 1). */
+    val Audio: Modality[Long] = Modality[Long](AudioCodec.encode, AudioCodec.ahashOf, Seq(
+      TwinKind("gain", 5000000L, _ % 6 == 1, (id, b) => AudioCodec.gainBytes(id, b, 2)),
+      TwinKind("pad", 6000000L, _ % 6 == 4, (id, b) => AudioCodec.padBytes(id, b, 4))),
+      radius = 7)
+
+    /** Temporal-gradient signature; 2× frame-rate twins of every (6k+2)-th
+      * asset, +8-luminance twins of every (6k+5)-th and 2× rescale twins of
+      * every 6k-th. Every transform cancels structurally in the signature
+      * ([[VideoCodec.vhashOf]]), so radius 0. */
+    val Video: Modality[String] = Modality[String](VideoCodec.encode, VideoCodec.vhashOf, Seq(
+      TwinKind("fps", 7000000L, _ % 6 == 2, VideoCodec.fpsBytes),
+      TwinKind("bright", 8000000L, _ % 6 == 5, (id, b) => VideoCodec.brightBytes(id, b, 8)),
+      TwinKind("scale", 9000000L, _ % 6 == 0, VideoCodec.scaleBytes)),
+      radius = 0)
+  }
+
+  /** Per-asset fingerprint over the real decode path, for the corpus
+    * originals plus the modality's planted twins: rows
+    * (doc_id, orig_id, kind, hash). Everything binary stays
     * partition-local: encode → transform → decode → hash in one
-    * mapPartitions; only (id, orig, kind, hash) rows ever shuffle. */
-  private def perceptualHashes(spark: SparkSession, dir: String): Dataset[PerceptualHash] = {
+    * mapPartitions; only the slim rows ever shuffle. */
+  private def perceptualHashes[H: TypeTag](spark: SparkSession, dir: String,
+      m: Modality[H]): DataFrame = {
     val spark0 = spark
     import spark0.implicits._
     Tables(spark, dir, "documents")
@@ -844,37 +905,77 @@ object MultimodalOps {
       .repartition(spark.sparkContext.defaultParallelism) // ids only; see mediaAssets
       .mapPartitions { it =>
         it.flatMap { id =>
-          val orig = MediaCodec.encode(id)
-          val base = PerceptualHash(id, id, "orig", MediaCodec.dhashOf(id, orig))
-          if (reencodeTwinIds(id))
-            Seq(base, PerceptualHash(id + 3000000L, id, "reencode",
-              MediaCodec.dhashOf(id, MediaCodec.transcodeJpeg(id, orig))))
-          else if (resizeTwinIds(id)) {
-            val w = MediaCodec.widthOf(id); val h = MediaCodec.heightOf(id)
-            Seq(base, PerceptualHash(id + 4000000L, id, "resize",
-              MediaCodec.dhashOf(id,
-                MediaCodec.resizeBytes(id, orig, w * 3 / 4, h * 3 / 4))))
-          } else Seq(base)
+          val orig = m.encode(id)
+          (id, id, "orig", m.hashOf(id, orig)) +: m.twins.filter(_.planted(id)).map(t =>
+            (id + t.idOffset, id, t.kind, m.hashOf(id, t.transform(id, orig))))
         }
       }
+      .toDF("doc_id", "orig_id", "kind", "hash")
   }
 
-  /** 8×8-bit band fan-out of a 64-bit perceptual hash — the shared
-    * candidate-generation primitive of the banded-Hamming family
-    * ([[imageDedup]], [[audioDedup]],
-    * [[graft.streaming.MediaDedupStream]]): `posexplode` to
+  /** 8×8-bit band fan-out of a 64-bit perceptual hash: `posexplode` to
     * (band, value) rows, 8 per hash. */
-  private[graft] def hashBands(hashCol: String) =
+  private def hashBands(hashCol: String) =
     posexplode(expr(
       s"transform(sequence(0, 7), b -> shiftright($hashCol, b * 8) & 255)"))
 
   /** One-bit multiprobe over an 8-bit band value: the exact value plus
-    * all 8 one-bit flips. With 8 bands this covers every hash within
-    * Hamming 15 of the probe by pigeonhole (≤ 15 flipped bits leave a
-    * band within one bit of exact). */
-  private[graft] def bandMultiprobe(bvCol: String) =
+    * all 8 one-bit flips. */
+  private def bandMultiprobe(bvCol: String) =
     explode(expr(
       s"concat(array($bvCol), transform(sequence(0, 7), j -> $bvCol ^ shiftleft(1L, j)))"))
+
+  /** The probe key of the banded layout: pk = band * 256 + value, 2048
+    * keys. */
+  private def bandKey = (col("band") * 256 + col("bv")).cast("int").as("pk")
+
+  /** The banded claim store schema: claims pre-exploded to their probe
+    * keys; `epoch` is the RETENTION stamp (caller-threaded monotone build
+    * epoch + batch id) the stores' retention sweeps consume. */
+  private[graft] def emptyBandedClaims(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
+  }
+
+  /** Claim rows (claim_id, fhash) pre-exploded to their 8 exact probe
+    * keys: (pk, claim_id, fhash) — the batch corpus side and every
+    * perceptual claim store's append. */
+  private[graft] def claimBands(claims: DataFrame): DataFrame =
+    claims.select(col("claim_id"), col("fhash"), hashBands("fhash").as(Seq("band", "bv")))
+      .select(bandKey, col("claim_id"), col("fhash"))
+
+  /** Probe rows (doc_id, h_t) fanned out to (doc_id, h_t, pk), the keys
+    * that reach every claim within Hamming `radius`. The banding is
+    * derived from the radius by pigeonhole over 8 bands: ≤ 7 flipped
+    * bits leave some band exact, so the 8 exact band values suffice;
+    * ≤ 15 leave some band within one bit, so each band also probes its
+    * 8 one-bit flips (72 keys per hash). Recall at the radius is
+    * structural, so the LSH is an implementation detail of an EXACT
+    * Hamming-radius join. Wider radii have no recall-complete 8-band
+    * probe and are rejected. */
+  private[graft] def probeBands(probes: DataFrame, radius: Int): DataFrame = {
+    require(radius >= 0 && radius <= 15,
+      s"an 8-band probe is recall-complete only up to Hamming radius 15 (got $radius)")
+    val exact = probes.select(col("doc_id"), col("h_t"), hashBands("h_t").as(Seq("band", "bv")))
+    (if (radius <= 7) exact
+      else exact.select(col("doc_id"), col("h_t"), col("band"), bandMultiprobe("bv").as("bv")))
+      .select(col("doc_id"), col("h_t"), bandKey)
+  }
+
+  /** Band join → pair dedup → Hamming verify: probe rows (doc_id, h_t,
+    * pk) from [[probeBands]] against claim rows (pk, claim_id, fhash),
+    * one (doc_id, claim_id) row per pair within `radius`. The native
+    * codegen'd [[graft.functions.HammingDistance]] verifies candidates. */
+  private[graft] def verifiedPairs(probes: DataFrame, claims: DataFrame,
+      radius: Int): DataFrame = {
+    import graft.functions.HammingDistance.hamming
+    probes
+      .join(claims.select("pk", "claim_id", "fhash"), Seq("pk"))
+      .select("doc_id", "claim_id", "h_t", "fhash")
+      .dropDuplicates("doc_id", "claim_id") // several probe keys agree per pair
+      .filter(hamming(col("h_t"), col("fhash")) <= radius)
+      .select("doc_id", "claim_id")
+  }
 
   /** HOT-KEY guard for the perceptual candidate joins — the containment
     * DF-cap discipline (DedupOps) / LSH maxBucket guard (SimilarityOps)
@@ -904,31 +1005,48 @@ object MultimodalOps {
       corpus.join(broadcast(hot), keys, "left_anti")
     }
 
-  /** Synthesize the asset for one (orig_id, kind) spec and hash it over
-    * the real decode path — the per-row codec step of the STREAMING
-    * perceptual gate ([[graft.streaming.MediaDedupStream]]); partition-
-    * local, binaries never leave the executor. */
-  private[graft] def dhashForKind(origId: Long, kind: String): Long = {
-    val orig = MediaCodec.encode(origId)
-    kind match {
-      case "orig" => MediaCodec.dhashOf(origId, orig)
-      case "reencode" =>
-        MediaCodec.dhashOf(origId, MediaCodec.transcodeJpeg(origId, orig))
-      case other => throw new IllegalArgumentException(s"unknown asset kind $other")
-    }
-  }
-
-  /** The audio twin of [[dhashForKind]]: synthesize, optionally apply
-    * the volume-gain transform, and recover the loudness-profile hash
-    * through the real RIFF decode path. */
-  private[graft] def ahashForKind(origId: Long, kind: String): Long = {
-    val orig = AudioCodec.encode(origId)
-    kind match {
-      case "orig" => AudioCodec.ahashOf(origId, orig)
-      case "gain" =>
-        AudioCodec.ahashOf(origId, AudioCodec.gainBytes(origId, orig, 2))
-      case other => throw new IllegalArgumentException(s"unknown asset kind $other")
-    }
+  /** PERCEPTUAL batch dedup of one modality — the ingest gate byte-exact
+    * dedup cannot provide: every planted twin must come back as a
+    * near-duplicate of its original. Incoming-vs-corpus (not corpus
+    * self-join) is the production shape: the twins probe the originals'
+    * index, and any multiprobe fan-out lands on the small incoming side —
+    * the corpus index stays 8 rows per asset. At 100 TB the corpus side
+    * is the precomputed hash store bucketed on its probe key, and
+    * `maxKeyFreq` ([[capHotKeys]]) bounds the worst key — degenerate
+    * hashes are dropped whole before the join.
+    *
+    * Output: one row per planted twin with `found` = its true original
+    * surfaced among its verified near-duplicates. The oracle replays the
+    * planting arithmetic and expects every `found` TRUE — a regression
+    * anywhere in codec, hash, banding, or verify flips rows red. */
+  private def perceptualDedup[H: TypeTag](spark: SparkSession, dir: String,
+      m: Modality[H], maxKeyFreq: Option[Long]): DataFrame = {
+    val hashes = perceptualHashes(spark, dir, m)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    hashes.count() // one fill job before the two join sides fan out
+    val corpus = hashes.filter(col("kind") === "orig")
+      .select(col("doc_id").as("claim_id"), col("hash").as("fhash"))
+    val twins = hashes.filter(col("kind") =!= "orig")
+    val pairs =
+      if (m.radius == 0)
+        twins.select(col("doc_id"), col("hash").as("fhash"))
+          .join(capHotKeys(corpus, Seq("fhash"), maxKeyFreq), Seq("fhash"))
+          .select("doc_id", "claim_id")
+          .dropDuplicates("doc_id", "claim_id")
+      else verifiedPairs(
+        probeBands(twins.select(col("doc_id"), col("hash").as("h_t")), m.radius),
+        capHotKeys(claimBands(corpus), Seq("pk"), maxKeyFreq), m.radius)
+    val out = twins
+      .select(col("doc_id").as("twin_id"), col("orig_id"), col("kind"))
+      .join(pairs.select(col("doc_id").as("twin_id"), col("claim_id").as("orig_id"),
+        lit(true).as("hit")), Seq("twin_id", "orig_id"), "left")
+      .select(col("twin_id"), col("orig_id"), col("kind"),
+        coalesce(col("hit"), lit(false)).as("found"))
+      .orderBy("twin_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count() // materialize the slim verdicts, then drop the hash cache
+    hashes.unpersist()
+    out
   }
 
   /** dHash of every PNG asset, decoded by the real codec — the oracle
@@ -937,105 +1055,18 @@ object MultimodalOps {
     * codec-recovered hash must equal the arithmetic bit for bit; JPEG
     * assets are gated via [[imageDedup]]'s recall instead). */
   def imageDHashDF(spark: SparkSession, dir: String): DataFrame =
-    perceptualHashes(spark, dir).toDF()
-      .filter(col("kind") === "orig" && col("docId") % 2 === 0)
-      .select(col("docId").as("doc_id"), col("dhash"))
+    perceptualHashes(spark, dir, Modality.Image)
+      .filter(col("kind") === "orig" && col("doc_id") % 2 === 0)
+      .select(col("doc_id"), col("hash").as("dhash"))
       .orderBy("doc_id")
 
-  /** PERCEPTUAL image dedup — the ingest gate byte-exact dedup cannot
-    * provide: planted re-encoded (PNG→JPEG) and downscaled twins must
-    * come back as near-duplicates of their originals. Candidate
-    * generation is Hamming-LSH with ONE-BIT MULTIPROBE: each 64-bit
-    * dHash splits into 8 bands of 8 bits; the corpus side stores its 8
-    * exact band values, the incoming (twin) side probes each band with
-    * its exact value plus all 8 one-bit flips — so recall at the ≤ 15
-    * verify radius is STRUCTURAL, not empirical: 15 flipped bits across
-    * 8 bands leave some band with ≤ 1 flip (pigeonhole), which the 9
-    * probes cover. (Measured worst case over the full asset period:
-    * resize twins reach Hamming 13, JPEG transcodes 0.) The native
-    * codegen'd [[graft.functions.HammingDistance]] verifies candidates.
-    * Incoming-vs-corpus (not corpus self-join) is the production shape:
-    * the new batch probes the existing index; multiprobe lands on the
-    * small incoming side — the corpus index stays 8 rows per asset. At
-    * 100 TB the corpus side is the precomputed hash store bucketed on
-    * (band, value), and `maxBandFreq` ([[capHotKeys]]) bounds the worst
-    * key — degenerate hashes (solid-color assets) are dropped whole
-    * before the join.
-    *
-    * Output: one row per planted twin with `found` = its true original
-    * surfaced among its verified near-duplicates. The oracle replays the
-    * planting arithmetic and expects every `found` TRUE — a regression
-    * anywhere in codec, hash, banding, or verify flips rows red. */
+  /** PERCEPTUAL image dedup ([[perceptualDedup]] over
+    * [[Modality.Image]]): planted re-encoded (PNG→JPEG) and downscaled
+    * twins must surface their originals through the one-bit-multiprobe
+    * banded Hamming join at radius 15. */
   def imageDedup(spark: SparkSession, dir: String,
-      maxBandFreq: Option[Long] = None): DataFrame = {
-    import graft.functions.HammingDistance.hamming
-    val hashes = perceptualHashes(spark, dir).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count() // one fill job before the two band sides fan out
-    val corpus = capHotKeys(hashes.filter(col("kind") === "orig")
-      .select(col("docId").as("cand_id"), col("dhash").as("dhash_c"),
-        hashBands("dhash").as(Seq("band", "bv")))
-      .select(col("cand_id"), col("dhash_c"), col("band"), col("bv")),
-      Seq("band", "bv"), maxBandFreq)
-    val twins = hashes.filter(col("kind") =!= "orig")
-    val probes = twins
-      .select(col("docId").as("twin_id"), col("dhash").as("dhash_t"),
-        hashBands("dhash").as(Seq("band", "bv0")))
-      .select(col("twin_id"), col("dhash_t"), col("band"),
-        bandMultiprobe("bv0").as("bv"))
-    val verified = probes
-      .join(corpus, Seq("band", "bv"))
-      .select("twin_id", "cand_id", "dhash_t", "dhash_c")
-      .dropDuplicates("twin_id", "cand_id") // many probes agree per pair
-      .filter(hamming(col("dhash_t"), col("dhash_c")) <= 15)
-    val hits = verified
-      .select(col("twin_id"), col("cand_id").as("orig_id"), lit(true).as("hit"))
-    val out = twins
-      .select(col("docId").as("twin_id"), col("origId").as("orig_id"), col("kind"))
-      .join(hits, Seq("twin_id", "orig_id"), "left")
-      .select(col("twin_id"), col("orig_id"), col("kind"),
-        coalesce(col("hit"), lit(false)).as("found"))
-      .orderBy("twin_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize the slim verdicts, then drop the hash cache
-    hashes.unpersist()
-    out
-  }
-
-  /** A perceptual audio fingerprint row: asset key, provenance, 64-bit
-    * loudness-profile hash. */
-  case class AudioHash(docId: Long, origId: Long, kind: String, ahash: Long)
-
-  /** Gain twins of every (6k+1)-th asset. */
-  private[graft] def gainTwinIds(id: Long): Boolean = id % 6 == 1
-  /** Lead-in-silence twins of every (6k+4)-th asset. */
-  private[graft] def padTwinIds(id: Long): Boolean = id % 6 == 4
-
-  /** Per-asset loudness-profile hash over the real RIFF decode path, for
-    * the corpus originals plus the planted twins (2× volume, 4-sample
-    * silence lead-in). Everything binary stays partition-local: encode →
-    * transform → decode → hash in one mapPartitions; only slim
-    * (id, orig, kind, hash) rows ever shuffle. */
-  private def audioPerceptualHashes(spark: SparkSession, dir: String): Dataset[AudioHash] = {
-    val spark0 = spark
-    import spark0.implicits._
-    Tables(spark, dir, "documents")
-      .select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism) // ids only; see mediaAssets
-      .mapPartitions { it =>
-        it.flatMap { id =>
-          val orig = AudioCodec.encode(id)
-          val base = AudioHash(id, id, "orig", AudioCodec.ahashOf(id, orig))
-          if (gainTwinIds(id))
-            Seq(base, AudioHash(id + 5000000L, id, "gain",
-              AudioCodec.ahashOf(id, AudioCodec.gainBytes(id, orig, 2))))
-          else if (padTwinIds(id))
-            Seq(base, AudioHash(id + 6000000L, id, "pad",
-              AudioCodec.ahashOf(id, AudioCodec.padBytes(id, orig, 4))))
-          else Seq(base)
-        }
-      }
-  }
+      maxBandFreq: Option[Long] = None): DataFrame =
+    perceptualDedup(spark, dir, Modality.Image, maxBandFreq)
 
   /** Loudness-profile hash of every audio asset, decoded by the real
     * RIFF chunk walker — the oracle replays the full magnitude-bucket
@@ -1043,97 +1074,18 @@ object MultimodalOps {
     * lossless, so the codec-recovered hash must equal the arithmetic bit
     * for bit — the audio twin of [[imageDHashDF]]'s PNG gate). */
   def audioFingerprintDF(spark: SparkSession, dir: String): DataFrame =
-    audioPerceptualHashes(spark, dir).toDF()
+    perceptualHashes(spark, dir, Modality.Audio)
       .filter(col("kind") === "orig")
-      .select(col("docId").as("doc_id"), col("ahash"))
+      .select(col("doc_id"), col("hash").as("ahash"))
       .orderBy("doc_id")
 
-  /** PERCEPTUAL audio dedup — [[imageDedup]]'s discipline on the audio
-    * column: planted volume-scaled and silence-padded twins (both
-    * byte-level novel) must surface their original through a banded
-    * Hamming join on the loudness-profile hash. The hash's transform
-    * bounds are STRUCTURAL ([[AudioCodec.ahashOf]]: gain → Hamming 0,
-    * pad → ≤ 1), so plain 8×8-bit banding suffices — ≤ 7 flipped bits
-    * leave some band exact by pigeonhole; no multiprobe needed — with
-    * the codegen'd [[graft.functions.HammingDistance]] verifying at
-    * radius 7. Incoming-vs-corpus join shape as in [[imageDedup]]; at
-    * 100 TB the corpus side is the precomputed fingerprint store
-    * bucketed on (band, value) with the `maxBandFreq` hot-key cap
-    * ([[capHotKeys]]). */
+  /** PERCEPTUAL audio dedup ([[perceptualDedup]] over
+    * [[Modality.Audio]]): planted volume-scaled and silence-padded twins
+    * (both byte-level novel) must surface their original through the
+    * exact-band Hamming join at radius 7. */
   def audioDedup(spark: SparkSession, dir: String,
-      maxBandFreq: Option[Long] = None): DataFrame = {
-    import graft.functions.HammingDistance.hamming
-    val hashes = audioPerceptualHashes(spark, dir).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count() // one fill job before the two band sides fan out
-    val corpus = capHotKeys(hashes.filter(col("kind") === "orig")
-      .select(col("docId").as("cand_id"), col("ahash").as("ahash_c"),
-        hashBands("ahash").as(Seq("band", "bv")))
-      .select(col("cand_id"), col("ahash_c"), col("band"), col("bv")),
-      Seq("band", "bv"), maxBandFreq)
-    val twins = hashes.filter(col("kind") =!= "orig")
-    val probes = twins
-      .select(col("docId").as("twin_id"), col("ahash").as("ahash_t"),
-        hashBands("ahash").as(Seq("band", "bv")))
-    val verified = probes
-      .join(corpus, Seq("band", "bv"))
-      .select("twin_id", "cand_id", "ahash_t", "ahash_c")
-      .dropDuplicates("twin_id", "cand_id") // several bands agree per pair
-      .filter(hamming(col("ahash_t"), col("ahash_c")) <= 7)
-    val hits = verified
-      .select(col("twin_id"), col("cand_id").as("orig_id"), lit(true).as("hit"))
-    val out = twins
-      .select(col("docId").as("twin_id"), col("origId").as("orig_id"), col("kind"))
-      .join(hits, Seq("twin_id", "orig_id"), "left")
-      .select(col("twin_id"), col("orig_id"), col("kind"),
-        coalesce(col("hit"), lit(false)).as("found"))
-      .orderBy("twin_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize the slim verdicts, then drop the hash cache
-    hashes.unpersist()
-    out
-  }
-
-  /** A perceptual video fingerprint row: asset key, provenance,
-    * temporal-gradient signature ([[VideoCodec.vhashOf]]). */
-  case class VideoHash(docId: Long, origId: Long, kind: String, vhash: String)
-
-  /** 2×-frame-rate twins of every (6k+2)-th asset. */
-  private[graft] def fpsTwinIds(id: Long): Boolean = id % 6 == 2
-  /** +8-luminance twins of every (6k+5)-th asset. */
-  private[graft] def brightTwinIds(id: Long): Boolean = id % 6 == 5
-  /** 2×-rescale twins of every 6k-th asset. */
-  private[graft] def scaleTwinIds(id: Long): Boolean = id % 6 == 0
-
-  /** Per-asset temporal-gradient signature over the real GIF decode
-    * path, for the corpus originals plus the planted twins (2× frame
-    * rate, +8 luminance, 2× rescale). Everything binary stays
-    * partition-local: encode → transform → decode → hash in one
-    * mapPartitions; only slim (id, orig, kind, signature) rows ever
-    * shuffle. */
-  private def videoPerceptualHashes(spark: SparkSession, dir: String): Dataset[VideoHash] = {
-    val spark0 = spark
-    import spark0.implicits._
-    Tables(spark, dir, "documents")
-      .select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism) // ids only; see mediaAssets
-      .mapPartitions { it =>
-        it.flatMap { id =>
-          val orig = VideoCodec.encode(id)
-          val base = VideoHash(id, id, "orig", VideoCodec.vhashOf(id, orig))
-          if (fpsTwinIds(id))
-            Seq(base, VideoHash(id + 7000000L, id, "fps",
-              VideoCodec.vhashOf(id, VideoCodec.fpsBytes(id, orig))))
-          else if (brightTwinIds(id))
-            Seq(base, VideoHash(id + 8000000L, id, "bright",
-              VideoCodec.vhashOf(id, VideoCodec.brightBytes(id, orig, 8))))
-          else if (scaleTwinIds(id))
-            Seq(base, VideoHash(id + 9000000L, id, "scale",
-              VideoCodec.vhashOf(id, VideoCodec.scaleBytes(id, orig))))
-          else Seq(base)
-        }
-      }
-  }
+      maxBandFreq: Option[Long] = None): DataFrame =
+    perceptualDedup(spark, dir, Modality.Audio, maxBandFreq)
 
   /** Temporal-gradient signature of every video asset, decoded by the
     * real GIF sequence reader — the oracle replays the per-frame
@@ -1143,49 +1095,21 @@ object MultimodalOps {
     * the video member of the [[imageDHashDF]] / [[audioFingerprintDF]]
     * gate family). */
   def videoFingerprintDF(spark: SparkSession, dir: String): DataFrame =
-    videoPerceptualHashes(spark, dir).toDF()
+    perceptualHashes(spark, dir, Modality.Video)
       .filter(col("kind") === "orig")
-      .select(col("docId").as("doc_id"), col("vhash"))
+      .select(col("doc_id"), col("hash").as("vhash"))
       .orderBy("doc_id")
 
-  /** PERCEPTUAL video dedup — the modality triple's third leg: planted
-    * frame-rate-doubled, brightness-lifted, and rescaled twins (all
-    * byte-level novel containers) must surface their original. Because
-    * every planted transform cancels STRUCTURALLY in the signature
-    * ([[VideoCodec.vhashOf]]), candidate generation is an exact
-    * equi-join on the signature — the degenerate (radius-0) case of the
-    * banded-Hamming discipline [[imageDedup]]/[[audioDedup]] use, with
-    * the whole 128-bit signature as the single band. Incoming-vs-corpus
-    * join shape as there; at 100 TB the corpus side is the precomputed
-    * signature store bucketed on the signature, and the `maxSigFreq`
-    * hot-key cap ([[capHotKeys]]) bounds degenerate keys — low-entropy
-    * clips (e.g. near-static footage) collapse to short delta chains
-    * that many assets share. */
+  /** PERCEPTUAL video dedup ([[perceptualDedup]] over
+    * [[Modality.Video]]): planted frame-rate-doubled, brightness-lifted,
+    * and rescaled twins (all byte-level novel containers) must surface
+    * their original through an exact equi-join on the signature. At
+    * 100 TB the `maxSigFreq` hot-key cap bounds degenerate keys —
+    * low-entropy clips (e.g. near-static footage) collapse to short delta
+    * chains that many assets share. */
   def videoDedup(spark: SparkSession, dir: String,
-      maxSigFreq: Option[Long] = None): DataFrame = {
-    val hashes = videoPerceptualHashes(spark, dir).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count() // one fill job before the two join sides fan out
-    val corpus = capHotKeys(hashes.filter(col("kind") === "orig")
-      .select(col("docId").as("cand_id"), col("vhash")),
-      Seq("vhash"), maxSigFreq)
-    val twins = hashes.filter(col("kind") =!= "orig")
-    val hits = twins
-      .select(col("docId").as("twin_id"), col("vhash"))
-      .join(corpus, Seq("vhash"))
-      .select(col("twin_id"), col("cand_id").as("orig_id"), lit(true).as("hit"))
-      .dropDuplicates("twin_id", "orig_id")
-    val out = twins
-      .select(col("docId").as("twin_id"), col("origId").as("orig_id"), col("kind"))
-      .join(hits, Seq("twin_id", "orig_id"), "left")
-      .select(col("twin_id"), col("orig_id"), col("kind"),
-        coalesce(col("hit"), lit(false)).as("found"))
-      .orderBy("twin_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize the slim verdicts, then drop the hash cache
-    hashes.unpersist()
-    out
-  }
+      maxSigFreq: Option[Long] = None): DataFrame =
+    perceptualDedup(spark, dir, Modality.Video, maxSigFreq)
 
   /** CROSS-MODAL curation funnel — [[mediaCuration]]'s codec-verified
     * verdicts composed INTO the text curation funnel

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
-import graft.operators.{DedupOps, TextOps}
+import graft.operators.{DedupOps, MultimodalOps, TextOps}
 import graft.sources.Tables
 import scala.jdk.CollectionConverters._
 
@@ -205,14 +205,6 @@ object CurationStream {
     * positions, so a read side that needs crash immunity drops exact
     * duplicates — positions stay dense and immutable under every
     * single-crash schedule. */
-  /** Media claim rows for the streaming cross-modal gate — the
-    * [[MediaDedupStream]] pre-exploded probe-key layout on the audio
-    * loudness hash, epoch-stamped like every production claim store. */
-  private def emptyMediaClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
-  }
-
   /** Video claim rows — the temporal-gradient signature is radius-0
     * (planted transforms cancel STRUCTURALLY, `VideoCodec.vhashOf`), so
     * the probe is an exact equi-join; pk is a stable hash of the
@@ -235,7 +227,7 @@ object CurationStream {
     textClaimStore(s"${outDir}_fps")
       .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac),
     ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyMediaClaims(spark), minEpoch, maxDropFrac),
+      .retentionSweep(spark, MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac),
     ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk"))
       .retentionSweep(spark, emptyVideoClaims(spark), minEpoch, maxDropFrac))
 
@@ -265,7 +257,7 @@ object CurationStream {
       claimAction(textClaimStore(s"${outDir}_fps"),
         emptyClaims(spark), minEpoch, "epoch"),
       claimAction(ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk")),
-        emptyMediaClaims(spark), minEpoch, "epoch"),
+        MultimodalOps.emptyBandedClaims(spark), minEpoch, "epoch"),
       claimAction(ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk")),
         emptyVideoClaims(spark), minEpoch, "epoch"),
       claimAction(funnelStore(outDir),
@@ -415,11 +407,8 @@ object CurationStream {
         // dominates — overlapping them hides the text pass behind the
         // decodes. The probe + claim sides reuse the caches.
         val probesOf = media.map { m =>
-          val probes = m
-            .select(col("doc_id"), col("ahash").as("h_t"),
-              graft.operators.MultimodalOps.hashBands("ahash").as(Seq("band", "bv")))
-            .withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
-            .select("doc_id", "h_t", "pk")
+          val probes = MultimodalOps.probeBands(
+            m.select(col("doc_id"), col("ahash").as("h_t")), MultimodalOps.Modality.Audio.radius)
           val vProbes = m.select(col("doc_id"), col("vhash"))
             .withColumn("pk", vhashPk(col("vhash")))
           (probes, vProbes)
@@ -437,14 +426,10 @@ object CurationStream {
             .collect().map(_.getInt(0)).toSeq // over the warm m cache
         }})
         val mediaVerdict: Option[DataFrame] = media.map { m =>
-          import graft.functions.HammingDistance.hamming
           val (probes, vProbes) = probesOf.get
-          val matches = probes
-            .join(mediaStore.readPruned(spark, emptyMediaClaims(spark), touchedA)
-              .select(col("pk"), col("claim_id"), col("fhash").as("h_c")), Seq("pk"))
-            .select("doc_id", "claim_id", "h_t", "h_c")
-            .dropDuplicates("doc_id", "claim_id")
-            .filter(hamming(col("h_t"), col("h_c")) <= 7)
+          val matches = MultimodalOps.verifiedPairs(probes,
+            mediaStore.readPruned(spark, MultimodalOps.emptyBandedClaims(spark), touchedA),
+            MultimodalOps.Modality.Audio.radius)
             .groupBy("doc_id").agg(count(lit(1)).as("_mm"))
           // VIDEO probe — the third modality: the temporal-gradient
           // signature is radius-0 (transforms cancel structurally), so
@@ -723,12 +708,9 @@ object CurationStream {
               // independent of the text verdicts, the MediaDedupStream
               // claim semantics (novelty is against earlier batches only)
               mediaVerdict.toSeq.flatMap { mv => Seq(
-                () => mediaStore.appendDelta(mv.filter(!col("media_dup"))
-                  .select(col("doc_id").as("claim_id"), col("ahash").as("fhash"))
-                  .select(col("claim_id"), col("fhash"),
-                    graft.operators.MultimodalOps.hashBands("fhash").as(Seq("band", "bv")))
-                  .withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
-                  .select("pk", "claim_id", "fhash")
+                () => mediaStore.appendDelta(MultimodalOps.claimBands(
+                  mv.filter(!col("media_dup"))
+                    .select(col("doc_id").as("claim_id"), col("ahash").as("fhash")))
                   .withColumn("epoch", epoch)),
                 // every perceptually NOVEL video asset claims its signature
                 () => videoStore.appendDelta(mv.filter(!col("video_dup"))
@@ -741,7 +723,7 @@ object CurationStream {
               () => { textStore.maybeCompact(spark, emptyClaims(spark)); () },
               () => { funnelStore(outDir).maybeCompact(spark, emptyFunnel(spark)); () }) ++
               (if (!mediaGate) Seq.empty else Seq(
-                () => { mediaStore.maybeCompact(spark, emptyMediaClaims(spark)); () },
+                () => { mediaStore.maybeCompact(spark, MultimodalOps.emptyBandedClaims(spark)); () },
                 () => { videoStore.maybeCompact(spark, emptyVideoClaims(spark)); () })))
           } finally verdict.unpersist()
         } finally {

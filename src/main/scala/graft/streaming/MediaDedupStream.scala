@@ -13,17 +13,17 @@ import graft.sources.Tables
   * [[CurationStream]]'s exact-md5 claim store: micro-batches of asset
   * specs arrive, each asset is synthesized + decoded + dHashed
   * partition-locally (binaries never shuffle), the hash probes the
-  * ACCRETING fingerprint store with the one-bit-multiprobe banded
-  * Hamming join of `MultimodalOps.imageDedup`, and every novel asset
+  * ACCRETING fingerprint store with the banded Hamming join of
+  * `MultimodalOps.verifiedPairs`, and every novel asset
   * claims its fingerprint before the checkpoint commits — so a
   * re-encoded duplicate of anything the stream ever admitted is
   * rejected, across micro-batches AND across restarts.
   *
-  * The banding is recall-complete at the verify radius by pigeonhole
-  * (≤ 15 flipped bits across 8 bands leave a band within one bit of
-  * exact, which the 9 probes cover), so the LSH is an implementation
-  * detail of an EXACT Hamming-radius join — which is what the DuckDB
-  * oracle replays, brute-force pairwise with `bit_count(xor(..))`.
+  * The banding is derived from the modality's verify radius and is
+  * recall-complete there by pigeonhole (`MultimodalOps.probeBands`), so
+  * the LSH is an implementation detail of an EXACT Hamming-radius join —
+  * which is what the DuckDB oracle replays, brute-force pairwise with
+  * `bit_count(xor(..))`.
   *
   * Intra-batch novelty is deliberately NOT adjudicated here: two novel
   * near-duplicates arriving in ONE batch both admit (the batch dedup
@@ -57,14 +57,6 @@ import graft.sources.Tables
   * is that shared read contract. */
 object MediaDedupStream {
 
-  /** Claim rows pre-exploded to probe keys: pk = band * 256 + value;
-    * `epoch` is the RETENTION stamp (caller-threaded monotone build
-    * epoch + batch id) consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
-  }
-
   /** RETENTION for the perceptual claim store — the
     * [[ClaimStore.retentionSweep]] discipline wired into the gate:
     * claims older than `minEpoch` fold away under the drop-fraction
@@ -74,7 +66,7 @@ object MediaDedupStream {
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Long =
     ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac)
+      .retentionSweep(spark, MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac)
 
   /** The perceptual claim store as a [[Maintenance.Action]] — see
     * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
@@ -83,26 +75,20 @@ object MediaDedupStream {
     Maintenance.Action(s"${outDir}_fps", "retention+compact", () =>
       Maintenance.sweepAndCompact(spark,
         ClaimStore(s"${outDir}_fps", partitionCol = Some("pk")),
-        emptyClaims(spark), minEpoch, maxDropFrac)))
+        MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac)))
 
-  private def withPk(df: DataFrame): DataFrame =
-    df.withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
-
-  /** Per-batch gate: hash → multiprobe banded candidate join against
-    * the pruned claim store → radius verify → verdict append → claim
-    * append. `hashForKind` is the modality: the image dHash by default,
-    * the audio loudness hash for [[audioDedupStreamQuery]] — the gate
-    * itself is hash-agnostic (any 64-bit perceptual fingerprint whose
-    * near-dup radius fits the 8-band multiprobe pigeonhole bound). */
+  /** Per-batch gate: hash → banded candidate join against the pruned
+    * claim store → radius verify → verdict append → claim append.
+    * `modality` names the 64-bit perceptual hash, its per-kind twin
+    * transforms and its verify radius: the image dHash by default, the
+    * audio loudness hash for [[audioDedupStreamQuery]]. */
   def run(
       incoming: DataFrame,
       outDir: String,
       checkpoint: String,
-      radius: Int = 15,
-      hashForKind: (Long, String) => Long = MultimodalOps.dhashForKind,
+      modality: MultimodalOps.Modality[Long] = MultimodalOps.Modality.Image,
       maxBandFreq: Option[Long] = None,
       epochBase: Long = 0L): StreamingQuery = {
-    import graft.functions.HammingDistance.hamming
     val spark = incoming.sparkSession
     val store = ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
     incoming.writeStream
@@ -121,17 +107,13 @@ object MediaDedupStream {
           .repartition(spark.sparkContext.defaultParallelism)
           .as[(Long, Long, String)]
           .mapPartitions(_.map { case (d, o, k) =>
-            (d, o, k, hashForKind(o, k))
+            (d, o, k, modality.hashForKind(o, k))
           })
-          .toDF("doc_id", "orig_id", "kind", "dhash")
+          .toDF("doc_id", "orig_id", "kind", "fhash")
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val probes = withPk(hashed
-            .select(col("doc_id"), col("dhash").as("dhash_t"),
-              MultimodalOps.hashBands("dhash").as(Seq("band", "bv0")))
-            .select(col("doc_id"), col("dhash_t"), col("band"),
-              MultimodalOps.bandMultiprobe("bv0").as("bv")))
-            .select("doc_id", "dhash_t", "pk")
+          val probes = MultimodalOps.probeBands(
+            hashed.select(col("doc_id"), col("fhash").as("h_t")), modality.radius)
           // the touched probe-key set is bounded by the key space (2048)
           // whatever the batch size — a tiny driver collect that lets the
           // store read partition-prune to the keys this batch can hit.
@@ -142,14 +124,9 @@ object MediaDedupStream {
           // hot-key guard: per-pk claim counts are exact on the pruned
           // read (pruning keeps every row of a touched key)
           val corpus = MultimodalOps.capHotKeys(
-            store.readPruned(spark, emptyClaims(spark), touched),
+            store.readPruned(spark, MultimodalOps.emptyBandedClaims(spark), touched),
             Seq("pk"), maxBandFreq)
-          val matches = probes
-            .join(corpus.select(col("pk"), col("claim_id"),
-              col("fhash").as("dhash_c")), Seq("pk"))
-            .select("doc_id", "claim_id", "dhash_t", "dhash_c")
-            .dropDuplicates("doc_id", "claim_id") // many probes agree per pair
-            .filter(hamming(col("dhash_t"), col("dhash_c")) <= radius)
+          val matches = MultimodalOps.verifiedPairs(probes, corpus, modality.radius)
             .groupBy("doc_id")
             .agg(count(lit(1)).as("n_matches"), min(col("claim_id")).as("min_match"))
           val verdict = hashed
@@ -158,11 +135,11 @@ object MediaDedupStream {
               col("n_matches").isNull.as("admitted"),
               coalesce(col("n_matches"), lit(0L)).as("n_matches"),
               coalesce(col("min_match"), lit(-1L)).as("min_match"),
-              col("dhash"))
+              col("fhash"))
             .persist(StorageLevel.MEMORY_AND_DISK)
           verdict.count()
           try {
-            verdict.drop("dhash")
+            verdict.drop("fhash")
               .write.mode(SaveMode.Append).parquet(outDir)
             // novel assets claim their fingerprint BEFORE the checkpoint
             // commits — pre-exploded to the probe-key layout; the shared
@@ -172,12 +149,9 @@ object MediaDedupStream {
             // the base threaded by the caller as a monotone build
             // number — raw batch ids would alias across runs and let a
             // sweep age out fresh claims
-            store.append(spark, withPk(verdict.filter(col("admitted"))
-              .select(col("doc_id").as("claim_id"), col("dhash").as("fhash"))
-              .select(col("claim_id"), col("fhash"),
-                MultimodalOps.hashBands("fhash").as(Seq("band", "bv"))))
-              .withColumn("epoch", lit(epochBase + batchId))
-              .select("pk", "claim_id", "fhash", "epoch"))
+            store.append(spark, MultimodalOps.claimBands(verdict.filter(col("admitted"))
+              .select(col("doc_id").as("claim_id"), col("fhash")))
+              .withColumn("epoch", lit(epochBase + batchId)))
           } finally verdict.unpersist()
         } finally hashed.unpersist()
       }
@@ -269,8 +243,7 @@ object MediaDedupStream {
     val src = spark.readStream
       .schema(spark.read.parquet(in).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    run(src, out, ckpt, radius = 7,
-      hashForKind = MultimodalOps.ahashForKind).awaitTermination()
+    run(src, out, ckpt, MultimodalOps.Modality.Audio).awaitTermination()
     resolveVerdicts(spark, out)
   }
 
@@ -307,8 +280,8 @@ object MediaDedupStream {
     def src(path: String) = spark.readStream
       .schema(spark.read.parquet(path).schema)
       .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), out, root.resolve("ckpt").toString, radius = 7,
-      hashForKind = MultimodalOps.ahashForKind).awaitTermination()
+    run(src(in), out, root.resolve("ckpt").toString,
+      MultimodalOps.Modality.Audio).awaitTermination()
     // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
     // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
     // cohort, and at larger corpora batch 1 admits few novel claims
@@ -322,9 +295,8 @@ object MediaDedupStream {
         .select((col("doc_id") + 7000000L).as("doc_id"),
           col("doc_id").as("orig_id"), lit("gain").as("kind")))
       .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-    run(src(in2), out, root.resolve("ckpt2").toString, radius = 7,
-      hashForKind = MultimodalOps.ahashForKind,
-      epochBase = 2L).awaitTermination()
+    run(src(in2), out, root.resolve("ckpt2").toString,
+      MultimodalOps.Modality.Audio, epochBase = 2L).awaitTermination()
     resolveVerdicts(spark, out)
   }
 }

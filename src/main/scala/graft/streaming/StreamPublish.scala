@@ -120,10 +120,6 @@ object StreamPublish {
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 
-  /** Best-effort recursive delete for the harness temp staging dirs. */
-  private def deleteRecursively(path: java.nio.file.Path): Unit =
-    graft.sources.TmpStores.deleteRecursively(path)
-
   /** One micro-batch publish step (exposed for specs): LWW → bucket the
     * incoming keys → MERGE against ONLY the touched buckets' prior rows →
     * stamp retention → write the touched buckets under a fresh gen dir →
@@ -314,7 +310,7 @@ object StreamPublish {
     // reuse the same paths instead of leaking an events-table-sized copy
     // per invocation; the pid suffix isolates concurrent graft JVMs
     val root = graft.sources.TmpStores.pidScopedRoot("graft-spq")
-    deleteRecursively(root)
+    graft.sources.TmpStores.deleteRecursively(root)
     Files.createDirectories(root)
     val in = root.resolve("in").toString
     val base = root.resolve("out").toString

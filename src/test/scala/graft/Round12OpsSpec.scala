@@ -423,10 +423,38 @@ class Round12OpsSpec extends AnyFunSuite {
     // contract: capped and uncapped verdicts coincide on the planted
     // (degenerate-free) fixture
     val n = graft.sources.Tables(spark, dir, "documents").count()
-    val uncapped = MultimodalOps.videoDedup(spark, dir).collect()
-      .map(_.toString).sorted
-    val capped = MultimodalOps.videoDedup(spark, dir, Some(n)).collect()
-      .map(_.toString).sorted
-    assert(capped.sameElements(uncapped) && uncapped.nonEmpty)
+    Seq[(String, Option[Long] => DataFrame)](
+      "image" -> (MultimodalOps.imageDedup(spark, dir, _)),
+      "audio" -> (MultimodalOps.audioDedup(spark, dir, _)),
+      "video" -> (MultimodalOps.videoDedup(spark, dir, _))).foreach { case (name, dedup) =>
+      val uncapped = dedup(None).collect().map(_.toString).sorted
+      val capped = dedup(Some(n)).collect().map(_.toString).sorted
+      assert(capped.sameElements(uncapped) && uncapped.nonEmpty, name)
+    }
+  }
+
+  test("banded Hamming kernel derives its banding from the verify radius") {
+    val spark0 = spark
+    import spark0.implicits._
+    val base = 0x0123456789abcdefL
+    def flip(bits: Int*): Long = bits.foldLeft(base)((h, b) => h ^ (1L << b))
+    // 7 flips in distinct bands leave band 7 exact; one flip in EVERY band
+    // (Hamming 8) and two flips in seven bands plus one (Hamming 15)
+    // share no exact band with the claim
+    val h7 = flip(0, 8, 16, 24, 32, 40, 48)
+    val h8 = flip(0, 8, 16, 24, 32, 40, 48, 56)
+    val h15 = flip(0, 1, 8, 9, 16, 17, 24, 25, 32, 33, 40, 41, 48, 49, 56)
+    val claims = MultimodalOps.claimBands(Seq((100L, base)).toDF("claim_id", "fhash"))
+    val probes = Seq((7L, h7), (8L, h8), (15L, h15)).toDF("doc_id", "h_t")
+    def found(radius: Int): Set[Long] =
+      MultimodalOps.verifiedPairs(MultimodalOps.probeBands(probes, radius), claims, radius)
+        .select("doc_id").as[Long].collect().toSet
+    assert(found(7) == Set(7L), "radius 7: Hamming 7 matches, Hamming 8 does not")
+    assert(found(15) == Set(7L, 8L, 15L),
+      "radius 15: pairs sharing no exact band are found through the one-bit probes")
+    // exact bands up to radius 7 (8 keys per hash), one-bit multiprobe above
+    assert(MultimodalOps.probeBands(probes, 7).count() == 3 * 8)
+    assert(MultimodalOps.probeBands(probes, 15).count() == 3 * 72)
+    intercept[IllegalArgumentException](MultimodalOps.probeBands(probes, 16))
   }
 }
