@@ -13,6 +13,10 @@ object LocalSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.sources.Tables.nanosAsLongConf, "true")
       .config("spark.ui.enabled", "false")
+      // local files are created, chmod-ed and renamed in-process, not by
+      // forking chmod/readlink per call (graft.sources.ForkFreeLocalFs)
+      .config(graft.sources.ForkFreeLocalFs.hadoopConf
+        .map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
       // AQE sizes post-shuffle partitions by bytes; at bench/verify SF
       // the shuffles are byte-small but compute-heavy, so keep it from
       // coalescing below real parallelism

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7 (repository root).
   *
   * Every entry in `queries` is one operator from SURVEY §2 re-expressed as a
   * declarative Spark program; `oracleSql` carries the DuckDB-equivalent SQL

@@ -893,7 +893,8 @@ object MultimodalOps {
 
   /** Per-asset fingerprint over the real decode path, for the corpus
     * originals plus the modality's planted twins: rows
-    * (doc_id, orig_id, kind, hash). Everything binary stays
+    * (doc_id, orig_id, kind, hash); a `twins = Nil` copy of the modality
+    * hashes the originals alone. Everything binary stays
     * partition-local: encode → transform → decode → hash in one
     * mapPartitions; only the slim rows ever shuffle. */
   private def perceptualHashes[H: TypeTag](spark: SparkSession, dir: String,
@@ -1055,8 +1056,8 @@ object MultimodalOps {
     * codec-recovered hash must equal the arithmetic bit for bit; JPEG
     * assets are gated via [[imageDedup]]'s recall instead). */
   def imageDHashDF(spark: SparkSession, dir: String): DataFrame =
-    perceptualHashes(spark, dir, Modality.Image)
-      .filter(col("kind") === "orig" && col("doc_id") % 2 === 0)
+    perceptualHashes(spark, dir, Modality.Image.copy(twins = Nil))
+      .filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("hash").as("dhash"))
       .orderBy("doc_id")
 
@@ -1074,8 +1075,7 @@ object MultimodalOps {
     * lossless, so the codec-recovered hash must equal the arithmetic bit
     * for bit — the audio twin of [[imageDHashDF]]'s PNG gate). */
   def audioFingerprintDF(spark: SparkSession, dir: String): DataFrame =
-    perceptualHashes(spark, dir, Modality.Audio)
-      .filter(col("kind") === "orig")
+    perceptualHashes(spark, dir, Modality.Audio.copy(twins = Nil))
       .select(col("doc_id"), col("hash").as("ahash"))
       .orderBy("doc_id")
 
@@ -1095,8 +1095,7 @@ object MultimodalOps {
     * the video member of the [[imageDHashDF]] / [[audioFingerprintDF]]
     * gate family). */
   def videoFingerprintDF(spark: SparkSession, dir: String): DataFrame =
-    perceptualHashes(spark, dir, Modality.Video)
-      .filter(col("kind") === "orig")
+    perceptualHashes(spark, dir, Modality.Video.copy(twins = Nil))
       .select(col("doc_id"), col("hash").as("vhash"))
       .orderBy("doc_id")
 

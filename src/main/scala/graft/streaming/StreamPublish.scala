@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Publish
 import graft.sources.Hfs
 import java.nio.file.Files
@@ -108,17 +109,23 @@ object StreamPublish {
       .find(g => !taken.contains(g)).get
   }
 
+  /** The snapshot's row schema: string key and attributes, then the
+    * publish stamps. */
+  private def snapshotSchema(keyCol: String, attrCols: Seq[String]): StructType =
+    StructType((keyCol +: attrCols :+ "published_tag").map(StructField(_, StringType)) :+
+      StructField("publisher_last_updated_epoch_ms", LongType))
+
   private def emptySnapshot(spark: SparkSession,
-      keyCol: String, attrCols: Seq[String]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      (keyCol +: attrCols).map(c =>
-        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)) :+
-        org.apache.spark.sql.types.StructField("published_tag",
-          org.apache.spark.sql.types.StringType) :+
-        org.apache.spark.sql.types.StructField("publisher_last_updated_epoch_ms",
-          org.apache.spark.sql.types.LongType))
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-  }
+      keyCol: String, attrCols: Seq[String]): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      snapshotSchema(keyCol, attrCols))
+
+  /** The given bucket dirs (baseDir-relative) as one scan. With the
+    * schema known, the read runs no footer-inference job. */
+  private def readBuckets(spark: SparkSession, baseDir: String,
+      rels: Iterable[String], schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(rels.map(rel => s"$baseDir/$rel").toSeq: _*)
 
   /** One micro-batch publish step (exposed for specs): LWW → bucket the
     * incoming keys → MERGE against ONLY the touched buckets' prior rows →
@@ -159,11 +166,10 @@ object StreamPublish {
     val touched = incoming.select("_bucket").distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) { incoming.unpersist(); return }
-    val priorPaths = touched.flatMap(committedBuckets.get)
-      .map(rel => s"$baseDir/$rel")
+    val priorRels = touched.flatMap(committedBuckets.get)
     val prior =
-      if (priorPaths.isEmpty) emptySnapshot(spark, keyCol, attrCols)
-      else spark.read.parquet(priorPaths.toIndexedSeq: _*)
+      if (priorRels.isEmpty) emptySnapshot(spark, keyCol, attrCols)
+      else readBuckets(spark, baseDir, priorRels, Some(snapshotSchema(keyCol, attrCols)))
     val tag = s"$tagPrefix$batchId"
     val merged = Publish.mergeUpsert(prior, incoming.drop("_bucket"),
       keyCol, attrCols, tag, epochMs = batchId)
@@ -233,8 +239,7 @@ object StreamPublish {
     // recomputed with the writer's own deterministic hash — a per-bucket
     // read + union chain would degenerate at the thousands-of-buckets
     // layout a 100 TB snapshot uses
-    spark.read
-      .parquet(m.buckets.values.map(rel => s"$baseDir/$rel").toSeq: _*)
+    readBuckets(spark, baseDir, m.buckets.values, None)
       .withColumn("bucket", bucketOf(keyCol, m.nBuckets))
       .repartition(col("bucket"))
       .write.partitionBy("bucket")
@@ -271,11 +276,15 @@ object StreamPublish {
     * scan. Bucket dirs are independent parquet roots, so a reader needing
     * only some keys can prune to their buckets — the point of the
     * layout. */
-  def readCurrent(spark: SparkSession, baseDir: String): DataFrame = {
+  def readCurrent(spark: SparkSession, baseDir: String): DataFrame =
+    readCurrent(spark, baseDir, None)
+
+  private def readCurrent(spark: SparkSession, baseDir: String,
+      schema: Option[StructType]): DataFrame = {
     val m = readManifest(baseDir)
       .getOrElse(throw new IllegalStateException(s"no CURRENT manifest in $baseDir"))
     require(m.buckets.nonEmpty, s"empty snapshot manifest in $baseDir")
-    spark.read.parquet(m.buckets.values.map(rel => s"$baseDir/$rel").toSeq: _*)
+    readBuckets(spark, baseDir, m.buckets.values, schema)
   }
 
   /** Point-lookup read: resolve the requested keys' buckets with the
@@ -293,9 +302,9 @@ object StreamPublish {
     val wanted = keys.toDF(keyCol)
       .select(bucketOf(keyCol, m.nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val paths = m.buckets.collect { case (b, rel) if wanted(b) => s"$baseDir/$rel" }.toSeq
-    if (paths.isEmpty) readCurrent(spark, baseDir).filter(lit(false))
-    else spark.read.parquet(paths: _*).filter(col(keyCol).isin(keys: _*))
+    val rels = m.buckets.collect { case (b, rel) if wanted(b) => rel }
+    if (rels.isEmpty) readCurrent(spark, baseDir).filter(lit(false))
+    else readBuckets(spark, baseDir, rels, None).filter(col(keyCol).isin(keys: _*))
   }
 
   /** Oracle-gated query: stage the events table as two DISJOINT-keyed
@@ -326,10 +335,11 @@ object StreamPublish {
       .coalesce(1).write.mode(SaveMode.Append).parquet(in)
     val src = spark.readStream.schema(ev.drop("user_id").schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = publishStream(src, base, ckpt, "key", Seq("event_type", "eid"),
+    val attrs = Seq("event_type", "eid")
+    val q = publishStream(src, base, ckpt, "key", attrs,
       Seq(col("ts"), col("event_id")), "fold_")
     q.awaitTermination()
-    readCurrent(spark, base)
+    readCurrent(spark, base, Some(snapshotSchema("key", attrs)))
       .select(col("key"), col("event_type"), col("eid"))
       .orderBy("key")
   }
