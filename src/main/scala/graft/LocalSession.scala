@@ -22,15 +22,14 @@ object LocalSession {
       // coalescing below real parallelism
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16kb")
       // above this many paths, partition discovery runs as a SPARK JOB
-      // with one task per directory — on the probe-key-partitioned claim
-      // stores (≤2048 pk= dirs) that is a ~1100-task, multi-second
-      // listing job on EVERY per-batch store read, vs microsecond-class
-      // driver-side listing on a local filesystem. Local default lists
-      // serially; override via spark.sql.sources.parallelPartitionDiscovery.threshold
-      // on deployments whose store sits on an object store / HDFS where
-      // per-prefix listing latency makes the parallel job win.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "8192"))
+      // with one task per directory. A folded claim-store base holds one
+      // pg= dir per ClaimStore.PgDiv probe keys — 2048 / 16 = 128 dirs,
+      // still above Spark's stock threshold of 32 — so the stock setting
+      // pays a ~128-task listing job on every per-batch store read, where
+      // driver-side listing of a local filesystem takes microseconds. A
+      // session over an object store or HDFS, where per-prefix listing
+      // latency makes the parallel job win, sets its own threshold.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
       .getOrCreate()
 
   /** JVM/codegen warm-up touching the machinery the queries lean on:

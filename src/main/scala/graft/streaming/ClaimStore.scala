@@ -39,10 +39,10 @@ object ClaimStore {
     * column, and sorts each file by key so parquet row-group min/max
     * stats recover per-key selectivity inside the group file. Probe
     * cost stays O(touched): [[ClaimStore.readPruned]] dir-prunes on pg
-    * and key-filters inside. Deployments tune via SPARK_GRAFT_CLAIM_PG
-    * (1 restores one-dir-per-key; larger groups = fewer, larger files). */
-  val PgDiv: Int =
-    math.max(1, sys.env.get("SPARK_GRAFT_CLAIM_PG").map(_.toInt).getOrElse(16))
+    * and key-filters inside. A constant, not a setting: it is part of
+    * the on-disk format, and a reader grouping keys differently from
+    * the writer would prune to the wrong directories and miss claims. */
+  val PgDiv: Int = 16
 
   /** Base-layout partition column (the key-group id). Never part of the
     * claim schema — it exists only in the folded base's directory names

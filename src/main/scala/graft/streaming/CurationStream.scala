@@ -53,14 +53,6 @@ import scala.jdk.CollectionConverters._
   * way. */
 object CurationStream {
 
-  /** Fold the claim store into one generation once the delta dir holds
-    * this many files — the bound on the store's file count (the shared
-    * [[ClaimStore]] budget; re-exported for specs). */
-  val CompactDeltaFiles: Int = ClaimStore.CompactDeltaFiles
-
-  private def deltaFiles(fpStore: String): Seq[org.apache.hadoop.fs.Path] =
-    graft.sources.Hfs.children(s"$fpStore/delta")(_.endsWith(".parquet"))
-
   /** Text claim rows: pk = the fingerprint's probe key, `epoch` the
     * RETENTION stamp (caller-threaded monotone build epoch + batch id)
     * consumed by [[sweepClaims]]. */
@@ -102,16 +94,15 @@ object CurationStream {
     * batch — quadratic over a stream's lifetime — and counts crash
     * duplicates, drilling holes in the dense position sequence).
     *
-    * One (batch_id, n_docs, n_tokens) row lands per committed batch as
-    * a delta file; reads union the committed base generation with the
-    * deltas and resolve per batch_id, so a read is O(delta budget + 1)
-    * tiny files however large the store grows. At the file budget the
-    * set folds into a fresh `gen=N` base by the same atomic CURRENT
-    * swap as [[compactClaims]] — per-BATCH rows are retained (the row
-    * count is batch-count-sized, trivially one file; it is the FILE
-    * count that must stay bounded) because the batch_id rows double as
-    * the REDELIVERY GUARD: a replayed batch whose row already exists
-    * skips its store append entirely, making the append idempotent.
+    * One (batch_id, n_docs, n_tokens) row lands per committed batch in
+    * a [[ClaimStore]] (no probe key): reads union its levels and resolve
+    * per batch_id, so a read is O(delta budget + log) tiny files however
+    * large the store grows, and the delta budget folds by the store's
+    * own leveled policy and consumed-inputs manifest. Per-BATCH rows are
+    * retained (the row count is batch-count-sized; it is the FILE count
+    * that must stay bounded) because the batch_id rows double as the
+    * REDELIVERY GUARD: a replayed batch whose row already exists skips
+    * its store append entirely, making the append idempotent.
     * The one remaining crash window — store rows landed, counter row
     * did not — re-appends the SAME rows at the SAME positions on
     * replay (the counter still excludes the batch), so the worst
@@ -121,14 +112,9 @@ object CurationStream {
   private[graft] object TailCounter {
     private def rows(spark: SparkSession, dir: String): DataFrame = {
       import spark.implicits._
-      val empty = Seq.empty[(Long, Long, Long)].toDF("batch_id", "n_docs", "n_tokens")
-      val base = graft.sources.Stage.currentTarget(dir).toSeq
-      val parts = base ++ deltaFiles(dir).map(_.toString)
-      if (parts.isEmpty) empty
-      // explicit schema: a schemaless parquet read pays a one-task-per-
-      // file footer-inference job first (see ClaimStore.readWhere)
-      else spark.read.schema(empty.schema).parquet(parts: _*)
-        .dropDuplicates("batch_id") // swap-then-cleanup crash leaves copies
+      ClaimStore(dir)
+        .read(spark, Seq.empty[(Long, Long, Long)].toDF("batch_id", "n_docs", "n_tokens"))
+        .dropDuplicates("batch_id") // a fold crashed before cleanup leaves copies
     }
 
     /** The accreted (n_old, t_old) offsets as a broadcastable 1-row
@@ -158,29 +144,13 @@ object CurationStream {
       else Some((all.map(_.getLong(1)).sum, all.map(_.getLong(2)).sum))
     }
 
-    /** Record a committed batch append; folds the file set into one
-      * generation at the delta budget (same swap discipline as
-      * [[compactClaims]] — the foreachBatch loop is single-threaded, so
-      * nothing races the fold). */
+    /** Record a committed batch append (the foreachBatch loop is
+      * single-threaded, so nothing races the store's fold). */
     def append(spark: SparkSession, dir: String, batchId: Long,
         nDocs: Long, nTokens: Long): Unit = {
       import spark.implicits._
-      import graft.sources.Hfs
-      Seq((batchId, nDocs, nTokens)).toDF("batch_id", "n_docs", "n_tokens")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$dir/delta")
-      if (deltaFiles(dir).size >= CompactDeltaFiles) {
-        val gens = Hfs.children(dir)(_.startsWith("gen="))
-          .map(_.getName.stripPrefix("gen=").toLong)
-        val nextName = s"gen=${(gens :+ -1L).max + 1}"
-        val next = s"$dir/$nextName"
-        val consumed = deltaFiles(dir)
-        rows(spark, dir).coalesce(1).write.parquet(next)
-        graft.sources.Stage.atomicRepoint(dir, next)
-        Hfs.children(dir)(n => n.startsWith("gen=") && n != nextName)
-          .foreach(p => Hfs.delete(p))
-        (consumed :+ new org.apache.hadoop.fs.Path(s"$dir/delta", "_SUCCESS"))
-          .foreach(p => Hfs.delete(p, recursive = false))
-      }
+      ClaimStore(dir).append(spark,
+        Seq((batchId, nDocs, nTokens)).toDF("batch_id", "n_docs", "n_tokens"))
     }
   }
 

@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
+import graft.PlanWalk.{allExpressions, flattenAll}
 
 /** Plan-shape assertions — the scale contract, checked in CI: filters
   * reach the parquet scan, projections prune the read schema, small
-  * dimensions broadcast, top-k plans as TakeOrdered, and no query in the
-  * inventory ever degenerates to a cartesian product. These are the
+  * dimensions broadcast, and top-k plans as TakeOrdered (that no query in
+  * the inventory degenerates to a cartesian product is checked per query
+  * by QueriesSmokeSpec, on the frame it already builds). These are the
   * properties that decide whether the same code survives a 100x scale-up,
   * so they are asserted against the optimized physical plan, not implied.
   */
@@ -24,26 +26,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  // walk EVERY physical node, descending through AQE wrappers, query
-  // stages, and cached-relation boundaries — `executedPlan.flatMap` alone
-  // stops at AdaptiveSparkPlanExec's leaf and inspects nothing beneath it,
-  // which made expression tripwires vacuous for shuffle-bearing queries
-  private def flattenAll(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      p +: flattenAll(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: flattenAll(q.plan)
-    case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      p +: flattenAll(c.relation.cachedPlan)
-    case _ => p +: p.children.flatMap(flattenAll)
-  }
-
-  private def allExpressions(df: DataFrame)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    flattenAll(df.queryExecution.executedPlan)
-      .flatMap(_.expressions).flatMap(_.collect { case e => e })
 
   test("prefix-sum offset frames: every window partitioned, offsets broadcast") {
     // the two-pass prefix sum behind the training-order shuffle and the
@@ -254,49 +236,5 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(twice(col("count")).as("c2"))
     assert(allExpressions(planted).exists(_.isInstanceOf[ScalaUDF]),
       "detector failed to find a deliberately planted ScalaUDF under AQE")
-  }
-
-  test("no query in the inventory plans a cartesian product") {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-    // q_neardup_groups executes its fixpoint loop eagerly at construction
-    // and returns a checkpoint scan — there is no plan left to inspect
-    for ((name, fn) <- SparkEntry.queries if name != "q_neardup_groups") {
-      val df = fn(spark, dir)
-      val plan = physical(df)
-      assert(!plan.contains("CartesianProduct"),
-        s"$name plans a cartesian product")
-      // the whole inventory runs on codegen'd built-ins and native
-      // expressions — a ScalaUDF in a live plan is a regression.
-      // allExpressions descends AQE wrappers: the plain executedPlan
-      // traversal inspected nothing for shuffle-bearing queries
-      assert(!allExpressions(df).exists(_.isInstanceOf[ScalaUDF]),
-        s"$name carries a ScalaUDF in its live plan")
-      // BroadcastNestedLoopJoin is allowed ONLY for (a) the intentional
-      // brute-force ANN baseline (20 query vectors, exactness oracle)
-      // and the recall report that embeds it as the ground truth, and
-      // (b) scalar corpus-total joins (crossJoin of a broadcast 1-row
-      // aggregate — the build side is a single row by construction, so
-      // the "nested loop" is one probe per row, the correct plan)
-      val scalarTotalJoin =
-        Set("q_tfidf_topk", "q_unigram_logprob", "q_bigram_logprob",
-          "q_weighted_sample",
-          "q_lm_ppl_buckets", "q_pmi_bigrams", "q_temperature_mix",
-          "q_dsir_weight", "q_zorder_stats", "q_corpus_drift",
-          "q_heavy_hitters", "q_shard_upsert")
-      // q_ann_topk_quantized is the int8 twin of q_ann_topk: the same
-      // intentional 20-query brute-force baseline (broadcast query set,
-      // exactness oracle), so it carries the same BNLJ by design
-      // q_ann_topk_rerank's FIRST pass is the same broadcast-20-query
-      // shortlist scan; its full-precision second pass is an equi-join.
-      // q_ann_pq_topk ranks the PQ reconstruction with the same
-      // intentional 20-query broadcast baseline (the cell-join
-      // composition is q_ann_ivf_topk_quantized)
-      val bruteForceAnn =
-        Set("q_ann_topk", "q_ann_ivf_recall", "q_ann_topk_quantized",
-          "q_ann_topk_rerank", "q_ann_pq_topk")
-      if (!bruteForceAnn(name) && !scalarTotalJoin(name))
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"$name plans a nested-loop join")
-    }
   }
 }

@@ -123,7 +123,7 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(genDirs.length == 1, "dead generations must be dropped after the swap")
     val deltas = new java.io.File(fpStore, "delta").listFiles()
       .count(_.getName.endsWith(".parquet"))
-    assert(deltas < graft.streaming.CurationStream.CompactDeltaFiles,
+    assert(deltas < graft.streaming.ClaimStore.CompactDeltaFiles,
       s"consumed deltas must be dropped, got $deltas files")
     val verdicts = spark.read.parquet(p("out")).collect()
     assert(verdicts.length == 12 && verdicts.forall(_.getBoolean(4)),

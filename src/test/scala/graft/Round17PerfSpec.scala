@@ -97,5 +97,18 @@ class Round17PerfSpec extends AnyFunSuite {
     assert(tc.hasBatch(spark, dir, 1L))
     val st = tc.state(spark, dir).collect()(0)
     assert((st.getLong(0), st.getLong(1)) === ((12L, 120L)))
+    // past the delta budget the rows fold through the ClaimStore: the
+    // offsets and the redelivery guard read the same across the fold
+    val more = 2L until 2L + graft.streaming.ClaimStore.CompactDeltaFiles
+    more.foreach(b => tc.append(spark, dir, b, 1L, 10L))
+    assert(graft.sources.Stage.currentTarget(dir).isDefined,
+      "crossing the delta budget must have committed a generation")
+    val n = 12L + more.size
+    assert(tc.snapshot(spark, dir, more.last + 1) === Some((n, n * 10L)))
+    (0L to more.last).foreach(b => assert(tc.snapshot(spark, dir, b) === None))
+    tc.append(spark, dir, more.last + 1, 3L, 30L)
+    assert(tc.snapshot(spark, dir, more.last + 2) === Some((n + 3L, n * 10L + 30L)))
+    val st2 = tc.state(spark, dir).collect()(0)
+    assert((st2.getLong(0), st2.getLong(1)) === ((n + 3L, n * 10L + 30L)))
   }
 }
