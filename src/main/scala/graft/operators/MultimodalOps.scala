@@ -933,10 +933,8 @@ object MultimodalOps {
   /** The banded claim store schema: claims pre-exploded to their probe
     * keys; `epoch` is the RETENTION stamp (caller-threaded monotone build
     * epoch + batch id) the stores' retention sweeps consume. */
-  private[graft] def emptyBandedClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
-  }
+  private[graft] val BandedClaims = org.apache.spark.sql.types.StructType.fromDDL(
+    "pk INT NOT NULL, claim_id BIGINT NOT NULL, fhash BIGINT NOT NULL, epoch BIGINT NOT NULL")
 
   /** Claim rows (claim_id, fhash) pre-exploded to their 8 exact probe
     * keys: (pk, claim_id, fhash) — the batch corpus side and every

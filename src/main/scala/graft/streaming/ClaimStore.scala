@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NumericType, StructType}
 
 import graft.sources.Hfs
 
@@ -138,6 +139,11 @@ private[streaming] object StreamVerdicts {
   *    neither resurrect swept claims nor strand a migration under its
   *    old keys.
   *
+  * `schema` is the store's claim format, declared once with the store:
+  * every level is read with it (no footer inference), reads normalize to
+  * its column order, and [[appendDelta]] rejects a frame that does not
+  * match it. `epochCol` is the column [[retentionSweep]] ages claims on.
+  *
   * `partitionCol` lays the compacted base out on the probe key's GROUP
   * (`gen=N/pg=<key div PgDiv>/...`, key retained as a sorted data
   * column) so a batch's [[readPruned]] partition-prunes to the group
@@ -163,8 +169,13 @@ private[streaming] object StreamVerdicts {
   * O(claims · log store) — not the O(N · store) a single-level fold pays
   * over an N-batch stream. Per-BATCH probe work never scans more than
   * the pruned base keys + the bounded small levels. */
-final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
+final case class ClaimStore(dir: String, schema: StructType,
+    partitionCol: Option[String] = None, epochCol: String = "epoch") {
   import ClaimStore.{CompactDeltaFiles, ConsumedManifest, RunsPerClass}
+
+  /** The claim columns in schema order — every read and fold selects
+    * exactly these. */
+  private def claimCols = schema.fieldNames.toSeq.map(col)
 
   private[streaming] def deltaFiles: Seq[Path] =
     Hfs.children(s"$dir/delta")(_.endsWith(".parquet"))
@@ -222,11 +233,10 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
   /** Committed base generation (CURRENT, if any major has run) ++ live
     * minor runs ++ delta files — MINUS any inputs a committed filtered
     * fold already consumed (see [[ClaimStore.ConsumedManifest]]) —
-    * columns normalized to `empty`'s order (the base read returns
+    * columns normalized to `schema`'s order (the base read returns
     * `partitionCol` as a trailing partition column). Raw rows: plain-fold
     * crash duplicates survive; the caller's read semantics absorb them. */
-  def read(spark: SparkSession, empty: DataFrame): DataFrame =
-    readWhere(spark, empty, None)
+  def read(spark: SparkSession): DataFrame = readWhere(spark, None)
 
   /** [[read]] restricted to the probe keys this batch touches: the base
     * generation's scan PARTITION-PRUNES to the matching `gen=N/pg=v`
@@ -235,7 +245,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * sorted group file), and the small levels — at most the delta
     * budget plus O(log) minor runs — take the key filter as an
     * ordinary pushed predicate. */
-  def readPruned(spark: SparkSession, empty: DataFrame, keys: Seq[Int]): DataFrame = {
+  def readPruned(spark: SparkSession, keys: Seq[Int]): DataFrame = {
     val pc = partitionCol.getOrElse(
       throw new IllegalStateException(s"claim store $dir has no probe-key layout"))
     // the base prunes DIRECTORIES on the key-group column (pg) and rows
@@ -243,14 +253,13 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // min/max stats); deltas/runs carry the key as a plain column and
     // take only the key predicate
     val pgs = keys.map(_ / ClaimStore.PgDiv).distinct
-    readWhere(spark, empty, Some(col(pc).isin(keys.map(Integer.valueOf): _*)),
+    readWhere(spark, Some(col(pc).isin(keys.map(Integer.valueOf): _*)),
       basePred = Some(col(ClaimStore.PgCol).isin(pgs.map(Integer.valueOf): _*)))
   }
 
-  private def readWhere(spark: SparkSession, empty: DataFrame,
+  private def readWhere(spark: SparkSession,
       pred: Option[org.apache.spark.sql.Column],
       basePred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val sel = empty.columns.toSeq.map(col)
     // compare scheme-stripped on BOTH sides: the session that wrote the
     // manifest and the one reading it may qualify the same path
     // differently (file:/ vs file:///, host:port vs nameservice)
@@ -269,14 +278,13 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // shape); claim payloads (strings, hashes, codes) are non-null by
     // construction and pass through untouched.
     def conform(raw: DataFrame): DataFrame =
-      empty.schema.fields.foldLeft(raw) { (d, f) =>
+      schema.fields.foldLeft(raw) { (d, f) =>
         if (!d.columns.contains(f.name))
           // typed-zero backfill is a NUMERIC contract (pre-epoch stores
           // read as epoch 0); a non-numeric upgrade column backfills
           // null — never the string "0" via a blanket cast
           d.withColumn(f.name, f.dataType match {
-            case _: org.apache.spark.sql.types.NumericType =>
-              lit(0).cast(f.dataType)
+            case _: NumericType => lit(0).cast(f.dataType)
             case dt => lit(null).cast(dt)
           })
         else if (partitionCol.contains(f.name))
@@ -288,7 +296,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
           // pruning on it
           d
         else f.dataType match {
-          case _: org.apache.spark.sql.types.NumericType =>
+          case _: NumericType =>
             d.withColumn(f.name, coalesce(col(f.name), lit(0).cast(f.dataType)))
           case _ => d
         }
@@ -299,7 +307,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // file per live probe key that is an O(key-space)-task job per
     // read, paid by every per-batch probe (measured: a 1107-task ~3 s
     // stage inside each batch at sf0.1; guide §6 small files hurt
-    // twice). The claim schema is statically known (`empty`), files
+    // twice). The claim schema is statically known (`schema`), files
     // written before a column existed read it as null (additive
     // evolution), and conform() backfills exactly as the old
     // mergeSchema read did — so the footer pass bought nothing.
@@ -307,20 +315,23 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
         extra: Option[org.apache.spark.sql.Column] = None): Option[DataFrame] =
       if (paths.isEmpty) None
       else {
-        val raw = spark.read.schema(empty.schema).parquet(paths: _*)
+        val raw = spark.read.schema(schema).parquet(paths: _*)
         // `extra` (the base's pg directory predicate) must apply BEFORE
         // conform/select: pg is a discovered partition column of the
         // base layout only — deltas and runs never see it
         val df = conform(extra.fold(raw)(raw.filter))
-        Some(pred.fold(df)(df.filter).select(sel: _*))
+        Some(pred.fold(df)(df.filter).select(claimCols: _*))
       }
     val parts =
       part(graft.sources.Stage.currentTarget(dir).toSeq.filter(hasParquet),
         basePred).toSeq ++
         part(live(minorRuns).filter(hasParquet)).toSeq ++
         part(live(deltaFiles)).toSeq
-    if (parts.isEmpty) pred.fold(empty)(empty.filter)
-    else parts.reduce(_ union _)
+    if (parts.isEmpty) {
+      // no level yet: an empty local relation of the claim schema
+      val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      pred.fold(empty)(empty.filter)
+    } else parts.reduce(_ union _)
   }
 
   /** Land one batch's claims as a single delta file; fold per the
@@ -338,12 +349,21 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * that still exist. */
   def append(spark: SparkSession, claims: DataFrame): Unit = {
     appendDelta(claims)
-    maybeCompact(spark, claims.limit(0))
+    maybeCompact(spark)
   }
 
-  /** The write half of [[append]]: one delta file, no fold. */
-  def appendDelta(claims: DataFrame): Unit =
+  /** The write half of [[append]]: one delta file, no fold. A frame
+    * whose column names or types differ from the store's `schema` is
+    * rejected before anything is written: a landed mismatch would commit
+    * with the checkpoint and only fail (or silently backfill) on a
+    * later read. Nullability is not compared. */
+  def appendDelta(claims: DataFrame): Unit = {
+    def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    require(shape(claims.schema) == shape(schema),
+      s"claim frame does not match the schema of claim store $dir: " +
+        s"got ${claims.schema.catalogString}, want ${schema.catalogString}")
     claims.coalesce(1).write.mode(SaveMode.Append).parquet(s"$dir/delta")
+  }
 
   /** The fold half of [[append]] — the LEVELED policy. Once the delta
     * budget is crossed:
@@ -359,7 +379,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * has been written or materialized (see [[append]]). Returns the
     * parquet bytes this call rewrote (0 when under budget) — the
     * rewrite-amplification observable the scale rehearsal bounds. */
-  def maybeCompact(spark: SparkSession, empty: DataFrame): Long = {
+  def maybeCompact(spark: SparkSession): Long = {
     finishPendingCleanup()
     // a manifest that SURVIVES cleanup means a consumed input could not
     // be deleted. The minor/tier folds below read delta and run files
@@ -371,22 +391,21 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // excludes the consumed paths, and its new manifest re-lists them.)
     if (pendingConsumed().nonEmpty) 0L
     else if (deltaFiles.size < CompactDeltaFiles) 0L
-    else if (graft.sources.Stage.currentTarget(dir).isEmpty) major(spark, empty)
+    else if (graft.sources.Stage.currentTarget(dir).isEmpty) major(spark)
     else {
-      var bytes = minorFold(spark, empty)
-      bytes += tierMergeFullClasses(spark, empty)
+      var bytes = minorFold(spark)
+      bytes += tierMergeFullClasses(spark)
       val baseBytes = graft.sources.Stage.currentTarget(dir)
         .map(t => Hfs.parquetBytes(new Path(t))).getOrElse(0L)
-      if (minorRuns.map(parquetBytes).sum >= baseBytes) bytes += major(spark, empty)
+      if (minorRuns.map(parquetBytes).sum >= baseBytes) bytes += major(spark)
       bytes
     }
   }
 
   /** Force a full fold — base ∪ minors ∪ deltas → one fresh generation.
-    * Kept public for batch-style store maintenance
-    * ([[CurationStream.compactFingerprints]]); the streaming path goes
-    * through [[maybeCompact]]'s leveled policy. */
-  def compact(spark: SparkSession, empty: DataFrame): Unit = { major(spark, empty); () }
+    * Kept public for batch-style store maintenance; the streaming path
+    * goes through [[maybeCompact]]'s leveled policy. */
+  def compact(spark: SparkSession): Unit = { major(spark); () }
 
   /** OFFLINE rewrite — fold the whole store through `f` into one fresh
     * generation (the major-fold commit discipline: consumed-input
@@ -396,9 +415,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * MIGRATION path (a centroid refresh re-keys every claim's probe
     * partition — `f` maps rows to their new pk). Run between batches;
     * O(store) by design, for passes that are rare by design. */
-  def rewrite(spark: SparkSession, empty: DataFrame,
-      f: DataFrame => DataFrame): Unit = {
-    majorWith(spark, empty, f)
+  def rewrite(spark: SparkSession, f: DataFrame => DataFrame): Unit = {
+    majorWith(spark, f)
     ()
   }
 
@@ -416,10 +434,10 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * pruned serving layout and the consumed-input manifest makes a
     * crashed sweep finish (never silently un-happen) on the next fold;
     * returns the claim rows dropped. */
-  def retentionSweep(spark: SparkSession, empty: DataFrame, minEpoch: Long,
-      maxDropFrac: Double, epochCol: String = "epoch"): Long = {
+  def retentionSweep(spark: SparkSession, minEpoch: Long,
+      maxDropFrac: Double): Long = {
     finishPendingCleanup()
-    val counted = read(spark, empty).distinct()
+    val counted = read(spark).distinct()
       .agg(count(lit(1)).as("total"),
         count(when(col(epochCol) < minEpoch, 1)).as("doomed"))
       .collect()(0)
@@ -429,7 +447,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
       throw new GuardrailAbort(
         s"retention sweep on $dir would drop $doomed of $total claims " +
           s"(> $maxDropFrac) — refusing; raise the guardrail to proceed")
-    major(spark, empty, keep = Some(col(epochCol) >= minEpoch))
+    major(spark, keep = Some(col(epochCol) >= minEpoch))
     doomed
   }
 
@@ -442,12 +460,11 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * the swap the old CURRENT still covers every byte, after it the
     * manifest excludes the consumed inputs until the next fold deletes
     * them. */
-  private def major(spark: SparkSession, empty: DataFrame,
+  private def major(spark: SparkSession,
       keep: Option[org.apache.spark.sql.Column] = None): Long =
-    majorWith(spark, empty, df => keep.foldLeft(df)(_ filter _))
+    majorWith(spark, df => keep.foldLeft(df)(_ filter _))
 
-  private def majorWith(spark: SparkSession, empty: DataFrame,
-      f: DataFrame => DataFrame): Long = {
+  private def majorWith(spark: SparkSession, f: DataFrame => DataFrame): Long = {
     if (!Hfs.isDir(dir)) return 0L
     finishPendingCleanup()
     sweepDeadRuns()
@@ -459,8 +476,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     val consumedRuns = listRuns()
     // normalize back to the claim schema: a rewrite may re-derive
     // columns (e.g. a migration re-keys pk), never add or drop them
-    val folded = f(read(spark, empty))
-      .select(empty.columns.toSeq.map(col): _*).distinct()
+    val folded = f(read(spark))
+      .select(claimCols: _*).distinct()
     partitionCol match {
       case Some(pc) =>
         // one shuffle keyed on the KEY GROUP → at most one file per
@@ -521,15 +538,14 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
 
   /** MINOR fold: the consumed deltas alone → one committed plain-layout
     * `minor/run=M` — O(new claims), the base untouched. */
-  private def minorFold(spark: SparkSession, empty: DataFrame): Long = {
+  private def minorFold(spark: SparkSession): Long = {
     sweepDeadRuns()
     val consumed = deltaFiles
     if (consumed.isEmpty) return 0L
     val next = nextRunDir()
-    val sel = empty.columns.toSeq.map(col)
     // explicit schema: no footer-inference job (see readWhere)
-    spark.read.schema(empty.schema).parquet(consumed.map(_.toString): _*)
-      .select(sel: _*).distinct()
+    spark.read.schema(schema).parquet(consumed.map(_.toString): _*)
+      .select(claimCols: _*).distinct()
       .coalesce(runFiles(consumed.map(parquetBytes).sum))
       .write.parquet(next.toString)
     deleteDeltas(consumed)
@@ -540,7 +556,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * fold that class into one run (which lands ~2 classes up) — the
     * size-tiered cascade that keeps live-run count O(log store) and
     * never rewrites a larger class to absorb a smaller one. */
-  private def tierMergeFullClasses(spark: SparkSession, empty: DataFrame): Long = {
+  private def tierMergeFullClasses(spark: SparkSession): Long = {
     def sizeClass(bytes: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(bytes, 1L))
     var bytes = 0L
@@ -551,9 +567,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
         .groupBy(_._2).values.find(_.size >= RunsPerClass).foreach { cls =>
           val runs = cls.map(_._1)
           val next = nextRunDir()
-          val sel = empty.columns.toSeq.map(col)
-          spark.read.schema(empty.schema).parquet(runs.map(_.toString): _*)
-            .select(sel: _*).distinct()
+          spark.read.schema(schema).parquet(runs.map(_.toString): _*)
+            .select(claimCols: _*).distinct()
             .coalesce(runFiles(runs.map(parquetBytes).sum))
             .write.parquet(next.toString)
           runs.foreach(p => Hfs.delete(p))

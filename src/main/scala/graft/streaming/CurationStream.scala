@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{DedupOps, MultimodalOps, TextOps}
 import graft.sources.Tables
@@ -56,10 +57,19 @@ object CurationStream {
   /** Text claim rows: pk = the fingerprint's probe key, `epoch` the
     * RETENTION stamp (caller-threaded monotone build epoch + batch id)
     * consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-  }
+  private[graft] val TextClaims =
+    StructType.fromDDL("pk INT NOT NULL, fp STRING, epoch BIGINT NOT NULL")
+
+  /** Video claim rows — the temporal-gradient signature is radius-0
+    * (planted transforms cancel STRUCTURALLY, `VideoCodec.vhashOf`), so
+    * the probe is an exact equi-join; pk is a stable hash of the
+    * signature purely for the pruned-read layout. */
+  private val VideoClaims = StructType.fromDDL(
+    "pk INT NOT NULL, claim_id BIGINT NOT NULL, vhash STRING, epoch BIGINT NOT NULL")
+
+  /** Per-batch funnel rows (batch-grain observability metadata). */
+  private val FunnelRows = StructType.fromDDL(
+    "batch_id BIGINT NOT NULL, stage STRING, n_docs BIGINT NOT NULL, n_tokens BIGINT NOT NULL")
 
   /** Probe key for the exact-md5 claim classes: a stable hash of the
     * fingerprint into 2048 partitions, so a batch's dedup probe reads
@@ -69,23 +79,17 @@ object CurationStream {
   private def fpPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (crc32(c) % 2048).cast("int")
 
-  private def textClaimStore(fpStore: String): ClaimStore =
-    ClaimStore(fpStore, partitionCol = Some("pk"))
+  /** The gate's claim stores: (text exact-md5 classes, audio perceptual
+    * fingerprints, video signatures). */
+  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
+    ClaimStore(s"${outDir}_fps", TextClaims, Some("pk")),
+    ClaimStore(s"${outDir}_mfps", MultimodalOps.BandedClaims, Some("pk")),
+    ClaimStore(s"${outDir}_vmfps", VideoClaims, Some("pk")))
 
-  /** The FULL claim-class set — restart/audit reads. Per-batch probes
-    * use the pruned read inside [[run]] instead. Duplicates across
-    * levels (a crash between swap and cleanup) collapse in the
-    * distinct(). */
-  private[streaming] def claimedClasses(spark: SparkSession,
-      fpStore: String): DataFrame =
-    textClaimStore(fpStore).read(spark, emptyClaims(spark))
-      .select("fp").distinct()
-
-  /** Fold the store into one fresh `gen=N` — the shared
-    * [[ClaimStore.compact]] swap discipline. */
-  private[streaming] def compactClaims(spark: SparkSession,
-      fpStore: String): Unit =
-    textClaimStore(fpStore).compact(spark, emptyClaims(spark))
+  /** The per-batch funnel store; its retention epoch is the batch id
+    * (see [[sweepFunnel]]). */
+  private[graft] def funnelStore(outDir: String): ClaimStore =
+    ClaimStore(s"${outDir}_funnel", FunnelRows, epochCol = "batch_id")
 
   /** Generational TAIL COUNTER for the incremental stores — the logical
     * (doc, token) offsets the next batch appends at, kept OUTSIDE the
@@ -110,23 +114,9 @@ object CurationStream {
     * positions stay dense and immutable under every single-crash
     * schedule. */
   private[graft] object TailCounter {
-    private def rows(spark: SparkSession, dir: String): DataFrame = {
-      import spark.implicits._
-      ClaimStore(dir)
-        .read(spark, Seq.empty[(Long, Long, Long)].toDF("batch_id", "n_docs", "n_tokens"))
-        .dropDuplicates("batch_id") // a fold crashed before cleanup leaves copies
-    }
-
-    /** The accreted (n_old, t_old) offsets as a broadcastable 1-row
-      * frame. */
-    def state(spark: SparkSession, dir: String): DataFrame =
-      rows(spark, dir).agg(
-        coalesce(sum(col("n_docs")), lit(0L)).cast("long").as("n_old"),
-        coalesce(sum(col("n_tokens")), lit(0L)).cast("long").as("t_old"))
-
-    /** Redelivery guard: has this batch already committed its append? */
-    def hasBatch(spark: SparkSession, dir: String, batchId: Long): Boolean =
-      !rows(spark, dir).filter(col("batch_id") === batchId).isEmpty
+    private val Rows = StructType.fromDDL(
+      "batch_id BIGINT NOT NULL, n_docs BIGINT NOT NULL, n_tokens BIGINT NOT NULL")
+    private def store(dir: String) = ClaimStore(dir, Rows)
 
     /** ONE counter read serving the redelivery guard AND the offsets:
       * the per-batch hot path paid two reads of the same tiny store
@@ -138,8 +128,9 @@ object CurationStream {
       * None = this batch already committed its append (skip). */
     def snapshot(spark: SparkSession, dir: String,
         batchId: Long): Option[(Long, Long)] = {
-      val all = rows(spark, dir)
-        .select("batch_id", "n_docs", "n_tokens").collect()
+      val all = store(dir).read(spark)
+        .dropDuplicates("batch_id") // a fold crashed before cleanup leaves copies
+        .collect()
       if (all.exists(_.getLong(0) == batchId)) None
       else Some((all.map(_.getLong(1)).sum, all.map(_.getLong(2)).sum))
     }
@@ -149,39 +140,9 @@ object CurationStream {
     def append(spark: SparkSession, dir: String, batchId: Long,
         nDocs: Long, nTokens: Long): Unit = {
       import spark.implicits._
-      ClaimStore(dir).append(spark,
+      store(dir).append(spark,
         Seq((batchId, nDocs, nTokens)).toDF("batch_id", "n_docs", "n_tokens"))
     }
-  }
-
-  /** Per-batch curation against the accreting claim store. `evalSh` is
-    * the static benchmark shingle set (one `g` column), persisted by
-    * the caller for the stream's lifetime.
-    *
-    * With `storeDir` set, each batch also appends its ADMITTED documents
-    * to an incremental curated store: the batch's survivors rank among
-    * themselves by the same md5 training order as the batch build
-    * (`LayoutOps.shuffleRanks`), offset by the [[TailCounter]]'s logical
-    * store size — the `corpusShuffleUpsert` tail discipline run per
-    * micro-batch, so existing positions are immutable, every shard gains
-    * only an appended tail file, and a training run consuming the store
-    * never re-reads a shard file it already has. `tokenStoreDir` is the
-    * tokenized twin: admitted docs BPE-encode and pack into `ctx`-token
-    * context windows continuing the counter's global token offset.
-    * At-least-once: the counter's batch_id row lands AFTER the store
-    * append and doubles as the redelivery guard — a replayed batch whose
-    * row exists skips its append; the one crash window (store rows
-    * landed, counter row did not) re-appends the SAME rows at the SAME
-    * positions, so a read side that needs crash immunity drops exact
-    * duplicates — positions stay dense and immutable under every
-    * single-crash schedule. */
-  /** Video claim rows — the temporal-gradient signature is radius-0
-    * (planted transforms cancel STRUCTURALLY, `VideoCodec.vhashOf`), so
-    * the probe is an exact equi-join; pk is a stable hash of the
-    * signature purely for the pruned-read layout. */
-  private def emptyVideoClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, String, Long)].toDF("pk", "claim_id", "vhash", "epoch")
   }
 
   /** RETENTION for the gate's claim stores — the epoch-stamped
@@ -193,13 +154,11 @@ object CurationStream {
     * compaction). Returns (text, media, video) claim rows dropped — a
     * store that never existed sweeps vacuously to 0. */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): (Long, Long, Long) = (
-    textClaimStore(s"${outDir}_fps")
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyVideoClaims(spark), minEpoch, maxDropFrac))
+      maxDropFrac: Double): (Long, Long, Long) = {
+    val Seq(text, media, video) =
+      claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac))
+    (text, media, video)
+  }
 
   /** RETENTION for the per-batch funnel store: batch-grain observability
     * frames older than `minBatchId` fold away under the guardrail — the
@@ -207,8 +166,7 @@ object CurationStream {
     * horizon; claims have semantics). */
   def sweepFunnel(spark: SparkSession, outDir: String, minBatchId: Long,
       maxDropFrac: Double): Long =
-    funnelStore(outDir).retentionSweep(spark, emptyFunnel(spark),
-      minBatchId, maxDropFrac, epochCol = "batch_id")
+    funnelStore(outDir).retentionSweep(spark, minBatchId, maxDropFrac)
 
   /** This gate's deployed stores as [[Maintenance.Action]]s — the three
     * claim stores (text exact-md5, audio perceptual, video signature)
@@ -217,35 +175,12 @@ object CurationStream {
     * actions and run the lot through [[Maintenance.run]]: a tripped
     * guardrail aborts its store only. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double, minBatchId: Long): Seq[Maintenance.Action] = {
-    def claimAction(store: ClaimStore, empty: => DataFrame,
-        horizon: Long, epochCol: String) =
-      Maintenance.Action(store.dir, "retention+compact", () =>
-        Maintenance.sweepAndCompact(spark, store, empty, horizon,
-          maxDropFrac, epochCol))
-    Seq(
-      claimAction(textClaimStore(s"${outDir}_fps"),
-        emptyClaims(spark), minEpoch, "epoch"),
-      claimAction(ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk")),
-        MultimodalOps.emptyBandedClaims(spark), minEpoch, "epoch"),
-      claimAction(ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk")),
-        emptyVideoClaims(spark), minEpoch, "epoch"),
-      claimAction(funnelStore(outDir),
-        emptyFunnel(spark), minBatchId, "batch_id"))
-  }
+      maxDropFrac: Double, minBatchId: Long): Seq[Maintenance.Action] =
+    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac) ++
+      Maintenance.sweepActions(spark, Seq(funnelStore(outDir)), minBatchId, maxDropFrac)
 
   private def vhashPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (crc32(c) % 2048).cast("int")
-
-  /** Per-batch funnel rows (batch-grain observability metadata). */
-  private def emptyFunnel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("batch_id", "stage", "n_docs", "n_tokens")
-  }
-
-  private def funnelStore(outDir: String): ClaimStore =
-    ClaimStore(s"${outDir}_funnel")
 
   /** The incremental TRAINING stores as [[Maintenance.Action]]s — the
     * small-files compaction pass ([[graft.operators.LayoutOps
@@ -273,6 +208,27 @@ object CurationStream {
         Maintenance.Result(0L, Some(s"files $before -> $after"))
       }))
 
+  /** Per-batch curation against the accreting claim store. `evalSh` is
+    * the static benchmark shingle set (one `g` column), persisted by
+    * the caller for the stream's lifetime.
+    *
+    * With `storeDir` set, each batch also appends its ADMITTED documents
+    * to an incremental curated store: the batch's survivors rank among
+    * themselves by the same md5 training order as the batch build
+    * (`LayoutOps.shuffleRanks`), offset by the [[TailCounter]]'s logical
+    * store size — the `corpusShuffleUpsert` tail discipline run per
+    * micro-batch, so existing positions are immutable, every shard gains
+    * only an appended tail file, and a training run consuming the store
+    * never re-reads a shard file it already has. `tokenStoreDir` is the
+    * tokenized twin: admitted docs BPE-encode and pack into `ctx`-token
+    * context windows continuing the counter's global token offset.
+    * At-least-once: the counter's batch_id row lands AFTER the store
+    * append and doubles as the redelivery guard — a replayed batch whose
+    * row exists skips its append; the one crash window (store rows
+    * landed, counter row did not) re-appends the SAME rows at the SAME
+    * positions, so a read side that needs crash immunity drops exact
+    * duplicates — positions stay dense and immutable under every
+    * single-crash schedule. */
   def run(
       incoming: DataFrame,
       evalSh: DataFrame,
@@ -286,10 +242,8 @@ object CurationStream {
       epochBase: Long = 0L,
       vocabDir: Option[String] = None): StreamingQuery = {
     val spark = incoming.sparkSession
-    val fpStore = s"${outDir}_fps"
-    val textStore = textClaimStore(fpStore)
-    val mediaStore = ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk"))
-    val videoStore = ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk"))
+    val Seq(textStore, mediaStore, videoStore) = claimStores(outDir)
+    val funnel = funnelStore(outDir)
     incoming.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch
@@ -398,7 +352,7 @@ object CurationStream {
         val mediaVerdict: Option[DataFrame] = media.map { m =>
           val (probes, vProbes) = probesOf.get
           val matches = MultimodalOps.verifiedPairs(probes,
-            mediaStore.readPruned(spark, MultimodalOps.emptyBandedClaims(spark), touchedA),
+            mediaStore.readPruned(spark, touchedA),
             MultimodalOps.Modality.Audio.radius)
             .groupBy("doc_id").agg(count(lit(1)).as("_mm"))
           // VIDEO probe — the third modality: the temporal-gradient
@@ -406,7 +360,7 @@ object CurationStream {
           // an incoming asset duplicates exactly the stored signatures
           // it EQUALS — a pk-pruned read followed by an exact equi-join
           val vMatches = vProbes
-            .join(videoStore.readPruned(spark, emptyVideoClaims(spark), touchedV)
+            .join(videoStore.readPruned(spark, touchedV)
               .select(col("pk"), col("claim_id"), col("vhash")),
               Seq("pk", "vhash"))
             .select("doc_id", "claim_id")
@@ -433,8 +387,7 @@ object CurationStream {
           // the store scan never exceeds the touched pk directories
           // plus the small levels, the same contract as the
           // perceptual/embedding stores
-          val claimedB = textStore
-            .readPruned(spark, emptyClaims(spark), touchedFps)
+          val claimedB = textStore.readPruned(spark, touchedFps)
             .select("fp").distinct()
           val textVerdict = b
             .join(claimedB.withColumn("already_claimed", lit(true)),
@@ -548,7 +501,7 @@ object CurationStream {
               // claim stores (delta per batch, fold at the budget);
               // replay rows differing from the original delivery both
               // survive the fold and resolve at read (tuple-max)
-              funnelStore(outDir).appendDelta(
+              funnel.appendDelta(
                 one.withColumn("batch_id", lit(batchId))
                   .select("batch_id", "stage", "n_docs", "n_tokens"))
             }
@@ -689,12 +642,9 @@ object CurationStream {
                     epoch.as("epoch"))))
               })
             // PHASE 3: the folds — each store folds only its own files
-            StreamPar.runAll(Seq(
-              () => { textStore.maybeCompact(spark, emptyClaims(spark)); () },
-              () => { funnelStore(outDir).maybeCompact(spark, emptyFunnel(spark)); () }) ++
-              (if (!mediaGate) Seq.empty else Seq(
-                () => { mediaStore.maybeCompact(spark, MultimodalOps.emptyBandedClaims(spark)); () },
-                () => { videoStore.maybeCompact(spark, emptyVideoClaims(spark)); () })))
+            StreamPar.runAll((Seq(textStore, funnel) ++
+              (if (mediaGate) Seq(mediaStore, videoStore) else Nil))
+              .map(st => () => { st.maybeCompact(spark); () }))
           } finally verdict.unpersist()
         } finally {
           media.foreach(_.unpersist())
@@ -985,7 +935,7 @@ object CurationStream {
     val fx = streamFixture(spark, dir, "graft-curation-funnel",
       Seq("out_mfps", "out_vmfps"))
     run(fx.src, fx.evalSh, fx.out, fx.ckpt, mediaGate = true).awaitTermination()
-    funnelStore(fx.out).read(spark, emptyFunnel(spark))
+    funnelStore(fx.out).read(spark)
       .groupBy("batch_id", "stage")
       .agg(max(struct(col("n_docs"), col("n_tokens"))).as("_m"))
       .select(col("batch_id"), col("stage"),
@@ -1005,11 +955,9 @@ object CurationStream {
     * sweep that drops an in-horizon claim, keeps an aged one, or loses a
     * class entirely flips a row red. */
   def claimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val root = graft.sources.TmpStores.pidScopedRoot("graft-claim-retention")
     graft.sources.TmpStores.deleteRecursively(root.resolve("store"))
-    val st = ClaimStore(root.resolve("store").toString, partitionCol = Some("pk"))
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
+    val st = ClaimStore(root.resolve("store").toString, TextClaims, Some("pk"))
     val f = Tables(spark, dir, "documents")
       .select(col("doc_id"), md5(col("text")).as("fp"))
     // probe-key space sized to the corpus: the folded base writes one
@@ -1025,11 +973,11 @@ object CurationStream {
     st.appendDelta(claims(1))
     // pre-sweep counts must be lineage-free: the sweep rewrites the very
     // files this frame reads
-    val pre = st.read(spark, empty).groupBy("fp")
+    val pre = st.read(spark).groupBy("fp")
       .agg(count(lit(1)).as("n_claims_before"))
       .localCheckpoint(true)
-    st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.9)
-    val post = st.read(spark, empty).groupBy("fp")
+    st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.9)
+    val post = st.read(spark).groupBy("fp")
       .agg(count(lit(1)).as("n_claims_after"))
     pre.join(post, Seq("fp"), "left")
       .select(col("fp"), col("n_claims_before"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.operators.DedupOps
 
 /** Streaming form of the near-dup admission gate: incoming documents
@@ -20,16 +21,18 @@ import graft.operators.DedupOps
   * are trivial. */
 object DedupGateStream {
 
-  private def emptySh(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Seq[String], Long)]
-      .toDF("dbucket", "doc_id", "sh", "epoch")
-  }
-  private def emptyBands(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Int, Long, Long)]
-      .toDF("bucket", "doc_id", "band", "band_hash", "epoch")
-  }
+  /** Admitted docs' MinHash band rows, keyed by the band hash's low byte. */
+  private val BandClaims = StructType.fromDDL("bucket INT NOT NULL, doc_id BIGINT NOT NULL, " +
+    "band INT NOT NULL, band_hash BIGINT NOT NULL, epoch BIGINT NOT NULL")
+
+  /** Admitted docs' shingle sets, keyed by doc-id bucket. */
+  private val ShClaims = StructType.fromDDL(
+    "dbucket INT NOT NULL, doc_id BIGINT NOT NULL, sh ARRAY<STRING>, epoch BIGINT NOT NULL")
+
+  /** The accreted text index: (band rows, shingle sets) — see [[run]]. */
+  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
+    ClaimStore(s"${outDir}_bands", BandClaims, Some("bucket")),
+    ClaimStore(s"${outDir}_index", ShClaims, Some("dbucket")))
 
   /** RETENTION for the accreted text index — the epoch-stamped
     * [[ClaimStore.retentionSweep]] discipline on BOTH stores (band rows
@@ -37,24 +40,17 @@ object DedupGateStream {
     * re-admits whole). Run between stream runs. Returns (band rows,
     * shingle rows) dropped. */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): (Long, Long) = (
-    ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket"))
-      .retentionSweep(spark, emptyBands(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket"))
-      .retentionSweep(spark, emptySh(spark), minEpoch, maxDropFrac))
+      maxDropFrac: Double): (Long, Long) = {
+    val Seq(bands, sh) =
+      claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac))
+    (bands, sh)
+  }
 
   /** The band and shingle-index stores as [[Maintenance.Action]]s — see
     * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_bands", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket")),
-        emptyBands(spark), minEpoch, maxDropFrac)),
-    Maintenance.Action(s"${outDir}_index", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket")),
-        emptySh(spark), minEpoch, maxDropFrac)))
+      maxDropFrac: Double): Seq[Maintenance.Action] =
+    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
 
   /** Probe-key bucket of a MinHash band hash: its low 8 bits (splitmix64
     * output — uniform), 256 possible values, so a batch's touched set is
@@ -99,8 +95,7 @@ object DedupGateStream {
     val spark = corpus.sparkSession
     val spark0 = spark
     import spark0.implicits._
-    val shStore = ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket"))
-    val bandStore = ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket"))
+    val Seq(bandStore, shStore) = claimStores(outDir)
     // base index: shingles AND band rows persist for the stream's
     // lifetime — band hashes of the static corpus are computed once, not
     // once per micro-batch
@@ -116,8 +111,7 @@ object DedupGateStream {
         // plus the accreted store PRUNED to the buckets this batch probes
         val touched = iBands.select(bucketOf(col("band_hash")).as("bucket"))
           .distinct().as[Int].collect().toSeq
-        val storeBands = bandStore
-          .readPruned(spark, emptyBands(spark), touched)
+        val storeBands = bandStore.readPruned(spark, touched)
           .select("doc_id", "band", "band_hash")
         val cand = DedupOps
           .gateCandidates(iBands, baseBands.union(storeBands), maxBandFreq)
@@ -130,7 +124,7 @@ object DedupGateStream {
           // extra job per batch
           val touchedIds = cand.select(dbucketOf(col("corpus_id")).as("d"))
             .distinct().as[Int].collect().toSeq
-          val storeSh = shStore.readPruned(spark, emptySh(spark), touchedIds)
+          val storeSh = shStore.readPruned(spark, touchedIds)
             .dropDuplicates("doc_id")
             .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
           val cShById = base
@@ -161,8 +155,8 @@ object DedupGateStream {
               // recomputation on files that still exist
               shStore.appendDelta(shClaims)
               bandStore.appendDelta(bandClaims)
-              shStore.maybeCompact(spark, shClaims.limit(0))
-              bandStore.maybeCompact(spark, bandClaims.limit(0))
+              shStore.maybeCompact(spark)
+              bandStore.maybeCompact(spark)
               ()
             }
           } finally verdict.unpersist()

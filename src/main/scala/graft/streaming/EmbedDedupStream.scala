@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.SimilarityOps
@@ -52,11 +53,12 @@ object EmbedDedupStream {
     * happens at FULL precision, but only on the shortlist the int8
     * probe admits. `epoch` is the RETENTION stamp (caller-threaded
     * monotone build epoch + batch id) consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Array[Byte], Double, Double, Long)]
-      .toDF("pk", "claim_id", "codes", "vmin", "scale", "epoch")
-  }
+  private val VecClaims = StructType.fromDDL("pk INT NOT NULL, claim_id BIGINT NOT NULL, " +
+    "codes BINARY, vmin DOUBLE NOT NULL, scale DOUBLE NOT NULL, epoch BIGINT NOT NULL")
+
+  /** The int8 claim store — see [[run]]. */
+  def claimStores(outDir: String): Seq[ClaimStore] =
+    Seq(ClaimStore(s"${outDir}_vfps", VecClaims, Some("pk")))
 
   /** RETENTION for the int8 claim store — the epoch-stamped
     * [[ClaimStore.retentionSweep]] discipline on the embedding gate: an
@@ -65,17 +67,13 @@ object EmbedDedupStream {
     * (offline, like compaction and [[migrateClaims]]). */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Long =
-    ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac)
+    claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac)).sum
 
   /** The int8 claim store as a [[Maintenance.Action]] — see
     * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_vfps", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk")),
-        emptyClaims(spark), minEpoch, maxDropFrac)))
+      maxDropFrac: Double): Seq[Maintenance.Action] =
+    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
 
   /** The int8 probe admits candidates down to threshold − a PER-CLAIM
     * margin derived from that claim's own quantization bound, never a
@@ -113,7 +111,7 @@ object EmbedDedupStream {
       nprobe: Int = 1,
       epochBase: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
-    val store = ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
+    val Seq(store) = claimStores(outDir)
     incoming.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark0 = spark
@@ -145,7 +143,7 @@ object EmbedDedupStream {
             // int8 SHORTLIST: dequantize the pruned claims (a narrow map
             // over touched cells + the delta budget) and admit candidates
             // at threshold − that claim's own quantization margin …
-            val claimedDv = store.readPruned(spark, emptyClaims(spark), touched)
+            val claimedDv = store.readPruned(spark, touched)
               .select("pk", "claim_id", "codes", "vmin", "scale")
               .as[(Int, Long, Array[Byte], Double, Double)]
               .map { case (pk, id, codes, vmin, scale) =>
@@ -250,8 +248,8 @@ object EmbedDedupStream {
       outDir: String,
       vectors: DataFrame,
       newCentroids: Array[Array[Double]]): Unit = {
-    val store = ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
-    store.rewrite(spark, emptyClaims(spark), { claims =>
+    val Seq(store) = claimStores(outDir)
+    store.rewrite(spark, { claims =>
       val pre = claims.select("claim_id").distinct().count()
       val newPk = SimilarityOps.assignCells(newCentroids,
         claims.select(col("claim_id").as("vec_id")).distinct()

@@ -1,17 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** ONE guardrailed maintenance entry point for a composed pipeline's
   * deployed stores — the operational pass a 100 TB deployment schedules
-  * nightly. The gates expose their store maintenance piecemeal
-  * ([[CurationStream.sweepClaims]] over three stores,
-  * [[CurationStream.sweepFunnel]], [[EmbedDedupStream.sweepClaims]],
-  * [[MediaDedupStream.sweepClaims]], [[DedupGateStream.sweepClaims]],
-  * plus per-store compaction); `Maintenance.run` executes a pipeline's
-  * whole action list with PER-STORE guardrail isolation:
+  * nightly. Each gate declares its claim stores once (`claimStores`) and
+  * turns that list into actions with [[sweepActions]]; the snapshot and
+  * training stores add their own actions
+  * ([[StreamPublish.maintenanceActions]],
+  * [[CurationStream.storeMaintenanceActions]]). `Maintenance.run`
+  * executes a pipeline's whole action list with PER-STORE guardrail
+  * isolation:
   *
-  *  - each action is one store's retention sweep followed by its
+  *  - each claim-store action is its retention sweep followed by its
   *    budget-gated compaction fold (the sweep is itself a major fold
   *    when anything expires; the compaction only fires when the delta
   *    budget is crossed, so a quiet store costs two directory listings);
@@ -101,17 +102,16 @@ object Maintenance {
     Report(outcomes)
   }
 
-  /** The sweep-then-compact step shared by every claim store: expire
-    * claims below the horizon under the guardrail, then fold the delta
-    * backlog if the budget is crossed (a sweep that dropped nothing is
-    * NOT a fold — the compaction keeps the file count bounded on quiet
-    * stores too). */
-  private[streaming] def sweepAndCompact(spark: SparkSession, store: ClaimStore,
-      empty: DataFrame, minEpoch: Long, maxDropFrac: Double,
-      epochCol: String = "epoch"): Long = {
-    val dropped =
-      store.retentionSweep(spark, empty, minEpoch, maxDropFrac, epochCol)
-    store.maybeCompact(spark, empty)
-    dropped
-  }
+  /** One sweep-then-compact action per claim store: expire claims whose
+    * epoch column is below `minEpoch` under the guardrail, then fold the
+    * delta backlog if the budget is crossed (a sweep that dropped
+    * nothing is NOT a fold — the compaction keeps the file count bounded
+    * on quiet stores too). */
+  private[streaming] def sweepActions(spark: SparkSession, stores: Seq[ClaimStore], minEpoch: Long,
+      maxDropFrac: Double): Seq[Action] =
+    stores.map(st => Action(st.dir, "retention+compact", { () =>
+      val dropped = st.retentionSweep(spark, minEpoch, maxDropFrac)
+      st.maybeCompact(spark)
+      dropped
+    }))
 }

@@ -57,6 +57,10 @@ import graft.sources.Tables
   * is that shared read contract. */
 object MediaDedupStream {
 
+  /** The perceptual claim store — see the object doc. */
+  def claimStores(outDir: String): Seq[ClaimStore] =
+    Seq(ClaimStore(s"${outDir}_fps", MultimodalOps.BandedClaims, Some("pk")))
+
   /** RETENTION for the perceptual claim store — the
     * [[ClaimStore.retentionSweep]] discipline wired into the gate:
     * claims older than `minEpoch` fold away under the drop-fraction
@@ -65,17 +69,13 @@ object MediaDedupStream {
     * stream runs (offline, like compaction). */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Long =
-    ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
-      .retentionSweep(spark, MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac)
+    claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac)).sum
 
   /** The perceptual claim store as a [[Maintenance.Action]] — see
     * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_fps", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_fps", partitionCol = Some("pk")),
-        MultimodalOps.emptyBandedClaims(spark), minEpoch, maxDropFrac)))
+      maxDropFrac: Double): Seq[Maintenance.Action] =
+    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
 
   /** Per-batch gate: hash → banded candidate join against the pruned
     * claim store → radius verify → verdict append → claim append.
@@ -90,7 +90,7 @@ object MediaDedupStream {
       maxBandFreq: Option[Long] = None,
       epochBase: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
-    val store = ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
+    val Seq(store) = claimStores(outDir)
     incoming.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark0 = spark
@@ -124,7 +124,7 @@ object MediaDedupStream {
           // hot-key guard: per-pk claim counts are exact on the pruned
           // read (pruning keeps every row of a touched key)
           val corpus = MultimodalOps.capHotKeys(
-            store.readPruned(spark, MultimodalOps.emptyBandedClaims(spark), touched),
+            store.readPruned(spark, touched),
             Seq("pk"), maxBandFreq)
           val matches = MultimodalOps.verifiedPairs(probes, corpus, modality.radius)
             .groupBy("doc_id")

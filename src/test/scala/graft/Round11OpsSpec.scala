@@ -409,9 +409,8 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(rows(3000000L)._2 == 0L, "the twin must match its pre-restart original")
     // the claim store holds exactly the one admitted fingerprint (8
     // pre-exploded (band, value) probe rows, all for claim 0)
-    val claims = graft.streaming.ClaimStore(p("out") + "_fps", Some("pk"))
-      .read(spark, Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash"))
-      .collect()
+    val claims = graft.streaming.MediaDedupStream.claimStores(p("out")).head
+      .read(spark).collect()
     assert(claims.length == 8 &&
       claims.map(_.getAs[Long]("claim_id")).distinct.toSeq == Seq(0L),
       "rejected assets must not claim")

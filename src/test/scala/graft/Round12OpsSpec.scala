@@ -36,16 +36,6 @@ class Round12OpsSpec extends AnyFunSuite {
       s"$store: consumed deltas must be dropped, got $deltas files")
   }
 
-  // walk physical nodes through AQE wrappers (the PlanShapeSpec helper)
-  private def flattenAll(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      p +: flattenAll(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: flattenAll(q.plan)
-    case _ => p +: p.children.flatMap(flattenAll)
-  }
-
   test("media gate claim store compacts generationally and stays claim-respecting") {
     val spark0 = spark
     import spark0.implicits._
@@ -81,12 +71,11 @@ class Round12OpsSpec extends AnyFunSuite {
     // probe-key layout: a single-key read PARTITION-PRUNES the compacted
     // base — the filter must land in the scan's partitionFilters, not as
     // a post-scan predicate over the whole store
-    val st = ClaimStore(p("out") + "_fps", partitionCol = Some("pk"))
-    val empty = Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash")
-    val somePk = st.read(spark, empty).select("pk").as[Int].head()
-    val pruned = st.readPruned(spark, empty, Seq(somePk))
+    val st = MediaDedupStream.claimStores(p("out")).head
+    val somePk = st.read(spark).select("pk").as[Int].head()
+    val pruned = st.readPruned(spark, Seq(somePk))
     assert(pruned.collect().forall(_.getInt(0) == somePk))
-    val scans = flattenAll(pruned.queryExecution.executedPlan).collect {
+    val scans = PlanWalk.flattenAll(pruned.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.nonEmpty, "no parquet scan under the pruned read")
@@ -201,16 +190,16 @@ class Round12OpsSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val root = java.nio.file.Paths.get(tmp("empty-fold"))
-    val st = ClaimStore(root.resolve("fps").toString, partitionCol = Some("pk"))
     def empty = Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash")
+    val st = ClaimStore(root.resolve("fps").toString, empty.schema, Some("pk"))
     (1 to ClaimStore.CompactDeltaFiles).foreach(_ => st.append(spark, empty))
     assert(graft.sources.Stage.currentTarget(root.resolve("fps").toString).isDefined,
       "the budget crossing must have folded a generation")
-    assert(st.read(spark, empty).count() == 0L,
+    assert(st.read(spark).count() == 0L,
       "an all-empty store must read as the empty set, not fail schema inference")
-    assert(st.readPruned(spark, empty, Seq(3)).count() == 0L)
+    assert(st.readPruned(spark, Seq(3)).count() == 0L)
     st.append(spark, Seq((3, 42L, 7L)).toDF("pk", "claim_id", "fhash"))
-    assert(st.readPruned(spark, empty, Seq(3)).collect()
+    assert(st.readPruned(spark, Seq(3)).collect()
       .map(_.getLong(1)).toSeq == Seq(42L),
       "a claim appended after the empty fold must be readable")
   }
@@ -385,10 +374,8 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(verdicts()(102L) == ((false, 1L)),
       "a rescale of an ever-claimed vector must reject after restart")
     // the claim store is laid out on the cell probe key (int8 payload)
-    val claims = graft.streaming.ClaimStore(p("out") + "_vfps", Some("pk"))
-      .read(spark, Seq.empty[(Int, Long, Array[Byte], Double, Double)]
-        .toDF("pk", "claim_id", "codes", "vmin", "scale"))
-      .collect()
+    val claims = graft.streaming.EmbedDedupStream.claimStores(p("out")).head
+      .read(spark).collect()
     assert(claims.map(_.getAs[Long]("claim_id")).sorted.toSeq == Seq(1L, 2L),
       "exactly the two novel vectors claim")
     assert(claims.map(_.getInt(0)).distinct.sorted.toSeq == Seq(0, 1),

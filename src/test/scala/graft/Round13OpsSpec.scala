@@ -117,29 +117,29 @@ class Round13OpsSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-retention")
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-    val st = ClaimStore(root.resolve("a").toString, partitionCol = Some("pk"))
+    val textClaims = graft.streaming.CurationStream.TextClaims
+    val st = ClaimStore(root.resolve("a").toString, textClaims, Some("pk"))
     st.appendDelta(Seq((1, "aged", 0L), (2, "fresh", 1L)).toDF("pk", "fp", "epoch"))
-    assert(st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
-    val kept = st.read(spark, empty).select("fp").as[String].collect().toSet
+    assert(st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
+    val kept = st.read(spark).select("fp").as[String].collect().toSet
     // the swept class re-admits (its claim is gone); in-horizon rejects
     assert(kept == Set("fresh"),
       s"sweep must drop exactly the aged class, kept $kept")
     // a claim re-entering AFTER the sweep claims again at a new epoch
     st.append(spark, Seq((1, "aged", 2L)).toDF("pk", "fp", "epoch"))
-    assert(st.read(spark, empty).count() == 2L)
+    assert(st.read(spark).count() == 2L)
     // guardrail: a sweep that would drop over the fraction refuses and
     // leaves the store byte-untouched
-    val st2 = ClaimStore(root.resolve("b").toString, partitionCol = Some("pk"))
+    val st2 = ClaimStore(root.resolve("b").toString, textClaims, Some("pk"))
     st2.appendDelta(Seq((1, "a", 0L), (2, "b", 0L), (3, "c", 0L), (4, "d", 1L))
       .toDF("pk", "fp", "epoch"))
-    st2.compact(spark, empty)
+    st2.compact(spark)
     val before = spark.read.parquet(
       graft.sources.Stage.currentTarget(root.resolve("b").toString).get).count()
     intercept[IllegalStateException] {
-      st2.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.5)
+      st2.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.5)
     }
-    assert(st2.read(spark, empty).count() == before,
+    assert(st2.read(spark).count() == before,
       "an aborted sweep must leave every claim in place")
     graft.sources.TmpStores.deleteRecursively(root)
   }
@@ -150,8 +150,8 @@ class Round13OpsSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-crashrun")
-    val st = ClaimStore(root.resolve("fps").toString, partitionCol = Some("pk"))
-    val empty = Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash")
+    val st = ClaimStore(root.resolve("fps").toString,
+      Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash").schema, Some("pk"))
     def claims(lo: Long, hi: Long) = spark.range(lo, hi)
       .select((col("id") % 97).cast("int").as("pk"),
         col("id").as("claim_id"), (col("id") * 31).as("fhash"))
@@ -166,12 +166,12 @@ class Round13OpsSpec extends AnyFunSuite {
     Seq((5, 424242L, 13L)).toDF("pk", "claim_id", "fhash")
       .coalesce(1).write.mode("overwrite").parquet(dead.toString)
     Files.deleteIfExists(dead.resolve("_SUCCESS"))
-    assert(st.read(spark, empty).filter(col("claim_id") === 424242L).count() == 0L,
+    assert(st.read(spark).filter(col("claim_id") === 424242L).count() == 0L,
       "an uncommitted run must be invisible to readers")
     // one more delta budget crossing folds and sweeps the dead run
     (15 until 23).foreach(b => st.append(spark, claims(b * 100L, (b + 1) * 100L)))
     assert(!Files.isDirectory(dead), "the crashed run dir must be swept")
-    assert(st.read(spark, empty).distinct().count() == 2300L,
+    assert(st.read(spark).distinct().count() == 2300L,
       "every committed claim must survive the folds")
     graft.sources.TmpStores.deleteRecursively(root)
   }
@@ -270,29 +270,18 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(deltas < ClaimStore.CompactDeltaFiles,
       s"consumed funnel deltas must be dropped, got $deltas files")
     // every batch's 4-stage frame survives the folds
-    val empty = Seq.empty[(Long, String, Long, Long)]
-      .toDF("batch_id", "stage", "n_docs", "n_tokens")
-    val rows = ClaimStore(store).read(spark, empty)
+    val rows = CurationStream.funnelStore(p("out")).read(spark)
       .dropDuplicates("batch_id", "stage").collect()
     assert(rows.length == 48,
       s"expected 12 batches x 4 stages, got ${rows.length}")
     // the TEXT claim store now carries the probe-key layout too: a
     // single-key read must partition-prune the folded base — the last
     // gate store to gain the pruned-probe contract
-    val fps = ClaimStore(p("out") + "_fps", partitionCol = Some("pk"))
-    val emptyFps = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-    val somePk = fps.read(spark, emptyFps).select("pk").collect()(0).getInt(0)
-    val pruned = fps.readPruned(spark, emptyFps, Seq(somePk))
+    val fps = CurationStream.claimStores(p("out")).head
+    val somePk = fps.read(spark).select("pk").collect()(0).getInt(0)
+    val pruned = fps.readPruned(spark, Seq(somePk))
     assert(pruned.collect().forall(_.getInt(0) == somePk))
-    def flattenAll(pl: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = pl match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        pl +: flattenAll(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        pl +: flattenAll(q.plan)
-      case _ => pl +: pl.children.flatMap(flattenAll)
-    }
-    val scans = flattenAll(pruned.queryExecution.executedPlan).collect {
+    val scans = PlanWalk.flattenAll(pruned.queryExecution.executedPlan).collect {
       case fsc: org.apache.spark.sql.execution.FileSourceScanExec => fsc
     }
     assert(scans.exists(_.partitionFilters.exists(
@@ -302,7 +291,7 @@ class Round13OpsSpec extends AnyFunSuite {
   }
 
   test("claim migration re-keys every claim to its new cell; twins still reject after") {
-    import graft.streaming.{ClaimStore, EmbedDedupStream}
+    import graft.streaming.EmbedDedupStream
     val spark0 = spark
     import spark0.implicits._
     val root = java.nio.file.Paths.get(
@@ -325,10 +314,8 @@ class Round13OpsSpec extends AnyFunSuite {
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(in),
         universe, cen, p("out"), ckpt).awaitTermination()
     gate(p("in"), p("ckpt"), pinned)
-    def claimPks(): Map[Long, Int] = ClaimStore(p("out") + "_vfps", Some("pk"))
-      .read(spark, Seq.empty[(Int, Long, Array[Byte], Double, Double, Long)]
-        .toDF("pk", "claim_id", "codes", "vmin", "scale", "epoch"))
-      .collect().map(r => r.getAs[Long]("claim_id") -> r.getInt(0)).toMap
+    def claimPks(): Map[Long, Int] = EmbedDedupStream.claimStores(p("out")).head
+      .read(spark).collect().map(r => r.getAs[Long]("claim_id") -> r.getInt(0)).toMap
     assert(claimPks() == Map(1L -> 0, 2L -> 1),
       "pinned assignment: each seed claims its own centroid's cell")
     // refresh SWAPS the centroids — every claim must re-key, or probes

@@ -27,8 +27,8 @@ class Round14OpsSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-sweepcrash")
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-    val st = ClaimStore(root.resolve("a").toString, partitionCol = Some("pk"))
+    val st = ClaimStore(root.resolve("a").toString,
+      graft.streaming.CurationStream.TextClaims, Some("pk"))
     st.appendDelta(Seq((1, "aged", 0L), (2, "fresh", 1L)).toDF("pk", "fp", "epoch"))
     // snapshot the consumed delta files before the sweep eats them
     val deltaDir = root.resolve("a").resolve("delta")
@@ -42,7 +42,7 @@ class Round14OpsSpec extends AnyFunSuite {
       } finally s.close()
     }
     assert(saved.nonEmpty)
-    assert(st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
+    assert(st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
     // reconstruct the EXACT crash-between-swap-and-cleanup state the
     // fold's commit order can leave behind: the swept generation is
     // CURRENT and carries its consumed-inputs manifest, but the consumed
@@ -53,13 +53,13 @@ class Round14OpsSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(gen, ClaimStore.ConsumedManifest),
       saved.map(_._1.toString).mkString("\n"))
     // the aged claim must NOT resurface: readers exclude consumed inputs
-    val kept = st.read(spark, empty).select("fp").as[String].collect().toSet
+    val kept = st.read(spark).select("fp").as[String].collect().toSet
     assert(kept == Set("fresh"),
       s"a crashed sweep resurrected swept claims: $kept")
     // and the next fold FINISHES the crashed cleanup instead of folding
     // the stale deltas back into the base permanently
-    st.compact(spark, empty)
-    val after = st.read(spark, empty).select("fp").as[String].collect().toSet
+    st.compact(spark)
+    val after = st.read(spark).select("fp").as[String].collect().toSet
     assert(after == Set("fresh"),
       s"the fold after a crashed sweep resurrected claims: $after")
     assert(saved.forall { case (p, _) => !Files.exists(p) },
@@ -201,9 +201,7 @@ class Round14OpsSpec extends AnyFunSuite {
     val dropped = CurationStream.sweepFunnel(spark, p("out"),
       minBatchId = 5L, maxDropFrac = 0.6)
     assert(dropped == 5L * 4L, s"5 batches x 4 stages must age out, got $dropped")
-    val batches = graft.streaming.ClaimStore(p("out") + "_funnel")
-      .read(spark, Seq.empty[(Long, String, Long, Long)]
-        .toDF("batch_id", "stage", "n_docs", "n_tokens"))
+    val batches = CurationStream.funnelStore(p("out")).read(spark)
       .select("batch_id").distinct().as[Long].collect().toSet
     assert(batches == (5L to 9L).toSet,
       s"swept batches must disappear, recent stay: $batches")
@@ -211,7 +209,7 @@ class Round14OpsSpec extends AnyFunSuite {
   }
 
   test("curation gate sweepClaims ages text AND perceptual claims together") {
-    import graft.streaming.{ClaimStore, CurationStream}
+    import graft.streaming.CurationStream
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory(
@@ -236,8 +234,7 @@ class Round14OpsSpec extends AnyFunSuite {
     assert(txt == 1L, s"exactly the epoch-0 text class must age out, got $txt")
     assert(med == 8L, s"the epoch-0 asset's 8 pre-exploded band claims must age, got $med")
     assert(vid == 1L, s"exactly the epoch-0 video signature must age, got $vid")
-    val fps = ClaimStore(p("out") + "_fps", partitionCol = Some("pk"))
-      .read(spark, Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch"))
+    val fps = CurationStream.claimStores(p("out")).head.read(spark)
       .select("epoch").distinct().as[Long].collect().toSet
     assert(fps == Set(1L), s"only in-horizon text claims may survive: $fps")
     graft.sources.TmpStores.deleteRecursively(root)

@@ -38,8 +38,7 @@ class Round15OpsSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = tmpRoot("graft-failclean")
     val storeDir = s"failfs://$root/a"
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-    val st = ClaimStore(storeDir, partitionCol = Some("pk"))
+    val st = ClaimStore(storeDir, graft.streaming.CurationStream.TextClaims, Some("pk"))
     st.appendDelta(Seq((1, "aged", 0L), (2, "fresh", 1L)).toDF("pk", "fp", "epoch"))
     FailingDeleteFs.needle = ".parquet"
     FailingDeleteFs.failing.set(true)
@@ -47,27 +46,27 @@ class Round15OpsSpec extends AnyFunSuite {
       // the sweep COMMITS (swap + manifest) but cannot delete its
       // consumed delta — the manifest must survive, keeping the aged
       // claim excluded from reads
-      assert(st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
+      assert(st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.6) == 1L)
       val gen = graft.sources.Stage.currentTarget(storeDir).get
       val manifest = new org.apache.hadoop.fs.Path(gen, ClaimStore.ConsumedManifest)
       assert(graft.sources.Hfs.exists(manifest.toString),
         "the manifest must NOT drop while a consumed input survives a failed delete")
-      assert(st.read(spark, empty).select("fp").as[String].collect().toSet == Set("fresh"))
+      assert(st.read(spark).select("fp").as[String].collect().toSet == Set("fresh"))
       // cross the delta budget: maybeCompact must ABORT (return 0, fold
       // nothing) while the manifest is live — a minor fold reads delta
       // files directly and would commit the excluded consumed delta into
       // a live run, permanently resurrecting the swept claim
       (1 to ClaimStore.CompactDeltaFiles).foreach(i =>
         st.appendDelta(Seq((3, s"new_$i", 2L)).toDF("pk", "fp", "epoch")))
-      assert(st.maybeCompact(spark, empty) == 0L,
+      assert(st.maybeCompact(spark) == 0L,
         "a fold must not proceed while a consumed manifest survives cleanup")
-      assert(st.read(spark, empty).select("fp").as[String].collect().toSet ==
+      assert(st.read(spark).select("fp").as[String].collect().toSet ==
         (1 to ClaimStore.CompactDeltaFiles).map(i => s"new_$i").toSet + "fresh")
     } finally FailingDeleteFs.failing.set(false)
     // deletes heal: the next fold finishes the crashed cleanup, folds the
     // backlog, and the aged claim stays gone for good
-    assert(st.maybeCompact(spark, empty) > 0L)
-    val after = st.read(spark, empty).select("fp").as[String].collect().toSet
+    assert(st.maybeCompact(spark) > 0L)
+    val after = st.read(spark).select("fp").as[String].collect().toSet
     assert(!after.contains("aged"), s"healed fold resurrected a swept claim: $after")
     assert(after.contains("fresh") && after.contains("new_1"))
     val gen2 = graft.sources.Stage.currentTarget(storeDir).get
@@ -82,18 +81,19 @@ class Round15OpsSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val root = tmpRoot("graft-epochmig")
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-    val st = ClaimStore(root.resolve("a").toString, partitionCol = Some("pk"))
+    val st = ClaimStore(root.resolve("a").toString,
+      graft.streaming.CurationStream.TextClaims, Some("pk"))
     // a store written BEFORE the epoch column existed
-    st.appendDelta(Seq((1, "old_a"), (2, "old_b")).toDF("pk", "fp"))
-    val got = st.read(spark, empty).select("fp", "epoch")
+    st.copy(schema = Seq.empty[(Int, String)].toDF("pk", "fp").schema)
+      .appendDelta(Seq((1, "old_a"), (2, "old_b")).toDF("pk", "fp"))
+    val got = st.read(spark).select("fp", "epoch")
       .as[(String, Long)].collect().toMap
     assert(got == Map("old_a" -> 0L, "old_b" -> 0L),
       "pre-epoch rows must backfill epoch 0, not throw")
     // and they are sweepable as the OLDEST cohort
     st.appendDelta(Seq((3, "new_c", 5L)).toDF("pk", "fp", "epoch"))
-    assert(st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.9) == 2L)
-    assert(st.read(spark, empty).select("fp").as[String].collect().toSet == Set("new_c"))
+    assert(st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.9) == 2L)
+    assert(st.read(spark).select("fp").as[String].collect().toSet == Set("new_c"))
     graft.sources.TmpStores.deleteRecursively(root)
   }
 
@@ -143,7 +143,7 @@ class Round15OpsSpec extends AnyFunSuite {
   }
 
   test("maintain(pipeline): one call sweeps every deployed store; a tripped guardrail aborts that store only") {
-    import graft.streaming.{ClaimStore, CurationStream, EmbedDedupStream}
+    import graft.streaming.{CurationStream, DedupGateStream, EmbedDedupStream, MediaDedupStream}
     val spark0 = spark
     import spark0.implicits._
     val root = tmpRoot("graft-maint")
@@ -152,32 +152,34 @@ class Round15OpsSpec extends AnyFunSuite {
     // int8 store, seeded with one aged (epoch 0) and one in-horizon
     // claim each — EXCEPT the video store, which holds only aged claims
     // so its sweep must trip the drop-fraction guardrail
-    ClaimStore(s"${out}_fps", Some("pk")).appendDelta(
+    val Seq(fps, mfps, vmfps) = CurationStream.claimStores(out)
+    fps.appendDelta(
       Seq((1, "aged", 0L), (2, "fresh", 5L)).toDF("pk", "fp", "epoch"))
-    ClaimStore(s"${out}_mfps", Some("pk")).appendDelta(
+    mfps.appendDelta(
       Seq((1, 10L, 111L, 0L), (2, 20L, 222L, 5L))
         .toDF("pk", "claim_id", "fhash", "epoch"))
-    ClaimStore(s"${out}_vmfps", Some("pk")).appendDelta(
+    vmfps.appendDelta(
       Seq((1, 30L, "vh_a", 0L), (2, 31L, "vh_b", 0L))
         .toDF("pk", "claim_id", "vhash", "epoch"))
-    ClaimStore(s"${out}_funnel").appendDelta(
+    CurationStream.funnelStore(out).appendDelta(
       Seq((0L, "00_ingest", 4L, 40L), (3L, "00_ingest", 2L, 20L))
         .toDF("batch_id", "stage", "n_docs", "n_tokens"))
-    ClaimStore(s"${out}_vfps", Some("pk")).appendDelta(
+    EmbedDedupStream.claimStores(out).head.appendDelta(
       Seq((1, 40L, Array[Byte](1, 2), 0.0, 0.1, 0L),
         (2, 41L, Array[Byte](3, 4), 0.0, 0.1, 5L))
         .toDF("pk", "claim_id", "codes", "vmin", "scale", "epoch"))
     // the standalone perceptual gate and the MinHash text-index gate —
     // separate outDirs, as a composed multi-gate deployment would have
     val mOut = root.resolve("mgate").toString
-    ClaimStore(s"${mOut}_fps", Some("pk")).appendDelta(
+    MediaDedupStream.claimStores(mOut).head.appendDelta(
       Seq((1, 50L, 555L, 0L), (2, 51L, 556L, 5L))
         .toDF("pk", "claim_id", "fhash", "epoch"))
     val dOut = root.resolve("dgate").toString
-    ClaimStore(s"${dOut}_bands", Some("bucket")).appendDelta(
+    val Seq(bands, index) = DedupGateStream.claimStores(dOut)
+    bands.appendDelta(
       Seq((1, 60L, 0, 999L, 0L), (2, 61L, 1, 998L, 5L))
         .toDF("bucket", "doc_id", "band", "band_hash", "epoch"))
-    ClaimStore(s"${dOut}_index", Some("dbucket")).appendDelta(
+    index.appendDelta(
       Seq((1, 60L, Seq("a b c"), 0L), (2, 61L, Seq("d e f"), 5L))
         .toDF("dbucket", "doc_id", "sh", "epoch"))
     // plus a continuous-publish snapshot (two batches leave two live

@@ -288,14 +288,37 @@ class Round16OpsSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val storeDir = tmpRoot("graft-conform").resolve("c").toString
-    val st = graft.streaming.ClaimStore(storeDir)
-    st.appendDelta(Seq((1, "fp1")).toDF("pk", "fp"))
-    val empty = Seq.empty[(Int, String, Long, String)]
-      .toDF("pk", "fp", "epoch", "note")
-    val row = st.read(spark, empty)
+    // a level written under the older two-column format …
+    graft.streaming.ClaimStore(storeDir, Seq.empty[(Int, String)].toDF("pk", "fp").schema)
+      .appendDelta(Seq((1, "fp1")).toDF("pk", "fp"))
+    // … read under a schema that has since gained two columns
+    val st = graft.streaming.ClaimStore(storeDir, Seq.empty[(Int, String, Long, String)]
+      .toDF("pk", "fp", "epoch", "note").schema)
+    val row = st.read(spark)
       .select("pk", "epoch", "note").collect().head
     assert(row.getLong(1) == 0L, "numeric backfill stays typed zero")
     assert(row.isNullAt(2), "non-numeric backfill must be null, never a cast \"0\"")
+  }
+
+  test("an append whose frame does not match the store's schema is rejected before any write") {
+    val spark0 = spark
+    import spark0.implicits._
+    val storeDir = tmpRoot("graft-claimshape").resolve("c").toString
+    val st = graft.streaming.ClaimStore(storeDir,
+      graft.streaming.CurationStream.TextClaims, Some("pk"))
+    Seq(
+      "missing column" -> Seq((1, "fp1")).toDF("pk", "fp"),
+      "extra column" -> Seq((1, "fp1", 0L, "x")).toDF("pk", "fp", "epoch", "note"),
+      "wrong type" -> Seq((1, "fp1", "0")).toDF("pk", "fp", "epoch")
+    ).foreach { case (what, claims) =>
+      val e = intercept[IllegalArgumentException](st.appendDelta(claims))
+      assert(e.getMessage.contains(storeDir), s"$what: the error must name the store")
+    }
+    assert(!new java.io.File(storeDir, "delta").exists(),
+      "a rejected append must leave no delta file")
+    // nullability is not part of the match: a nullable key still lands
+    st.appendDelta(Seq((Option(1), "fp1", 0L)).toDF("pk", "fp", "epoch"))
+    assert(st.read(spark).count() == 1L)
   }
 
   test("currentTarget rolls a persistently crashed marker swap forward") {
@@ -321,25 +344,13 @@ class Round16OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "pos", "n_bpe", "tok_str", "vocab", "era")
       .withColumn("shard", col("pos") % 2)
       .write.partitionBy("era", "shard").parquet(store)
-    def flattenAll(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        p +: flattenAll(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        p +: flattenAll(q.plan)
-      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        p +: flattenAll(c.relation.cachedPlan)
-      case cr: org.apache.spark.sql.execution.CommandResultExec =>
-        p +: flattenAll(cr.commandPhysicalPlan)
-      case _ => p +: p.children.flatMap(flattenAll)
-    }
     val writeScanCounts = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Integer]())
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit = {
-        val nodes = flattenAll(qe.executedPlan)
+        val nodes = PlanWalk.flattenAll(qe.executedPlan)
         val isWrite = nodes.exists(
           _.isInstanceOf[org.apache.spark.sql.execution.command.DataWritingCommandExec])
         if (isWrite) writeScanCounts.add(nodes.count(

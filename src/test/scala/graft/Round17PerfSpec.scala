@@ -80,7 +80,7 @@ class Round17PerfSpec extends AnyFunSuite {
       "control: the frame form does crossJoin (plan-shape claim anchor)")
   }
 
-  test("TailCounter.snapshot == (hasBatch, state) pair on the same store") {
+  test("TailCounter.snapshot: redelivery guard and offsets hold across the fold") {
     val root = graft.sources.TmpStores.pidScopedRoot("r17-tailcounter")
     graft.sources.TmpStores.deleteRecursively(root.resolve("t"))
     val dir = root.resolve("t").toString
@@ -92,11 +92,8 @@ class Round17PerfSpec extends AnyFunSuite {
     // committed batch -> None (redelivery guard)
     assert(tc.snapshot(spark, dir, 0L) === None)
     assert(tc.snapshot(spark, dir, 1L) === None)
-    // new batch -> the accreted offsets, matching the split reads
+    // new batch -> the accreted offsets
     assert(tc.snapshot(spark, dir, 2L) === Some((12L, 120L)))
-    assert(tc.hasBatch(spark, dir, 1L))
-    val st = tc.state(spark, dir).collect()(0)
-    assert((st.getLong(0), st.getLong(1)) === ((12L, 120L)))
     // past the delta budget the rows fold through the ClaimStore: the
     // offsets and the redelivery guard read the same across the fold
     val more = 2L until 2L + graft.streaming.ClaimStore.CompactDeltaFiles
@@ -108,7 +105,5 @@ class Round17PerfSpec extends AnyFunSuite {
     (0L to more.last).foreach(b => assert(tc.snapshot(spark, dir, b) === None))
     tc.append(spark, dir, more.last + 1, 3L, 30L)
     assert(tc.snapshot(spark, dir, more.last + 2) === Some((n + 3L, n * 10L + 30L)))
-    val st2 = tc.state(spark, dir).collect()(0)
-    assert((st2.getLong(0), st2.getLong(1)) === ((n + 3L, n * 10L + 30L)))
   }
 }

@@ -260,8 +260,8 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = java.nio.file.Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-claimscale")
-    val st = ClaimStore(root.resolve("fps").toString, partitionCol = Some("pk"))
-    val empty = Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash")
+    val st = ClaimStore(root.resolve("fps").toString,
+      Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash").schema, Some("pk"))
     (0 until 9).foreach { b =>
       st.append(spark, spark.range(b * 11000L, (b + 1) * 11000L)
         .select((col("id") % 2048).cast("int").as("pk"),
@@ -283,7 +283,7 @@ class ScaleRehearsalSpec extends AnyFunSuite {
       (2048 + graft.streaming.ClaimStore.PgDiv - 1) / graft.streaming.ClaimStore.PgDiv
     assert(genFiles == expectedGroups,
       s"expected $expectedGroups one-file-per-group generation files, got $genFiles")
-    val pruned = st.readPruned(spark, empty, Seq(7))
+    val pruned = st.readPruned(spark, Seq(7))
     val got = pruned.collect()
     val expected = (0L until 99000L).count(_ % 2048 == 7)
     assert(got.length == expected && got.forall(_.getInt(0) == 7),
@@ -320,9 +320,8 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = java.nio.file.Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-retscale")
-    val st = ClaimStore(root.resolve("fps").toString, partitionCol = Some("pk"))
-    val empty = Seq.empty[(Int, Long, Long, Long)]
-      .toDF("pk", "claim_id", "fhash", "epoch")
+    val st = ClaimStore(root.resolve("fps").toString, Seq.empty[(Int, Long, Long, Long)]
+      .toDF("pk", "claim_id", "fhash", "epoch").schema, Some("pk"))
     (0 until 9).foreach { b =>
       st.append(spark, spark.range(b * 11000L, (b + 1) * 11000L)
         .select((col("id") % 2048).cast("int").as("pk"),
@@ -331,17 +330,17 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     }
     // epochs 0-4 hold 55k of 99k = 0.556: a 0.5 guardrail refuses …
     intercept[IllegalStateException] {
-      st.retentionSweep(spark, empty, minEpoch = 5L, maxDropFrac = 0.5)
+      st.retentionSweep(spark, minEpoch = 5L, maxDropFrac = 0.5)
     }
-    assert(st.read(spark, empty).distinct().count() == 99000L,
+    assert(st.read(spark).distinct().count() == 99000L,
       "an aborted sweep must leave every claim in place")
     // … and a 0.6 guardrail drops EXACTLY the aged cohort
-    val dropped = st.retentionSweep(spark, empty, minEpoch = 5L, maxDropFrac = 0.6)
+    val dropped = st.retentionSweep(spark, minEpoch = 5L, maxDropFrac = 0.6)
     assert(dropped == 55000L, s"expected 55000 aged claims dropped, got $dropped")
-    assert(st.read(spark, empty).distinct().count() == 44000L)
+    assert(st.read(spark).distinct().count() == 44000L)
     // the swept base still partition-prunes: one key's probe reads ~1 of
     // ~2048 generation files
-    val pruned = st.readPruned(spark, empty, Seq(7))
+    val pruned = st.readPruned(spark, Seq(7))
     val got = pruned.collect()
     val expected = (55000L until 99000L).count(_ % 2048 == 7)
     assert(got.length == expected && got.forall(_.getInt(0) == 7),
@@ -395,8 +394,8 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     import spark0.implicits._
     val root = java.nio.file.Files.createTempDirectory(
       graft.sources.TmpStores.pidScopedRoot("graft-testtmp"), "graft-leveled")
-    val st = ClaimStore(root.resolve("fps").toString, partitionCol = Some("pk"))
-    val empty = Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash")
+    val st = ClaimStore(root.resolve("fps").toString,
+      Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash").schema, Some("pk"))
     def storeBytes(): Long = {
       val w = java.nio.file.Files.walk(root)
       try {
@@ -414,7 +413,7 @@ class ScaleRehearsalSpec extends AnyFunSuite {
         .select((col("id") % 97).cast("int").as("pk"),
           col("id").as("claim_id"), (col("id") * 31).as("fhash")))
       val before = storeBytes()
-      val wrote = st.maybeCompact(spark, empty)
+      val wrote = st.maybeCompact(spark)
       if (wrote > 0L) {
         totalRewritten += wrote
         singleLevelCost += before
@@ -445,11 +444,11 @@ class ScaleRehearsalSpec extends AnyFunSuite {
       st.appendDelta(spark.range(b * 1000L, (b + 1) * 1000L)
         .select((col("id") % 97).cast("int").as("pk"),
           col("id").as("claim_id"), (col("id") * 31).as("fhash")))
-      st.maybeCompact(spark, empty)
+      st.maybeCompact(spark)
     }
     // the store still reads complete and pruned-correct through the levels
-    assert(st.read(spark, empty).distinct().count() == 73000L)
-    val pruned = st.readPruned(spark, empty, Seq(13))
+    assert(st.read(spark).distinct().count() == 73000L)
+    val pruned = st.readPruned(spark, Seq(13))
     val got = pruned.collect()
     val expected = (0L until 73000L).count(_ % 97 == 13)
     assert(got.length == expected && got.forall(_.getInt(0) == 13),
