@@ -3,9 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session recipe shared by the harness mains
-  * (Verify/Bench/Probe), so a conf change cannot silently leave the
+  * (Verify/Bench/Probe/Plans), so a conf change cannot silently leave the
   * tools measuring different configurations. */
 object LocalSession {
+  /** The local master's core count: `SPARK_GRAFT_CPUS`, else every core
+    * this JVM may use. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def apply(cpus: String): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")

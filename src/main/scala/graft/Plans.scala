@@ -19,8 +19,7 @@ object Plans {
     val names = args.drop(2)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSession(cpus)
+    val spark = LocalSession(LocalSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

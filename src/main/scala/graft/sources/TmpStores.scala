@@ -6,7 +6,7 @@ import java.util.Comparator
 /** pid-scoped tmp stores with JVM-exit cleanup — the one shared home for
   * the walk-and-delete loop and the `<tmpdir>/<prefix>-<pid>` root
   * pattern every staging operator uses (staged IVF, pipeline publish,
-  * stream publish, quality-filter stream). pid scoping isolates
+  * the stream fixtures of `graft.streaming.ClaimGate`). pid scoping isolates
   * concurrent graft JVMs (Verify while Bench runs); the exit hook keeps
   * tmp from accumulating across runs.
   */

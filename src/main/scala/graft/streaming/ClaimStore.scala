@@ -62,11 +62,12 @@ object ClaimStore {
 final class GuardrailAbort(msg: String) extends IllegalStateException(msg)
 
 /** The ONE at-least-once verdict READ CONTRACT shared by every streaming
-  * gate ([[CurationStream]], [[MediaDedupStream]], [[DedupGateStream]]):
-  * verdicts append before claims, claims before the checkpoint, so the
+  * gate ([[CurationStream]], [[MediaDedupStream]], [[DedupGateStream]],
+  * [[EmbedDedupStream]]), declared once per gate on its [[ClaimGate]].
+  * Under the gates' batch commit (ordered as [[ClaimGate]] states) the
   * only corrupted delivery is a batch replayed AFTER its claims landed —
   * the replay sees its own winners as already claimed and re-emits them
-  * as duplicates with inflated match stats. Per doc, therefore:
+  * as duplicates with inflated match stats. Per `key`, therefore:
   *
   *  - `anyTrue` (admitted-class booleans): TRUE if ANY delivery said so —
   *    a doc's own claim in the store proves its admission, and quality /
@@ -80,15 +81,18 @@ final class GuardrailAbort(msg: String) extends IllegalStateException(msg)
   *    identical set. (Resolving each stat independently, or with max(),
   *    would stitch values from different deliveries.)
   *  - `carried`: delivery-invariant passthroughs (any delivery's value).
+  *
+  * `columns` is the resolved frame's column order, ordered by `key`.
   */
-private[streaming] object StreamVerdicts {
-  def resolvePerDoc(
-      verdicts: DataFrame,
-      anyTrue: Seq[String] = Nil,
-      everyTrue: Seq[String] = Nil,
-      preClaim: Seq[String] = Nil,
-      carried: Seq[String] = Nil,
-      key: String = "doc_id"): DataFrame = {
+private[streaming] final case class StreamVerdicts(
+    columns: Seq[String],
+    anyTrue: Seq[String] = Nil,
+    everyTrue: Seq[String] = Nil,
+    preClaim: Seq[String] = Nil,
+    carried: Seq[String] = Nil,
+    key: String = "doc_id") {
+
+  def resolvePerDoc(verdicts: DataFrame): DataFrame = {
     val aggs =
       carried.map(c => min(col(c)).as(c)) ++
         anyTrue.map(c => max(col(c)).as(c)) ++
@@ -99,13 +103,18 @@ private[streaming] object StreamVerdicts {
     val out = preClaim.foldLeft(grouped)((df, c) =>
       df.withColumn(c, col(s"_pre.$c")))
     (if (preClaim.isEmpty) out else out.drop("_pre")).orderBy(key)
+      .select(columns.map(col): _*)
   }
+
+  def read(spark: SparkSession, dir: String): DataFrame =
+    resolvePerDoc(spark.read.parquet(dir))
 }
 
 /** The ONE generational side-store discipline shared by every streaming
   * gate — [[CurationStream]]'s exact-md5 claim classes,
-  * [[MediaDedupStream]]'s perceptual fingerprints, and
-  * [[DedupGateStream]]'s admitted shingle index all accrete through this
+  * [[MediaDedupStream]]'s perceptual fingerprints,
+  * [[DedupGateStream]]'s admitted shingle index and
+  * [[EmbedDedupStream]]'s int8 vector claims all accrete through this
   * type, so a long-running stream can never regrow the
   * one-file-per-batch-forever / O(store)-shuffle-per-batch shape.
   *
@@ -338,15 +347,11 @@ final case class ClaimStore(dir: String, schema: StructType,
     * leveled policy once the delta budget is crossed. Call BEFORE the
     * stream checkpoint commits — the at-least-once claim discipline.
     *
-    * A gate appending to SEVERAL stores in one batch must use
-    * [[appendDelta]] for every store first and [[maybeCompact]] only
-    * after the last write: a compaction deletes the consumed delta
-    * files, and a later write whose lineage re-reads this batch's store
-    * scan (Spark recomputes lazily; a cache hit is not guaranteed under
-    * foreachBatch) would resolve vanished paths — observed as
-    * FAILED_READ_FILE on the second store's append. With every write
-    * done before the first fold, recomputation only ever sees files
-    * that still exist. */
+    * A gate appending to SEVERAL stores in one batch goes through
+    * [[ClaimGate.commit]] instead, which lands every [[appendDelta]]
+    * before the first [[maybeCompact]] (a fold deletes the delta files a
+    * lazily recomputed write may still read — observed as
+    * FAILED_READ_FILE on a second store's append). */
   def append(spark: SparkSession, claims: DataFrame): Unit = {
     appendDelta(claims)
     maybeCompact(spark)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{DedupOps, MultimodalOps, TextOps}
@@ -41,17 +41,9 @@ import scala.jdk.CollectionConverters._
   * per-batch probes read PARTITION-PRUNED to the keys the batch's own
   * fingerprints hash to. A crash at any point only leaves harmless
   * duplicates that the distinct() read resolves (claims are a monotone
-  * set). At-least-once
-  * caveat: quality and
-  * contamination verdicts re-derive identically on redelivery, but a
-  * batch replayed AFTER its claims landed (crash between the claim
-  * append and the checkpoint commit) sees its own winners as already
-  * claimed and re-emits them as duplicates — so the read side must
-  * resolve per doc with claim-respecting aggregation (admitted =
-  * ANY delivery admitted, is_dup = EVERY delivery duplicated; a doc's
-  * own claim in the store proves its admission), not an arbitrary
-  * first-row pick. [[curationStreamQuery]] reads back exactly that
-  * way. */
+  * set). Each batch commits as [[ClaimGate]] orders it, and the read
+  * side resolves replays per doc under the gate's [[StreamVerdicts]]
+  * contract, not by an arbitrary first-row pick. */
 object CurationStream {
 
   /** Text claim rows: pk = the fingerprint's probe key, `epoch` the
@@ -79,12 +71,31 @@ object CurationStream {
   private def fpPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (crc32(c) % 2048).cast("int")
 
-  /** The gate's claim stores: (text exact-md5 classes, audio perceptual
-    * fingerprints, video signatures). */
-  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
-    ClaimStore(s"${outDir}_fps", TextClaims, Some("pk")),
-    ClaimStore(s"${outDir}_mfps", MultimodalOps.BandedClaims, Some("pk")),
-    ClaimStore(s"${outDir}_vmfps", VideoClaims, Some("pk")))
+  /** The gate's claim stores — (text exact-md5 classes, audio perceptual
+    * fingerprints, video signatures) — and the text verdict read
+    * contract: a doc's own claim proves its admission, so admitted and
+    * the re-derived quality/contamination flags hold if ANY delivery
+    * said so, and is_dup only if EVERY delivery did. */
+  private val Gate = ClaimGate(
+    outDir => Seq(
+      ClaimStore(s"${outDir}_fps", TextClaims, Some("pk")),
+      ClaimStore(s"${outDir}_mfps", MultimodalOps.BandedClaims, Some("pk")),
+      ClaimStore(s"${outDir}_vmfps", VideoClaims, Some("pk"))),
+    StreamVerdicts(Seq("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted"),
+      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
+      everyTrue = Seq("is_dup")))
+
+  /** The media gate's verdict read contract: the text contract plus the
+    * property flags (any delivery) and the perceptual duplicate flags
+    * (every delivery). */
+  private val MediaVerdicts = StreamVerdicts(
+    Seq("doc_id", "keep_quality", "is_dup", "is_contaminated",
+      "img_ok", "audio_ok", "media_dup", "video_ok", "video_dup", "admitted"),
+    anyTrue = Seq("keep_quality", "is_contaminated", "img_ok",
+      "audio_ok", "video_ok", "admitted"),
+    everyTrue = Seq("is_dup", "media_dup", "video_dup"))
+
+  def claimStores(outDir: String): Seq[ClaimStore] = Gate.claimStores(outDir)
 
   /** The per-batch funnel store; its retention epoch is the batch id
     * (see [[sweepFunnel]]). */
@@ -145,18 +156,16 @@ object CurationStream {
     }
   }
 
-  /** RETENTION for the gate's claim stores — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline across the text exact-md5
-    * classes AND (when the media gate ran) the audio/video perceptual
-    * stores, each under its own guardrail: a class/asset whose every
-    * claim aged out re-admits on its next arrival, in-horizon claims
-    * keep rejecting. Run between stream runs (offline, like
-    * compaction). Returns (text, media, video) claim rows dropped — a
-    * store that never existed sweeps vacuously to 0. */
+  /** RETENTION for the gate's claim stores — the text exact-md5 classes
+    * AND (when the media gate ran) the audio/video perceptual stores,
+    * each under its own guardrail: a class/asset whose every claim aged
+    * out re-admits on its next arrival, in-horizon claims keep
+    * rejecting. Run between stream runs (offline, like compaction).
+    * Returns (text, media, video) claim rows dropped — a store that
+    * never existed sweeps vacuously to 0. */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): (Long, Long, Long) = {
-    val Seq(text, media, video) =
-      claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac))
+    val Seq(text, media, video) = Gate.sweepClaims(spark, outDir, minEpoch, maxDropFrac)
     (text, media, video)
   }
 
@@ -176,7 +185,7 @@ object CurationStream {
     * guardrail aborts its store only. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double, minBatchId: Long): Seq[Maintenance.Action] =
-    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac) ++
+    Gate.maintenanceActions(spark, outDir, minEpoch, maxDropFrac) ++
       Maintenance.sweepActions(spark, Seq(funnelStore(outDir)), minBatchId, maxDropFrac)
 
   private def vhashPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -244,424 +253,367 @@ object CurationStream {
     val spark = incoming.sparkSession
     val Seq(textStore, mediaStore, videoStore) = claimStores(outDir)
     val funnel = funnelStore(outDir)
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch
-          // spread the quality/hash/shingle pass across cores: an
-          // arriving micro-batch carries its SOURCE file partitioning
-          // (the fixture's one file = 1-4 partitions), and the per-word
-          // rlike/aggregate chain is the batch's compute-heavy text pass
-          // (Probe: a 6 s four-task stage at sf0.1). One narrow shuffle
-          // of the raw batch unlocks full parallelism for it (guide
-          // §2.5 input skew: repartition immediately after the read)
+    Gate.run(incoming, outDir, checkpoint, epochBase) { mb =>
+      val batch = mb.frame
+      val b = mb.persist(batch
+        // spread the quality/hash/shingle pass across cores: an
+        // arriving micro-batch carries its SOURCE file partitioning
+        // (the fixture's one file = 1-4 partitions), and the per-word
+        // rlike/aggregate chain is the batch's compute-heavy text pass
+        // (Probe: a 6 s four-task stage at sf0.1). One narrow shuffle
+        // of the raw batch unlocks full parallelism for it (guide
+        // §2.5 input skew: repartition immediately after the read)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .withColumn("words", TextOps.tokens(col("text")))
+        .withColumn("n_words", size(col("words")).cast("long"))
+        .withColumn("sum_len",
+          aggregate(col("words"), lit(0L), (a, w) => a + length(w).cast("long")))
+        .withColumn("n_symbol",
+          size(filter(col("words"), w => w === "#" || w === "...")).cast("long"))
+        .withColumn("n_alpha",
+          size(filter(col("words"), w => w.rlike("[A-Za-z]"))).cast("long"))
+        .withColumn("n_required",
+          size(filter(lit(TextOps.EnMarkers.toArray),
+            m => array_contains(col("words"), m))).cast("long"))
+        .withColumn("keep_quality",
+          col("n_words") >= 10L && col("n_words") <= 1000L &&
+            col("sum_len") >= col("n_words") * 3L &&
+            col("sum_len") <= col("n_words") * 10L &&
+            col("n_symbol") * 10L <= col("n_words") &&
+            col("n_alpha") * 5L >= col("n_words") * 4L &&
+            col("n_required") >= 2L)
+        .withColumn("toks", col("words"))
+        .withColumn("sh", DedupOps.shingles(5))
+        .select(col("doc_id"), md5(col("text")).as("fp"),
+          col("keep_quality"), col("sh"), col("n_words")))
+      // STREAMING CROSS-MODAL gate: each doc's media assets decode
+      // partition-locally into per-doc admission flags (image
+      // decode-fidelity/dims, audio duration/signal, video
+      // frame-count/resolution/gray-fidelity) plus the audio loudness
+      // hash and the video temporal-gradient signature, which probe
+      // their ACCRETING claim stores — audio with the MediaDedupStream
+      // banded-Hamming discipline, video with the radius-0 exact
+      // equi-join — so a streamed doc whose asset perceptually
+      // duplicates anything an earlier batch carried is excised
+      // BEFORE the store append.
+      val media: Option[DataFrame] = if (!mediaGate) None else Some(mb.persist {
+        import graft.operators.MultimodalOps.{AudioCodec, MediaCodec, VideoCodec}
+        val spark1 = spark
+        import spark1.implicits._
+        batch.select(col("doc_id")).as[Long]
           .repartition(spark.sparkContext.defaultParallelism)
-          .withColumn("words", TextOps.tokens(col("text")))
-          .withColumn("n_words", size(col("words")).cast("long"))
-          .withColumn("sum_len",
-            aggregate(col("words"), lit(0L), (a, w) => a + length(w).cast("long")))
-          .withColumn("n_symbol",
-            size(filter(col("words"), w => w === "#" || w === "...")).cast("long"))
-          .withColumn("n_alpha",
-            size(filter(col("words"), w => w.rlike("[A-Za-z]"))).cast("long"))
-          .withColumn("n_required",
-            size(filter(lit(TextOps.EnMarkers.toArray),
-              m => array_contains(col("words"), m))).cast("long"))
-          .withColumn("keep_quality",
-            col("n_words") >= 10L && col("n_words") <= 1000L &&
-              col("sum_len") >= col("n_words") * 3L &&
-              col("sum_len") <= col("n_words") * 10L &&
-              col("n_symbol") * 10L <= col("n_words") &&
-              col("n_alpha") * 5L >= col("n_words") * 4L &&
-              col("n_required") >= 2L)
-          .withColumn("toks", col("words"))
-          .withColumn("sh", DedupOps.shingles(5))
-          .select(col("doc_id"), md5(col("text")).as("fp"),
-            col("keep_quality"), col("sh"), col("n_words"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // STREAMING CROSS-MODAL gate: each doc's media assets decode
-        // partition-locally into per-doc admission flags (image
-        // decode-fidelity/dims, audio duration/signal, video
-        // frame-count/resolution/gray-fidelity) plus the audio loudness
-        // hash and the video temporal-gradient signature, which probe
-        // their ACCRETING claim stores — audio with the MediaDedupStream
-        // banded-Hamming discipline, video with the radius-0 exact
-        // equi-join — so a streamed doc whose asset perceptually
-        // duplicates anything an earlier batch carried is excised
-        // BEFORE the store append.
-        val media: Option[DataFrame] = if (!mediaGate) None else Some {
-          import graft.operators.MultimodalOps.{AudioCodec, MediaCodec, VideoCodec}
-          val spark1 = spark
-          import spark1.implicits._
-          val m = batch.select(col("doc_id")).as[Long]
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapPartitions(_.map { id =>
-              val im = MediaCodec.decode(id, MediaCodec.encode(id))
-              val ab = AudioCodec.encode(id)
-              // ONE audio decode and ONE video decode per asset: the
-              // property gate and the perceptual hash share the decoded
-              // PCM/frames (ahashOf/vhashOf on the raw bytes walked each
-              // container a second time — pure per-task waste, guide
-              // §1.2 step 2; arithmetic unchanged, parity spec-pinned)
-              val (au, samples) = AudioCodec.decodeMetaAndSamples(id, ab)
-              val vb = VideoCodec.encode(id)
-              val vfr = VideoCodec.decodeFrames(id, vb)
-              val expected = (28 + (id * 37) % 200).toInt
-              val pxOk =
-                if (im.format == "png") im.pxGray == expected
-                else math.abs(im.pxGray - expected) <= 8
-              (id,
-                pxOk && im.width >= 32 && im.height >= 24,
-                au.durationUs >= 12000L && au.peak >= 200,
-                AudioCodec.ahashOfSamples(id, samples),
-                vfr.head.gray == VideoCodec.frameGrayOf(id, 0) &&
-                  vfr.length >= 4 && vfr.head.width >= 20 && vfr.head.height >= 16,
-                VideoCodec.vhashOfGrays(id, vfr.map(_.gray)))
-            })
-            .toDF("doc_id", "img_ok", "audio_ok", "ahash", "video_ok", "vhash")
+          .mapPartitions(_.map { id =>
+            val im = MediaCodec.decode(id, MediaCodec.encode(id))
+            val ab = AudioCodec.encode(id)
+            // ONE audio decode and ONE video decode per asset: the
+            // property gate and the perceptual hash share the decoded
+            // PCM/frames (ahashOf/vhashOf on the raw bytes walked each
+            // container a second time — pure per-task waste, guide
+            // §1.2 step 2; arithmetic unchanged, parity spec-pinned)
+            val (au, samples) = AudioCodec.decodeMetaAndSamples(id, ab)
+            val vb = VideoCodec.encode(id)
+            val vfr = VideoCodec.decodeFrames(id, vb)
+            val expected = (28 + (id * 37) % 200).toInt
+            val pxOk =
+              if (im.format == "png") im.pxGray == expected
+              else math.abs(im.pxGray - expected) <= 8
+            (id,
+              pxOk && im.width >= 32 && im.height >= 24,
+              au.durationUs >= 12000L && au.peak >= 200,
+              AudioCodec.ahashOfSamples(id, samples),
+              vfr.head.gray == VideoCodec.frameGrayOf(id, 0) &&
+                vfr.length >= 4 && vfr.head.width >= 20 && vfr.head.height >= 16,
+              VideoCodec.vhashOfGrays(id, vfr.map(_.gray)))
+          })
+          .toDF("doc_id", "img_ok", "audio_ok", "ahash", "video_ok", "vhash")
+      })
+      // fill the two persisted per-batch passes CONCURRENTLY (guide
+      // §2.6), and let each fill BE its touched-probe-key collect:
+      // the distinct-pk collect consumes every cached partition, so
+      // the separate count() fills paid a whole extra job per pass
+      // (three jobs per batch: b.count, m.count, plus the text pk
+      // collect). The text pass and the codec pass stay independent
+      // jobs over the same arriving batch, and the codec pass
+      // dominates — overlapping them hides the text pass behind the
+      // decodes. The probe + claim sides reuse the caches.
+      val probesOf = media.map { m =>
+        val probes = MultimodalOps.probeBands(
+          m.select(col("doc_id"), col("ahash").as("h_t")), MultimodalOps.Modality.Audio.radius)
+        val vProbes = m.select(col("doc_id"), col("vhash"))
+          .withColumn("pk", vhashPk(col("vhash")))
+        (probes, vProbes)
+      }
+      var touchedFps: Seq[Int] = Seq.empty
+      var touchedA: Seq[Int] = Seq.empty
+      var touchedV: Seq[Int] = Seq.empty
+      StreamPar.runAll(Seq(() => {
+        touchedFps = b.select(fpPk(col("fp")).as("pk")).distinct()
+          .collect().map(_.getInt(0)).toSeq // fills b as a side effect
+      }) ++ probesOf.toSeq.map { case (probes, vProbes) => () => {
+        touchedA = probes.select("pk").distinct()
+          .collect().map(_.getInt(0)).toSeq // fills m as a side effect
+        touchedV = vProbes.select("pk").distinct()
+          .collect().map(_.getInt(0)).toSeq // over the warm m cache
+      }})
+      val mediaVerdict: Option[DataFrame] = media.map { m =>
+        val (probes, vProbes) = probesOf.get
+        val matches = MultimodalOps.verifiedPairs(probes,
+          mediaStore.readPruned(spark, touchedA),
+          MultimodalOps.Modality.Audio.radius)
+          .groupBy("doc_id").agg(count(lit(1)).as("_mm"))
+        // VIDEO probe — the third modality: the temporal-gradient
+        // signature is radius-0 (transforms cancel structurally), so
+        // an incoming asset duplicates exactly the stored signatures
+        // it EQUALS — a pk-pruned read followed by an exact equi-join
+        val vMatches = vProbes
+          .join(videoStore.readPruned(spark, touchedV)
+            .select(col("pk"), col("claim_id"), col("vhash")),
+            Seq("pk", "vhash"))
+          .select("doc_id", "claim_id")
+          .dropDuplicates("doc_id", "claim_id")
+          .groupBy("doc_id").agg(count(lit(1)).as("_vm"))
+        m.join(matches, Seq("doc_id"), "left")
+          .join(vMatches, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("img_ok"), col("audio_ok"),
+            col("_mm").isNotNull.as("media_dup"), col("ahash"),
+            col("video_ok"), col("_vm").isNotNull.as("video_dup"), col("vhash"))
+      }
+      val contaminated = b.filter(col("keep_quality"))
+        .select(col("doc_id"), explode(col("sh")).as("g"))
+        .join(broadcast(evalSh), Seq("g"))
+        .groupBy("doc_id")
+        .agg(countDistinct(col("g")).as("n_overlap"))
+        .filter(col("n_overlap") >= 8)
+        .select(col("doc_id"), lit(true).as("is_cont"))
+      val winBatch = min(when(col("keep_quality") && !col("already_claimed"),
+        col("doc_id"))).over(Window.partitionBy("fp"))
+      // dedup probe PARTITION-PRUNED to the fingerprint keys this
+      // batch hashes to (collected above, riding the fill job) —
+      // the store scan never exceeds the touched pk directories
+      // plus the small levels, the same contract as the
+      // perceptual/embedding stores
+      val claimedB = textStore.readPruned(spark, touchedFps)
+        .select("fp").distinct()
+      val textVerdict = b
+        .join(claimedB.withColumn("already_claimed", lit(true)),
+          Seq("fp"), "left")
+        .withColumn("already_claimed",
+          coalesce(col("already_claimed"), lit(false)))
+        .withColumn("is_dup",
+          col("keep_quality") &&
+            (col("already_claimed") || col("doc_id") =!= winBatch))
+        .join(broadcast(contaminated), Seq("doc_id"), "left")
+        .withColumn("is_contaminated",
+          coalesce(col("is_cont"), lit(false)))
+        .withColumn("admitted",
+          col("keep_quality") && !col("is_dup") && !col("is_contaminated"))
+        // n_words rides INSIDE the verdict frame so the funnel and
+        // the curated-store append aggregate the one materialized
+        // pass instead of re-joining the batch per consumer
+        .select(col("doc_id"), col("fp"), col("n_words"),
+          col("keep_quality"), col("is_dup"), col("is_contaminated"),
+          col("admitted"))
+      // with the media gate on, a text-admitted doc is still excised
+      // when an asset fails a property gate or perceptually
+      // duplicates an earlier batch's asset
+      val verdict = mb.persist(mediaVerdict.fold(textVerdict)(mv =>
+        textVerdict.join(mv.drop("ahash", "vhash"), Seq("doc_id"))
+          .withColumn("admitted",
+            col("admitted") && col("img_ok") && col("audio_ok") &&
+              !col("media_dup") && col("video_ok") && !col("video_dup"))))
+      verdict.count()
+      // The verdict write, the funnel frame and the training-store
+      // appends are INDEPENDENT consumers of the one persisted verdict
+      // pass, committed together (ClaimGate's phase 1): each small
+      // job's task tail back-fills with the next job's tasks. Each is
+      // replay-safe whatever subset a crash leaves behind (verdict dups
+      // resolve per doc, the funnel by tuple-max, the stores by the
+      // TailCounter redelivery guard).
+
+      // PER-BATCH FUNNEL — the drop-accounting the batch build
+      // emits (curationMultimodal's stage discipline), one frame
+      // per micro-batch: text stages always; the three media
+      // property stages and the perceptual-novelty stage when the
+      // media gate is on. One aggregation straight over the
+      // already-materialized verdict pass (n_words rides in the
+      // verdict) — no per-batch re-join, no second shuffle.
+      // At-least-once: a REPLAYED batch sees its own claims and
+      // undercounts the dedup-and-after stages, so the read side
+      // resolves per (batch_id, stage) by the tuple-MAX delivery
+      // (the original; counts only shrink on replay) — the
+      // StreamVerdicts discipline on aggregates.
+      val writeFunnel: () => Unit = () => {
+        val fv = verdict
+        def cnt(c: org.apache.spark.sql.Column) =
+          sum(when(c, 1L).otherwise(0L))
+        def tok(c: org.apache.spark.sql.Column) =
+          sum(when(c, col("n_words")).otherwise(0L))
+        val r1 = col("keep_quality")
+        val r2 = r1 && !col("is_dup")
+        val r3 = r2 && !col("is_contaminated")
+        val one =
+          if (mediaGate) {
+            val s4 = r3 && col("img_ok")
+            val s5 = s4 && col("audio_ok")
+            val s6 = s5 && col("video_ok")
+            val s7 = s6 && !col("media_dup") && !col("video_dup")
+            fv.agg(count(lit(1)).as("d0"), sum(col("n_words")).as("t0"),
+              cnt(r1).as("d1"), tok(r1).as("t1"),
+              cnt(r2).as("d2"), tok(r2).as("t2"),
+              cnt(r3).as("d3"), tok(r3).as("t3"),
+              cnt(s4).as("d4"), tok(s4).as("t4"),
+              cnt(s5).as("d5"), tok(s5).as("t5"),
+              cnt(s6).as("d6"), tok(s6).as("t6"),
+              cnt(s7).as("d7"), tok(s7).as("t7"))
+              .select(expr(
+                """stack(8,
+                     '00_ingest', d0, t0,
+                     '01_quality', d1, t1,
+                     '02_dedup', d2, t2,
+                     '03_decontam', d3, t3,
+                     '04_media_image', d4, t4,
+                     '05_media_audio', d5, t5,
+                     '06_media_video', d6, t6,
+                     '07_media_novel', d7, t7) AS (stage, n_docs, n_tokens)"""))
+          } else
+            fv.agg(count(lit(1)).as("d0"), sum(col("n_words")).as("t0"),
+              cnt(r1).as("d1"), tok(r1).as("t1"),
+              cnt(r2).as("d2"), tok(r2).as("t2"),
+              cnt(r3).as("d3"), tok(r3).as("t3"))
+              .select(expr(
+                """stack(4,
+                     '00_ingest', d0, t0,
+                     '01_quality', d1, t1,
+                     '02_dedup', d2, t2,
+                     '03_decontam', d3, t3) AS (stage, n_docs, n_tokens)"""))
+        // the funnel store is batch-grain METADATA that would
+        // otherwise accrete one file per batch forever — it goes
+        // through the same generational ClaimStore fold as the
+        // claim stores (delta per batch, fold at the budget);
+        // replay rows differing from the original delivery both
+        // survive the fold and resolve at read (tuple-max)
+        funnel.appendDelta(
+          one.withColumn("batch_id", lit(mb.id))
+            .select("batch_id", "stage", "n_docs", "n_tokens"))
+      }
+      // incremental curated store: this batch's admitted docs rank
+      // among themselves by the md5 training order, offset by the
+      // store's current size, and append as shard TAILS — no
+      // existing shard file is rewritten (byte-identity is
+      // spec-asserted). Lands before the claims (see ClaimGate).
+      // The counter's redelivery-guard key is the MONOTONE BUILD
+      // EPOCH (`mb.epoch`), not the raw batch id: a restarted stream's
+      // batch ids begin at 0 again, and a raw-id guard would mistake
+      // the new run's first batch for a replay of the old one and
+      // silently skip its append.
+      val writeStore: Seq[() => Unit] = storeDir.toSeq.map { sd => () =>
+        val tail = s"${sd}_tail"
+        // ONE counter read answers the redelivery guard AND the
+        // offset (was a hasBatch read plus a second state read
+        // broadcast-crossJoined into the plan); the offset rides
+        // as a plan literal — two fewer jobs per batch
+        TailCounter.snapshot(spark, tail, mb.epoch).foreach { case (nOldDocs, _) =>
+          val admitted = verdict.filter(col("admitted"))
+            .select("doc_id", "n_words")
             .persist(StorageLevel.MEMORY_AND_DISK)
-          m
-        }
-        // fill the two persisted per-batch passes CONCURRENTLY (guide
-        // §2.6), and let each fill BE its touched-probe-key collect:
-        // the distinct-pk collect consumes every cached partition, so
-        // the separate count() fills paid a whole extra job per pass
-        // (three jobs per batch: b.count, m.count, plus the text pk
-        // collect). The text pass and the codec pass stay independent
-        // jobs over the same arriving batch, and the codec pass
-        // dominates — overlapping them hides the text pass behind the
-        // decodes. The probe + claim sides reuse the caches.
-        val probesOf = media.map { m =>
-          val probes = MultimodalOps.probeBands(
-            m.select(col("doc_id"), col("ahash").as("h_t")), MultimodalOps.Modality.Audio.radius)
-          val vProbes = m.select(col("doc_id"), col("vhash"))
-            .withColumn("pk", vhashPk(col("vhash")))
-          (probes, vProbes)
-        }
-        var touchedFps: Seq[Int] = Seq.empty
-        var touchedA: Seq[Int] = Seq.empty
-        var touchedV: Seq[Int] = Seq.empty
-        StreamPar.runAll(Seq(() => {
-          touchedFps = b.select(fpPk(col("fp")).as("pk")).distinct()
-            .collect().map(_.getInt(0)).toSeq // fills b as a side effect
-        }) ++ probesOf.toSeq.map { case (probes, vProbes) => () => {
-          touchedA = probes.select("pk").distinct()
-            .collect().map(_.getInt(0)).toSeq // fills m as a side effect
-          touchedV = vProbes.select("pk").distinct()
-            .collect().map(_.getInt(0)).toSeq // over the warm m cache
-        }})
-        val mediaVerdict: Option[DataFrame] = media.map { m =>
-          val (probes, vProbes) = probesOf.get
-          val matches = MultimodalOps.verifiedPairs(probes,
-            mediaStore.readPruned(spark, touchedA),
-            MultimodalOps.Modality.Audio.radius)
-            .groupBy("doc_id").agg(count(lit(1)).as("_mm"))
-          // VIDEO probe — the third modality: the temporal-gradient
-          // signature is radius-0 (transforms cancel structurally), so
-          // an incoming asset duplicates exactly the stored signatures
-          // it EQUALS — a pk-pruned read followed by an exact equi-join
-          val vMatches = vProbes
-            .join(videoStore.readPruned(spark, touchedV)
-              .select(col("pk"), col("claim_id"), col("vhash")),
-              Seq("pk", "vhash"))
-            .select("doc_id", "claim_id")
-            .dropDuplicates("doc_id", "claim_id")
-            .groupBy("doc_id").agg(count(lit(1)).as("_vm"))
-          m.join(matches, Seq("doc_id"), "left")
-            .join(vMatches, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("img_ok"), col("audio_ok"),
-              col("_mm").isNotNull.as("media_dup"), col("ahash"),
-              col("video_ok"), col("_vm").isNotNull.as("video_dup"), col("vhash"))
-        }
-        try {
-          val contaminated = b.filter(col("keep_quality"))
-            .select(col("doc_id"), explode(col("sh")).as("g"))
-            .join(broadcast(evalSh), Seq("g"))
-            .groupBy("doc_id")
-            .agg(countDistinct(col("g")).as("n_overlap"))
-            .filter(col("n_overlap") >= 8)
-            .select(col("doc_id"), lit(true).as("is_cont"))
-          val winBatch = min(when(col("keep_quality") && !col("already_claimed"),
-            col("doc_id"))).over(Window.partitionBy("fp"))
-          // dedup probe PARTITION-PRUNED to the fingerprint keys this
-          // batch hashes to (collected above, riding the fill job) —
-          // the store scan never exceeds the touched pk directories
-          // plus the small levels, the same contract as the
-          // perceptual/embedding stores
-          val claimedB = textStore.readPruned(spark, touchedFps)
-            .select("fp").distinct()
-          val textVerdict = b
-            .join(claimedB.withColumn("already_claimed", lit(true)),
-              Seq("fp"), "left")
-            .withColumn("already_claimed",
-              coalesce(col("already_claimed"), lit(false)))
-            .withColumn("is_dup",
-              col("keep_quality") &&
-                (col("already_claimed") || col("doc_id") =!= winBatch))
-            .join(broadcast(contaminated), Seq("doc_id"), "left")
-            .withColumn("is_contaminated",
-              coalesce(col("is_cont"), lit(false)))
-            .withColumn("admitted",
-              col("keep_quality") && !col("is_dup") && !col("is_contaminated"))
-            // n_words rides INSIDE the verdict frame so the funnel and
-            // the curated-store append aggregate the one materialized
-            // pass instead of re-joining the batch per consumer
-            .select(col("doc_id"), col("fp"), col("n_words"),
-              col("keep_quality"), col("is_dup"), col("is_contaminated"),
-              col("admitted"))
-          // with the media gate on, a text-admitted doc is still excised
-          // when an asset fails a property gate or perceptually
-          // duplicates an earlier batch's asset
-          val verdict = mediaVerdict.fold(textVerdict)(mv =>
-            textVerdict.join(mv.drop("ahash", "vhash"), Seq("doc_id"))
-              .withColumn("admitted",
-                col("admitted") && col("img_ok") && col("audio_ok") &&
-                  !col("media_dup") && col("video_ok") && !col("video_dup")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          verdict.count()
-          try {
-            // PHASE-PARALLEL batch commit (guide §2.6): the verdict
-            // write, the funnel frame, and the training-store appends
-            // are INDEPENDENT consumers of the one persisted verdict
-            // pass, writing to disjoint dirs — submitted together so
-            // each small job's task tail back-fills with the next
-            // job's tasks instead of paying every straggler tail in
-            // sequence. The ordering that must survive is BETWEEN
-            // phases, not within them: every consumer lands before any
-            // claim append (a crash after claims but before a consumer
-            // would lose that consumer's rows forever — the replay
-            // sees its winners already claimed), and claims land
-            // before the folds (write-all-then-fold-all). Each
-            // consumer is individually replay-safe whatever subset a
-            // crash leaves behind (verdict dups resolve per-doc, the
-            // funnel by tuple-max, the stores by the TailCounter
-            // redelivery guard), so concurrency adds no new crash
-            // schedule.
-            val writeVerdict: () => Unit = () =>
-              verdict.drop("fp", "n_words")
-                .write.mode(SaveMode.Append).parquet(outDir)
-            // PER-BATCH FUNNEL — the drop-accounting the batch build
-            // emits (curationMultimodal's stage discipline), one frame
-            // per micro-batch: text stages always; the three media
-            // property stages and the perceptual-novelty stage when the
-            // media gate is on. One aggregation straight over the
-            // already-materialized verdict pass (n_words rides in the
-            // verdict) — no per-batch re-join, no second shuffle.
-            // At-least-once: a REPLAYED batch sees its own claims and
-            // undercounts the dedup-and-after stages, so the read side
-            // resolves per (batch_id, stage) by the tuple-MAX delivery
-            // (the original; counts only shrink on replay) — the
-            // StreamVerdicts discipline on aggregates.
-            val writeFunnel: () => Unit = () => {
-              val fv = verdict
-              def cnt(c: org.apache.spark.sql.Column) =
-                sum(when(c, 1L).otherwise(0L))
-              def tok(c: org.apache.spark.sql.Column) =
-                sum(when(c, col("n_words")).otherwise(0L))
-              val r1 = col("keep_quality")
-              val r2 = r1 && !col("is_dup")
-              val r3 = r2 && !col("is_contaminated")
-              val one =
-                if (mediaGate) {
-                  val s4 = r3 && col("img_ok")
-                  val s5 = s4 && col("audio_ok")
-                  val s6 = s5 && col("video_ok")
-                  val s7 = s6 && !col("media_dup") && !col("video_dup")
-                  fv.agg(count(lit(1)).as("d0"), sum(col("n_words")).as("t0"),
-                    cnt(r1).as("d1"), tok(r1).as("t1"),
-                    cnt(r2).as("d2"), tok(r2).as("t2"),
-                    cnt(r3).as("d3"), tok(r3).as("t3"),
-                    cnt(s4).as("d4"), tok(s4).as("t4"),
-                    cnt(s5).as("d5"), tok(s5).as("t5"),
-                    cnt(s6).as("d6"), tok(s6).as("t6"),
-                    cnt(s7).as("d7"), tok(s7).as("t7"))
-                    .select(expr(
-                      """stack(8,
-                           '00_ingest', d0, t0,
-                           '01_quality', d1, t1,
-                           '02_dedup', d2, t2,
-                           '03_decontam', d3, t3,
-                           '04_media_image', d4, t4,
-                           '05_media_audio', d5, t5,
-                           '06_media_video', d6, t6,
-                           '07_media_novel', d7, t7) AS (stage, n_docs, n_tokens)"""))
-                } else
-                  fv.agg(count(lit(1)).as("d0"), sum(col("n_words")).as("t0"),
-                    cnt(r1).as("d1"), tok(r1).as("t1"),
-                    cnt(r2).as("d2"), tok(r2).as("t2"),
-                    cnt(r3).as("d3"), tok(r3).as("t3"))
-                    .select(expr(
-                      """stack(4,
-                           '00_ingest', d0, t0,
-                           '01_quality', d1, t1,
-                           '02_dedup', d2, t2,
-                           '03_decontam', d3, t3) AS (stage, n_docs, n_tokens)"""))
-              // the funnel store is batch-grain METADATA that would
-              // otherwise accrete one file per batch forever — it goes
-              // through the same generational ClaimStore fold as the
-              // claim stores (delta per batch, fold at the budget);
-              // replay rows differing from the original delivery both
-              // survive the fold and resolve at read (tuple-max)
-              funnel.appendDelta(
-                one.withColumn("batch_id", lit(batchId))
-                  .select("batch_id", "stage", "n_docs", "n_tokens"))
-            }
-            // incremental curated store: this batch's admitted docs rank
-            // among themselves by the md5 training order, offset by the
-            // store's current size, and append as shard TAILS — no
-            // existing shard file is rewritten (byte-identity is
-            // spec-asserted). Lands before the claims (see scaladoc).
-            // The counter's redelivery-guard key is the MONOTONE BUILD
-            // EPOCH (epochBase + batchId), not the raw batch id: a
-            // restarted stream's batch ids begin at 0 again, and a raw-id
-            // guard would mistake the new run's first batch for a replay
-            // of the old one and silently skip its append.
-            val buildEpoch = epochBase + batchId
-            val writeStore: Seq[() => Unit] = storeDir.toSeq.map { sd => () =>
-              val tail = s"${sd}_tail"
-              // ONE counter read answers the redelivery guard AND the
-              // offset (was a hasBatch read plus a second state read
-              // broadcast-crossJoined into the plan); the offset rides
-              // as a plan literal — two fewer jobs per batch
-              TailCounter.snapshot(spark, tail, buildEpoch).foreach { case (nOldDocs, _) =>
-                val admitted = verdict.filter(col("admitted"))
-                  .select("doc_id", "n_words")
-                  .persist(StorageLevel.MEMORY_AND_DISK)
-                val nAdmitted = admitted.count()
-                graft.operators.LayoutOps
-                  .shuffleRanks(spark, admitted.select("doc_id"))
-                  .join(admitted, Seq("doc_id"))
-                  .select(col("doc_id"),
-                    (col("pos") + lit(nOldDocs)).as("pos"), col("n_words"))
-                  .withColumn("shard", col("pos") % nShards)
-                  .repartitionByRange(nShards, col("shard"))
-                  .sortWithinPartitions("shard", "pos")
-                  .write.mode(SaveMode.Append).partitionBy("shard")
-                  // append into the COMMITTED generation: after an
-                  // offline repack/compaction migrated the store to the
-                  // marker layout, the tail files must land inside the
-                  // live gen, never beside it
-                  .parquet(graft.operators.LayoutOps.storeDataDir(sd))
-                admitted.unpersist()
-                TailCounter.append(spark, tail, buildEpoch, nAdmitted, 0L)
-              }
-            }
-            // incremental TOKENIZED store: admitted docs BPE-encode under
-            // the pinned merge table, rank by the md5 training order, and
-            // pack into fixed ctx-token context windows CONTINUING the
-            // store's global token offset — a partially-filled last
-            // window keeps filling across appends, and every shard gains
-            // only a tail file (byte-identity spec-asserted). Same
-            // at-least-once window as the curated store above.
-            val writeTokens: Seq[() => Unit] = tokenStoreDir.toSeq.map { sd => () =>
-              val tail = s"${sd}_tail"
-              // same ONE-read counter discipline as the curated store
-              TailCounter.snapshot(spark, tail, buildEpoch).foreach { case (nOldDocs, tOld) =>
-                val admitted = verdict.filter(col("admitted")).select("doc_id")
-                // with a versioned vocab artifact (`vocabDir`), the batch
-                // encodes under the COMMITTED merge table read back from
-                // its bytes — never an in-memory literal — and every row
-                // is stamped with the artifact version and its ERA (the
-                // monotone build epoch), laid out era=/shard= so a later
-                // tokenizer refresh (LayoutOps.bpeRefreshApplyAt) rewrites
-                // exactly the stale eras' partitions; without one, the
-                // pinned v0 table and the flat shard layout are unchanged
-                val vocab = vocabDir.map(vd =>
-                  (graft.operators.LayoutOps.currentVocab(spark, vd),
-                    graft.operators.LayoutOps.currentVocabVersion(vd)))
-                val enc = graft.operators.LayoutOps
-                  .bpeEncodeDocsWith(batch.join(admitted, Seq("doc_id")),
-                    vocab.map(_._1)
-                      .getOrElse(graft.operators.TextOps.BpeMergeTable))
-                  .persist(StorageLevel.MEMORY_AND_DISK)
-                // one fill pass also yields the counter update: the batch's
-                // doc and token contribution (the encode runs ONCE)
-                val (nAdmitted, nTokens) = {
-                  val r = enc.agg(count(lit(1)).cast("long"),
-                    coalesce(sum(col("n_bpe")), lit(0L)).cast("long")).collect()(0)
-                  (r.getLong(0), r.getLong(1))
-                }
-                val ranked = graft.operators.LayoutOps
-                  .shuffleRanks(spark, admitted)
-                  .join(enc, Seq("doc_id"))
-                  .select(col("doc_id"), (col("pos") + lit(nOldDocs)).as("pos"),
-                    col("n_bpe"), col("tok_str"))
-                val windowed = graft.operators.LayoutOps
-                  .assignWindows(ranked, ctx, nShards, tOld)
-                  .repartitionByRange(nShards, col("shard"))
-                  .sortWithinPartitions("shard", "win", "pos")
-                // same marker resolve as the curated store's append
-                val sdd = graft.operators.LayoutOps.storeDataDir(sd)
-                vocab match {
-                  case Some((_, v)) =>
-                    windowed
-                      .withColumn("vocab", lit(v))
-                      .withColumn("era", lit(epochBase + batchId))
-                      .write.mode(SaveMode.Append)
-                      .partitionBy("era", "shard").parquet(sdd)
-                  case None =>
-                    windowed
-                      .write.mode(SaveMode.Append).partitionBy("shard").parquet(sdd)
-                }
-                enc.unpersist()
-                TailCounter.append(spark, tail, buildEpoch, nAdmitted, nTokens)
-              }
-            }
-            // PHASE 1: every verdict consumer lands (concurrently —
-            // see the ordering argument above)
-            StreamPar.runAll(
-              Seq(writeVerdict, writeFunnel) ++ writeStore ++ writeTokens)
-            // PHASE 2: claims accrete for every batch winner —
-            // contaminated or not (stage order: dedup decides before
-            // decontamination drops). Write-all-then-fold-all (the
-            // ClaimStore multi-store discipline): every delta lands
-            // before either store folds, so a lazily recomputed frame
-            // never resolves deleted files. The three claim stores are
-            // disjoint dirs — their appends overlap.
-            // epoch stamp: a RESTARTED stream's batch ids begin at 0
-            // again, so retention epochs are epochBase + batchId with
-            // the base threaded by the caller as a monotone build
-            // number (the MediaDedupStream discipline)
-            val epoch = lit(epochBase + batchId)
-            StreamPar.runAll(Seq(() =>
-              textStore.appendDelta(
-                verdict.filter(col("keep_quality") && !col("is_dup"))
-                  .select(fpPk(col("fp")).as("pk"), col("fp"),
-                    epoch.as("epoch")))) ++
-              // every perceptually NOVEL asset claims its fingerprint —
-              // independent of the text verdicts, the MediaDedupStream
-              // claim semantics (novelty is against earlier batches only)
-              mediaVerdict.toSeq.flatMap { mv => Seq(
-                () => mediaStore.appendDelta(MultimodalOps.claimBands(
-                  mv.filter(!col("media_dup"))
-                    .select(col("doc_id").as("claim_id"), col("ahash").as("fhash")))
-                  .withColumn("epoch", epoch)),
-                // every perceptually NOVEL video asset claims its signature
-                () => videoStore.appendDelta(mv.filter(!col("video_dup"))
-                  .select(vhashPk(col("vhash")).as("pk"),
-                    col("doc_id").as("claim_id"), col("vhash"),
-                    epoch.as("epoch"))))
-              })
-            // PHASE 3: the folds — each store folds only its own files
-            StreamPar.runAll((Seq(textStore, funnel) ++
-              (if (mediaGate) Seq(mediaStore, videoStore) else Nil))
-              .map(st => () => { st.maybeCompact(spark); () }))
-          } finally verdict.unpersist()
-        } finally {
-          media.foreach(_.unpersist())
-          b.unpersist()
+          val nAdmitted = admitted.count()
+          graft.operators.LayoutOps
+            .shuffleRanks(spark, admitted.select("doc_id"))
+            .join(admitted, Seq("doc_id"))
+            .select(col("doc_id"),
+              (col("pos") + lit(nOldDocs)).as("pos"), col("n_words"))
+            .withColumn("shard", col("pos") % nShards)
+            .repartitionByRange(nShards, col("shard"))
+            .sortWithinPartitions("shard", "pos")
+            .write.mode(SaveMode.Append).partitionBy("shard")
+            // append into the COMMITTED generation: after an
+            // offline repack/compaction migrated the store to the
+            // marker layout, the tail files must land inside the
+            // live gen, never beside it
+            .parquet(graft.operators.LayoutOps.storeDataDir(sd))
+          admitted.unpersist()
+          TailCounter.append(spark, tail, mb.epoch, nAdmitted, 0L)
         }
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      // incremental TOKENIZED store: admitted docs BPE-encode under
+      // the pinned merge table, rank by the md5 training order, and
+      // pack into fixed ctx-token context windows CONTINUING the
+      // store's global token offset — a partially-filled last
+      // window keeps filling across appends, and every shard gains
+      // only a tail file (byte-identity spec-asserted). Same
+      // at-least-once window as the curated store above.
+      val writeTokens: Seq[() => Unit] = tokenStoreDir.toSeq.map { sd => () =>
+        val tail = s"${sd}_tail"
+        // same ONE-read counter discipline as the curated store
+        TailCounter.snapshot(spark, tail, mb.epoch).foreach { case (nOldDocs, tOld) =>
+          val admitted = verdict.filter(col("admitted")).select("doc_id")
+          // with a versioned vocab artifact (`vocabDir`), the batch
+          // encodes under the COMMITTED merge table read back from
+          // its bytes — never an in-memory literal — and every row
+          // is stamped with the artifact version and its ERA (the
+          // monotone build epoch), laid out era=/shard= so a later
+          // tokenizer refresh (LayoutOps.bpeRefreshApplyAt) rewrites
+          // exactly the stale eras' partitions; without one, the
+          // pinned v0 table and the flat shard layout are unchanged
+          val vocab = vocabDir.map(vd =>
+            (graft.operators.LayoutOps.currentVocab(spark, vd),
+              graft.operators.LayoutOps.currentVocabVersion(vd)))
+          val enc = graft.operators.LayoutOps
+            .bpeEncodeDocsWith(batch.join(admitted, Seq("doc_id")),
+              vocab.map(_._1)
+                .getOrElse(graft.operators.TextOps.BpeMergeTable))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          // one fill pass also yields the counter update: the batch's
+          // doc and token contribution (the encode runs ONCE)
+          val (nAdmitted, nTokens) = {
+            val r = enc.agg(count(lit(1)).cast("long"),
+              coalesce(sum(col("n_bpe")), lit(0L)).cast("long")).collect()(0)
+            (r.getLong(0), r.getLong(1))
+          }
+          val ranked = graft.operators.LayoutOps
+            .shuffleRanks(spark, admitted)
+            .join(enc, Seq("doc_id"))
+            .select(col("doc_id"), (col("pos") + lit(nOldDocs)).as("pos"),
+              col("n_bpe"), col("tok_str"))
+          val windowed = graft.operators.LayoutOps
+            .assignWindows(ranked, ctx, nShards, tOld)
+            .repartitionByRange(nShards, col("shard"))
+            .sortWithinPartitions("shard", "win", "pos")
+          // same marker resolve as the curated store's append
+          val sdd = graft.operators.LayoutOps.storeDataDir(sd)
+          vocab match {
+            case Some((_, v)) =>
+              windowed
+                .withColumn("vocab", lit(v))
+                .withColumn("era", lit(mb.epoch))
+                .write.mode(SaveMode.Append)
+                .partitionBy("era", "shard").parquet(sdd)
+            case None =>
+              windowed
+                .write.mode(SaveMode.Append).partitionBy("shard").parquet(sdd)
+          }
+          enc.unpersist()
+          TailCounter.append(spark, tail, mb.epoch, nAdmitted, nTokens)
+        }
+      }
+      // claims accrete for every batch winner — contaminated or not
+      // (stage order: dedup decides before decontamination drops); every
+      // perceptually NOVEL audio and video asset claims its fingerprint,
+      // independent of the text verdicts (novelty is against earlier
+      // batches only)
+      ClaimGate.Commit(verdict.drop("fp", "n_words"),
+        consumers = Seq(writeFunnel) ++ writeStore ++ writeTokens,
+        claims = (textStore -> verdict.filter(col("keep_quality") && !col("is_dup"))
+          .select(fpPk(col("fp")).as("pk"), col("fp"))) +:
+          mediaVerdict.toSeq.flatMap(mv => Seq(
+            mediaStore -> MultimodalOps.claimBands(mv.filter(!col("media_dup"))
+              .select(col("doc_id").as("claim_id"), col("ahash").as("fhash"))),
+            videoStore -> mv.filter(!col("video_dup"))
+              .select(vhashPk(col("vhash")).as("pk"),
+                col("doc_id").as("claim_id"), col("vhash")))),
+        alsoFold = Seq(funnel))
+    }
   }
-
-  /** The deterministic two-batch arrival fixture shared by the stream
-    * gates: even doc_ids land as the first micro-batch, odd as the
-    * second; `evalSh` is persisted for the stream's lifetime (callers
-    * own the unpersist). */
-  private case class StreamFixture(src: DataFrame, evalSh: DataFrame,
-      out: String, ckpt: String, root: java.nio.file.Path)
 
   /** The benchmark shingle set every stream fixture decontaminates
     * against — the SAME PLAN as the decontamination family's eval stage
@@ -673,22 +625,24 @@ object CurationStream {
   private def evalShingles(spark: SparkSession, dir: String): DataFrame =
     DedupOps.evalShingleSet(spark, dir)
 
-  private def streamFixture(spark: SparkSession, dir: String,
-      tag: String, extra: Seq[String] = Seq.empty): StreamFixture = {
-    val root = graft.sources.TmpStores.pidScopedRoot(tag)
-    (Seq("in", "out", "out_fps", "out_funnel", "ckpt") ++ extra).foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val evalSh = evalShingles(spark, dir)
-    val src = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    StreamFixture(src, evalSh, root.resolve("out").toString,
-      root.resolve("ckpt").toString, root)
+  private def documents(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "documents").select("doc_id", "text")
+
+  /** The deterministic two-batch arrival the stream fixtures share: even
+    * doc_ids land as the first micro-batch, odd as the second. */
+  private def parityArrivals(fx: ClaimGate.Fixture, docs: DataFrame): DataFrame =
+    fx.arrivals("in", docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1))
+
+  /** One gate run over the parity arrival into `fx`'s `out`; returns it. */
+  private def parityRun(spark: SparkSession, dir: String, fx: ClaimGate.Fixture,
+      storeDir: Option[String] = None, tokenStoreDir: Option[String] = None,
+      mediaGate: Boolean = false): String = {
+    val out = fx.path("out")
+    run(parityArrivals(fx, documents(spark, dir)), evalShingles(spark, dir), out,
+      fx.path("ckpt"), storeDir = storeDir, tokenStoreDir = tokenStoreDir,
+      mediaGate = mediaGate).awaitTermination()
+    out
   }
 
   /** Oracle-gated query: all documents stream through the gate as two
@@ -698,17 +652,13 @@ object CurationStream {
     * them relationally: the class winner is the quality-passing doc
     * minimizing (batch index, doc_id). */
   def curationStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation")
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt).awaitTermination()
+    val out = parityRun(spark, dir, ClaimGate.fixture(spark, "graft-curation"))
     // no persist: the verdicts live on disk already — re-executing the
     // returned frame is one scan of the small store, no cached state
     // outlives this call. The shared per-doc resolution (not an
     // arbitrary dropDuplicates row) makes redelivered appends resolve
     // deterministically: a doc's own claim proves its admission.
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(fx.out),
-      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
-      everyTrue = Seq("is_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted")
+    Gate.verdicts.read(spark, out)
   }
 
   /** Oracle-gated query for the INCREMENTAL curated store: the same
@@ -722,10 +672,9 @@ object CurationStream {
     * regression in the gate, the ranking, the offset fold, or the
     * write→read round trip flips a manifest row red. */
   def curatedStoreIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-inc", Seq("store", "store_tail"))
-    val store = fx.root.resolve("store").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
-      storeDir = Some(store), nShards = 4).awaitTermination()
+    val fx = ClaimGate.fixture(spark, "graft-curation-inc")
+    val store = fx.path("store")
+    parityRun(spark, dir, fx, storeDir = Some(store))
     spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
     graft.operators.LayoutOps
       .shardManifest(spark, spark.read.parquet(graft.operators.LayoutOps.storeDataDir(store)), 4, tokensCol = "n_words")
@@ -747,10 +696,9 @@ object CurationStream {
     * window prefix sum — so a regression in the gate, the tokenizer, the
     * offset fold, or the window continuation flips a manifest row red. */
   def tokenizedStoreIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-tok", Seq("tstore", "tstore_tail"))
-    val store = fx.root.resolve("tstore").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
-      tokenStoreDir = Some(store), nShards = 4, ctx = 2048L).awaitTermination()
+    val fx = ClaimGate.fixture(spark, "graft-curation-tok")
+    val store = fx.path("tstore")
+    parityRun(spark, dir, fx, tokenStoreDir = Some(store))
     spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
     graft.operators.LayoutOps
       .tokenShardManifest(spark, spark.read.parquet(graft.operators.LayoutOps.storeDataDir(store)), 4)
@@ -770,20 +718,13 @@ object CurationStream {
       dir: String, tag: String = "graft-curation-tokref"): (String, String) = {
     val spark0 = spark
     import spark0.implicits._
-    val root = graft.sources.TmpStores.pidScopedRoot(tag)
-    Seq("in", "in2", "out", "out_fps", "out_funnel", "ckpt", "ckpt2",
-      "tstore", "tstore_tail", "vocab").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val store = root.resolve("tstore").toString
-    val vocabDir = root.resolve("vocab").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
+    val fx = ClaimGate.fixture(spark, tag)
+    val out = fx.path("out")
+    val store = fx.path("tstore")
+    val vocabDir = fx.path("vocab")
+    val docs = documents(spark, dir)
+    val era0 = fx.arrivals("in", docs.filter(col("doc_id") % 2 === 0))
+    val era1 = fx.arrivals("in2", docs.filter(col("doc_id") % 2 === 1))
     val evalSh = evalShingles(spark, dir)
     // v0 ships as a real artifact generation (gen=0 + CURRENT swap)
     TextOps.BpeMergeTable.zipWithIndex
@@ -791,43 +732,19 @@ object CurationStream {
       .toDF("merge_rank", "lhs", "rhs")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$vocabDir/gen=0")
     graft.sources.Stage.atomicRepoint(vocabDir, s"$vocabDir/gen=0")
-    def src(path: String) = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), evalSh, out, root.resolve("ckpt").toString,
-      tokenStoreDir = Some(store), nShards = 4, ctx = 2048L,
-      vocabDir = Some(vocabDir)).awaitTermination()
+    run(era0, evalSh, out, fx.path("ckpt"),
+      tokenStoreDir = Some(store), vocabDir = Some(vocabDir)).awaitTermination()
     // vocab drift between stream runs: retrain on the accreted corpus,
     // ship only through the fertility canary (strict ppm gain)
     val merges = TextOps.bpeMergesFromTokens(
       docs.select(explode(TextOps.tokens(col("text"))).as("word")), 6)
     graft.operators.LayoutOps.shipVocabIfBetter(spark, docs, vocabDir, merges)
-    run(src(in2), evalSh, out, root.resolve("ckpt2").toString,
-      tokenStoreDir = Some(store), nShards = 4, ctx = 2048L,
-      vocabDir = Some(vocabDir), epochBase = 1L).awaitTermination()
+    run(era1, evalSh, out, fx.path("ckpt2"),
+      tokenStoreDir = Some(store), vocabDir = Some(vocabDir), epochBase = 1L)
+      .awaitTermination()
     (store, vocabDir)
   }
 
-  /** Oracle-gated query for the PRODUCTION TOKENIZED-STORE REFRESH —
-    * the r14 fixture lifecycle (q_bpe_refresh) deployed where it
-    * matters: the store the streaming gate actually feeds. Era 0 (even
-    * doc_ids, admitted by the full curation gate) encodes under the
-    * committed v0 artifact and packs into 2048-token windows from token
-    * offset 0; the retrained vocabulary ships through the fertility
-    * canary; era 1 (odds, judged against era-0 claims) encodes under
-    * the NEW artifact, its windows CONTINUING the store's global token
-    * offset; then [[graft.operators.LayoutOps.bpeRefreshApplyAt]]
-    * re-encodes ONLY the stale era's partitions — doc_id/pos/win/shard
-    * untouched (the window grid is the training loop's resume
-    * contract; only the payload and vocab stamp move), era-1 partitions
-    * byte-identical (spec-asserted). Output: the per-(era, shard)
-    * window-grain loader manifest of the refreshed store read back from
-    * disk. The DuckDB oracle replays the arrival-order curation chain,
-    * the per-era md5 ranking, BOTH encodes (pinned v0 for the frozen
-    * window grid, the trainer-round-derived table for the payload), the
-    * cross-era window prefix sum, and every manifest field — a
-    * regression in the gate, either tokenizer, the canary wiring, the
-    * stale-era detection, or the touched-partition rewrite flips a row
-    * red. */
   /** Build-once cache for the tokenizer-refresh FIXTURE lifecycle: the
     * two heaviest registered queries (refresh, repack) consume the same
     * deterministic built state (two full stream runs + a retrain + a
@@ -855,11 +772,9 @@ object CurationStream {
       tokRefreshBuilds.getOrElseUpdate(dir,
         tokenizedStoreRefreshBuild(spark, dir, tag = shared))
     }
-    val root = graft.sources.TmpStores.pidScopedRoot(tag)
-    Seq("tstore", "vocab").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val store = root.resolve("tstore").toString
-    val vocabDir = root.resolve("vocab").toString
+    val fx = ClaimGate.fixture(spark, tag)
+    val store = fx.path("tstore")
+    val vocabDir = fx.path("vocab")
     copyTree(bStore, store)
     copyTree(bVocab, vocabDir)
     // a copied CURRENT marker still holds an ABSOLUTE path into the
@@ -884,11 +799,32 @@ object CurationStream {
       graft.sources.Stage.atomicRepoint(dirPath, s"$dirPath/$name")
     }
 
+  /** Oracle-gated query for the PRODUCTION TOKENIZED-STORE REFRESH —
+    * the r14 fixture lifecycle (q_bpe_refresh) deployed where it
+    * matters: the store the streaming gate actually feeds. Era 0 (even
+    * doc_ids, admitted by the full curation gate) encodes under the
+    * committed v0 artifact and packs into 2048-token windows from token
+    * offset 0; the retrained vocabulary ships through the fertility
+    * canary; era 1 (odds, judged against era-0 claims) encodes under
+    * the NEW artifact, its windows CONTINUING the store's global token
+    * offset; then [[graft.operators.LayoutOps.bpeRefreshApplyAt]]
+    * re-encodes ONLY the stale era's partitions — doc_id/pos/win/shard
+    * untouched (the window grid is the training loop's resume
+    * contract; only the payload and vocab stamp move), era-1 partitions
+    * byte-identical (spec-asserted). Output: the per-(era, shard)
+    * window-grain loader manifest of the refreshed store read back from
+    * disk. The DuckDB oracle replays the arrival-order curation chain,
+    * the per-era md5 ranking, BOTH encodes (pinned v0 for the frozen
+    * window grid, the trainer-round-derived table for the payload), the
+    * cross-era window prefix sum, and every manifest field — a
+    * regression in the gate, either tokenizer, the canary wiring, the
+    * stale-era detection, or the touched-partition rewrite flips a row
+    * red. */
   def tokenizedStoreRefreshQuery(spark: SparkSession, dir: String): DataFrame = {
     val (store, vocabDir) =
       tokenizedStoreRefreshBuiltCopy(spark, dir, "graft-curation-tokref-run")
     graft.operators.LayoutOps.bpeRefreshApplyAt(spark,
-      Tables(spark, dir, "documents").select("doc_id", "text"),
+      documents(spark, dir),
       store, vocabDir, nShards = 4, carry = Seq("win"))
     spark.catalog.refreshByPath(store)
     graft.operators.LayoutOps
@@ -912,7 +848,7 @@ object CurationStream {
     val (store, vocabDir) =
       tokenizedStoreRefreshBuiltCopy(spark, dir, "graft-curation-tokrepack-run")
     graft.operators.LayoutOps.bpeRefreshApplyAt(spark,
-      Tables(spark, dir, "documents").select("doc_id", "text"),
+      documents(spark, dir),
       store, vocabDir, nShards = 4, carry = Seq("win"))
     graft.operators.LayoutOps.repackTokenizedStore(spark, store,
       ctx = 2048L, nShards = 4)
@@ -932,10 +868,9 @@ object CurationStream {
     * the pre-claim truth and doc/token counts resolve from the SAME
     * delivery. */
   def curationStreamFunnelQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-funnel",
-      Seq("out_mfps", "out_vmfps"))
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt, mediaGate = true).awaitTermination()
-    funnelStore(fx.out).read(spark)
+    val out = parityRun(spark, dir, ClaimGate.fixture(spark, "graft-curation-funnel"),
+      mediaGate = true)
+    funnelStore(out).read(spark)
       .groupBy("batch_id", "stage")
       .agg(max(struct(col("n_docs"), col("n_tokens"))).as("_m"))
       .select(col("batch_id"), col("stage"),
@@ -955,9 +890,8 @@ object CurationStream {
     * sweep that drops an in-horizon claim, keeps an aged one, or loses a
     * class entirely flips a row red. */
   def claimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-claim-retention")
-    graft.sources.TmpStores.deleteRecursively(root.resolve("store"))
-    val st = ClaimStore(root.resolve("store").toString, TextClaims, Some("pk"))
+    val st = ClaimStore(ClaimGate.fixture(spark, "graft-claim-retention").path("store"),
+      TextClaims, Some("pk"))
     val f = Tables(spark, dir, "documents")
       .select(col("doc_id"), md5(col("text")).as("fp"))
     // probe-key space sized to the corpus: the folded base writes one
@@ -1002,37 +936,22 @@ object CurationStream {
     * claim set, the post-sweep store as exactly the classes batch 1
     * claimed, and the twin verdicts against that surviving set. */
   def curationClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-curation-ret")
-    Seq("in", "in2", "out", "out_fps", "out_funnel", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
+    val fx = ClaimGate.fixture(spark, "graft-curation-ret")
+    val out = fx.path("out")
+    val docs = documents(spark, dir)
     val evalSh = evalShingles(spark, dir)
-    def src(path: String) = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), evalSh, out, root.resolve("ckpt").toString)
-      .awaitTermination()
+    run(parityArrivals(fx, docs), evalSh, out, fx.path("ckpt")).awaitTermination()
     // age out the batch-0 (epoch 0) classes; batch-1 claims stay. The
     // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
     // cohort (the abort path is spec-covered elsewhere)
     sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-    docs.filter(col("doc_id") % 6 === 4)
+    val twins = fx.arrivals("in2", docs.filter(col("doc_id") % 6 === 4)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
       .union(docs.filter(col("doc_id") % 6 === 3)
-        .select((col("doc_id") + 7000000L).as("doc_id"), col("text")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-    run(src(in2), evalSh, out, root.resolve("ckpt2").toString,
-      epochBase = 2L).awaitTermination()
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
-      everyTrue = Seq("is_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted")
+        .select((col("doc_id") + 7000000L).as("doc_id"), col("text"))))
+    run(twins, evalSh, out, fx.path("ckpt2"), epochBase = 2L)
+      .awaitTermination()
+    Gate.verdicts.read(spark, out)
   }
 
   /** Oracle-gated query for the STREAMING CROSS-MODAL gate: the same
@@ -1052,15 +971,8 @@ object CurationStream {
     * in a codec path, a hash, the banding, the claim ordering, or the
     * composition flips a row red. */
   def curationMultimodalStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-mm",
-      Seq("out_mfps", "out_vmfps"))
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt, mediaGate = true).awaitTermination()
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(fx.out),
-      anyTrue = Seq("keep_quality", "is_contaminated", "img_ok",
-        "audio_ok", "video_ok", "admitted"),
-      everyTrue = Seq("is_dup", "media_dup", "video_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated",
-        "img_ok", "audio_ok", "media_dup", "video_ok", "video_dup", "admitted")
+    MediaVerdicts.read(spark,
+      parityRun(spark, dir, ClaimGate.fixture(spark, "graft-curation-mm"), mediaGate = true))
   }
 
   /** The full INCREMENTAL MULTIMODAL pre-training loop in one artifact:
@@ -1075,11 +987,9 @@ object CurationStream {
     * a codec path, the claim ordering, the composition, or the layout
     * flips a manifest row red. */
   def curatedStoreMultimodalStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-mm-store",
-      Seq("out_mfps", "out_vmfps", "store", "store_tail"))
-    val store = fx.root.resolve("store").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
-      storeDir = Some(store), nShards = 4, mediaGate = true).awaitTermination()
+    val fx = ClaimGate.fixture(spark, "graft-curation-mm-store")
+    val store = fx.path("store")
+    parityRun(spark, dir, fx, storeDir = Some(store), mediaGate = true)
     spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
     graft.operators.LayoutOps
       .shardManifest(spark, spark.read.parquet(graft.operators.LayoutOps.storeDataDir(store)), 4, tokensCol = "n_words")

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.operators.DedupOps
 
@@ -14,11 +14,8 @@ import graft.operators.DedupOps
   * docs accrete). The incoming side's shingle cache and the verdict
   * frame are scoped to their batch and unpersisted once the batch's
   * decisions land, so cache usage is flat across an unbounded stream.
-  * Decisions append to a parquet side channel per batch; the checkpoint
-  * advances only after the batch's decisions land — the same
-  * at-least-once discipline as the publishers, and re-emitted decisions
-  * are identical rows (the gate is deterministic), so downstream dedups
-  * are trivial. */
+  * Decisions append to a parquet side channel per batch, committed as
+  * [[ClaimGate]] orders it, and [[readDecisions]] resolves replays. */
 object DedupGateStream {
 
   /** Admitted docs' MinHash band rows, keyed by the band hash's low byte. */
@@ -29,28 +26,33 @@ object DedupGateStream {
   private val ShClaims = StructType.fromDDL(
     "dbucket INT NOT NULL, doc_id BIGINT NOT NULL, sh ARRAY<STRING>, epoch BIGINT NOT NULL")
 
-  /** The accreted text index: (band rows, shingle sets) — see [[run]]. */
-  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
-    ClaimStore(s"${outDir}_bands", BandClaims, Some("bucket")),
-    ClaimStore(s"${outDir}_index", ShClaims, Some("dbucket")))
+  /** The accreted text index — (band rows, shingle sets), see [[run]] —
+    * and the decision read contract (see [[readDecisions]]). */
+  private val Gate = ClaimGate(
+    outDir => Seq(
+      ClaimStore(s"${outDir}_bands", BandClaims, Some("bucket")),
+      ClaimStore(s"${outDir}_index", ShClaims, Some("dbucket"))),
+    StreamVerdicts(Seq("doc_id", "admitted", "n_matches", "best_match", "best_jaccard"),
+      anyTrue = Seq("admitted"),
+      preClaim = Seq("n_matches", "best_match", "best_jaccard")))
 
-  /** RETENTION for the accreted text index — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline on BOTH stores (band rows
+  def claimStores(outDir: String): Seq[ClaimStore] = Gate.claimStores(outDir)
+
+  /** RETENTION for the accreted text index on BOTH stores (band rows
     * and shingle sets age together: a doc whose claims aged out
     * re-admits whole). Run between stream runs. Returns (band rows,
     * shingle rows) dropped. */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): (Long, Long) = {
-    val Seq(bands, sh) =
-      claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac))
+    val Seq(bands, sh) = Gate.sweepClaims(spark, outDir, minEpoch, maxDropFrac)
     (bands, sh)
   }
 
   /** The band and shingle-index stores as [[Maintenance.Action]]s — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
+    * [[Maintenance.run]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Seq[Maintenance.Action] =
-    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
+    Gate.maintenanceActions(spark, outDir, minEpoch, maxDropFrac)
 
   /** Probe-key bucket of a MinHash band hash: its low 8 bits (splitmix64
     * output — uniform), 256 possible values, so a batch's touched set is
@@ -78,12 +80,12 @@ object DedupGateStream {
     *    ≤ 64 id buckets the surviving candidates name.
     *
     * Claims land one delta file per batch BEFORE the checkpoint commits
-    * and fold into a partitioned generation at the file budget (the
-    * shared ClaimStore swap discipline), so the store's file count is
-    * bounded and a resumed stream keeps rejecting duplicates of
-    * everything it ever admitted. Redelivered batches re-append
-    * identical rows; the pruned reads dedup per doc_id, so at-least-once
-    * delivery cannot double-count a corpus doc in later verdicts. */
+    * and fold into a partitioned generation at the file budget, so the
+    * store's file count is bounded and a resumed stream keeps rejecting
+    * duplicates of everything it ever admitted. Redelivered batches
+    * re-append identical rows; the pruned reads dedup per doc_id, so
+    * at-least-once delivery cannot double-count a corpus doc in later
+    * verdicts. */
   def run(
       corpus: DataFrame,
       incoming: DataFrame,
@@ -103,71 +105,39 @@ object DedupGateStream {
     val baseBands = DedupOps.bandRows(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     baseBands.count()
-    val query = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val iSh = DedupOps.gateShingles(batch)
-        val iBands = DedupOps.bandRows(iSh)
-        // candidate generation: the batch's bands against the cached base
-        // plus the accreted store PRUNED to the buckets this batch probes
-        val touched = iBands.select(bucketOf(col("band_hash")).as("bucket"))
-          .distinct().as[Int].collect().toSeq
-        val storeBands = bandStore.readPruned(spark, touched)
-          .select("doc_id", "band", "band_hash")
-        val cand = DedupOps
-          .gateCandidates(iBands, baseBands.union(storeBands), maxBandFreq)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // verify fetch: sh only for the id buckets the candidates name
-          // (redelivered store rows are identical — dedup the pruned read).
-          // This collect IS the candidate pass's cache fill (it consumes
-          // every cand partition) — a separate count() paid one whole
-          // extra job per batch
-          val touchedIds = cand.select(dbucketOf(col("corpus_id")).as("d"))
-            .distinct().as[Int].collect().toSeq
-          val storeSh = shStore.readPruned(spark, touchedIds)
-            .dropDuplicates("doc_id")
-            .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-          val cShById = base
-            .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-            .union(storeSh)
-          val verdict = DedupOps.gateVerdicts(cand, iSh, cShById, batch)
-          try {
-            verdict.write.mode(SaveMode.Append).parquet(outDir)
-            if (accrete) {
-              val admitted = verdict.filter(col("decision") === "admit")
-                .select("doc_id")
-              // retention stamp: epochBase is caller-threaded monotone
-              // (restarted streams restart batch ids at 0 — see
-              // MediaDedupStream)
-              val shClaims = iSh.join(admitted, Seq("doc_id"))
-                .select(dbucketOf(col("doc_id")).as("dbucket"),
-                  col("doc_id"), col("sh"),
-                  lit(epochBase + batchId).as("epoch"))
-              val bandClaims = iBands.join(admitted, Seq("doc_id"))
-                .select(bucketOf(col("band_hash")).as("bucket"),
-                  col("doc_id"), col("band"), col("band_hash"),
-                  lit(epochBase + batchId).as("epoch"))
-              // BOTH delta writes land before EITHER store folds: a fold
-              // deletes its consumed delta files, and the second write's
-              // lineage re-reads this batch's store scan when Spark
-              // recomputes instead of hitting the verdict cache (observed
-              // under foreachBatch) — write-all-then-fold-all keeps every
-              // recomputation on files that still exist
-              shStore.appendDelta(shClaims)
-              bandStore.appendDelta(bandClaims)
-              shStore.maybeCompact(spark)
-              bandStore.maybeCompact(spark)
-              ()
-            }
-          } finally verdict.unpersist()
-        } finally {
-          cand.unpersist()
-          iSh.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val query = Gate.run(incoming, outDir, checkpoint, epochBase) { b =>
+      val iSh = b.hold(DedupOps.gateShingles(b.frame))
+      val iBands = DedupOps.bandRows(iSh)
+      // candidate generation: the batch's bands against the cached base
+      // plus the accreted store PRUNED to the buckets this batch probes
+      val touched = iBands.select(bucketOf(col("band_hash")).as("bucket"))
+        .distinct().as[Int].collect().toSeq
+      val storeBands = bandStore.readPruned(spark, touched)
+        .select("doc_id", "band", "band_hash")
+      val cand = b.persist(DedupOps
+        .gateCandidates(iBands, baseBands.union(storeBands), maxBandFreq))
+      // verify fetch: sh only for the id buckets the candidates name
+      // (redelivered store rows are identical — dedup the pruned read).
+      // This collect IS the candidate pass's cache fill (it consumes
+      // every cand partition) — a separate count() paid one whole
+      // extra job per batch
+      val touchedIds = cand.select(dbucketOf(col("corpus_id")).as("d"))
+        .distinct().as[Int].collect().toSeq
+      val storeSh = shStore.readPruned(spark, touchedIds)
+        .dropDuplicates("doc_id")
+        .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
+      val cShById = base
+        .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
+        .union(storeSh)
+      val verdict = b.hold(DedupOps.gateVerdicts(cand, iSh, cShById, b.frame))
+      val admitted = verdict.filter(col("decision") === "admit").select("doc_id")
+      ClaimGate.Commit(verdict, claims = if (!accrete) Nil else Seq(
+        bandStore -> iBands.join(admitted, Seq("doc_id"))
+          .select(bucketOf(col("band_hash")).as("bucket"),
+            col("doc_id"), col("band"), col("band_hash")),
+        shStore -> iSh.join(admitted, Seq("doc_id"))
+          .select(dbucketOf(col("doc_id")).as("dbucket"), col("doc_id"), col("sh"))))
+    }
     // release the corpus index when the stream ends (daemon watcher —
     // run() hands the live query back to the caller, so the index's
     // lifetime is tied to the query's, not to this call)
@@ -181,19 +151,15 @@ object DedupGateStream {
     query
   }
 
-  /** Decision readback under the shared at-least-once contract
-    * ([[StreamVerdicts]]): a doc admits if ANY delivery admitted it (its
-    * own shingles in the accreted index prove the admission — a replay
-    * after the claim landed self-matches and re-emits reject), and the
-    * match stats come from the pre-claim delivery (minimum n_matches —
-    * the index only grows, so the original match set is a subset of any
-    * replay's). */
+  /** Decision readback under the gate's [[StreamVerdicts]] contract: a
+    * doc admits if ANY delivery admitted it (its own shingles in the
+    * accreted index prove the admission — a replay after the claim
+    * landed self-matches and re-emits reject), and the match stats come
+    * from the pre-claim delivery (minimum n_matches — the index only
+    * grows, so the original match set is a subset of any replay's). */
   def readDecisions(spark: SparkSession, outDir: String): DataFrame =
-    StreamVerdicts.resolvePerDoc(
-      spark.read.parquet(outDir)
-        .withColumn("admitted", col("decision") === "admit"),
-      anyTrue = Seq("admitted"),
-      preClaim = Seq("n_matches", "best_match", "best_jaccard"))
+    Gate.verdicts.resolvePerDoc(spark.read.parquet(outDir)
+      .withColumn("admitted", col("decision") === "admit"))
       .select(col("doc_id"),
         when(col("admitted"), "admit").otherwise("reject").as("decision"),
         col("n_matches"), col("best_match"), col("best_jaccard"))

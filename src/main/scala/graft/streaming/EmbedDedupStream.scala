@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -56,24 +56,31 @@ object EmbedDedupStream {
   private val VecClaims = StructType.fromDDL("pk INT NOT NULL, claim_id BIGINT NOT NULL, " +
     "codes BINARY, vmin DOUBLE NOT NULL, scale DOUBLE NOT NULL, epoch BIGINT NOT NULL")
 
-  /** The int8 claim store — see [[run]]. */
-  def claimStores(outDir: String): Seq[ClaimStore] =
-    Seq(ClaimStore(s"${outDir}_vfps", VecClaims, Some("pk")))
+  /** The int8 claim store — see [[run]] — and the verdict read contract,
+    * keyed by vec_id. */
+  private val Gate = ClaimGate(
+    outDir => Seq(ClaimStore(s"${outDir}_vfps", VecClaims, Some("pk"))),
+    StreamVerdicts(Seq("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match"),
+      anyTrue = Seq("admitted"),
+      preClaim = Seq("n_matches", "min_match"),
+      carried = Seq("orig_id", "kind"),
+      key = "vec_id"))
 
-  /** RETENTION for the int8 claim store — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline on the embedding gate: an
-    * embedding whose every claim aged out re-admits on its next
-    * arrival, in-horizon claims keep rejecting. Run between stream runs
-    * (offline, like compaction and [[migrateClaims]]). */
+  def claimStores(outDir: String): Seq[ClaimStore] = Gate.claimStores(outDir)
+
+  /** RETENTION for the int8 claim store: an embedding whose every claim
+    * aged out re-admits on its next arrival, in-horizon claims keep
+    * rejecting. Run between stream runs (offline, like compaction and
+    * [[migrateClaims]]). */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Long =
-    claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac)).sum
+    Gate.sweepClaims(spark, outDir, minEpoch, maxDropFrac).sum
 
   /** The int8 claim store as a [[Maintenance.Action]] — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
+    * [[Maintenance.run]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Seq[Maintenance.Action] =
-    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
+    Gate.maintenanceActions(spark, outDir, minEpoch, maxDropFrac)
 
   /** The int8 probe admits candidates down to threshold − a PER-CLAIM
     * margin derived from that claim's own quantization bound, never a
@@ -112,120 +119,102 @@ object EmbedDedupStream {
       epochBase: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
     val Seq(store) = claimStores(outDir)
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark0 = spark
-        import spark0.implicits._
-        val vecs = batch.select("vec_id")
-          .join(vectors, Seq("vec_id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        vecs.count() // one fill job; the probe + claim sides reuse it
-        try {
-          // ONE ranked assignment pass serves both sides: rank 0 is the
-          // argmax cell (where novel vectors CLAIM), and the full top-
-          // nprobe set is the PROBE side — the q_ann_ivf_recall accuracy
-          // knob applied to the gate: a near-pair straddling a cell
-          // boundary (parent argmax cell A, twin argmax cell B with A
-          // second-best) is caught at nprobe ≥ 2 without moving any
-          // claim off its argmax cell
-          val probed = SimilarityOps
-            .assignCellsRanked(centroids, vecs.select("vec_id", "v"),
-              probes = math.max(1, nprobe))
-            .withColumn("pk", col("cell").cast("int"))
-            .join(vecs.select(col("vec_id"), col("v")), Seq("vec_id"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val celled = probed.filter(col("rank") === 0)
-          try {
-            // this collect IS the assignment pass's cache fill (it
-            // consumes every probed partition) — a separate count()
-            // paid one whole extra job per batch
-            val touched = probed.select("pk").distinct().as[Int].collect().toSeq
-            // int8 SHORTLIST: dequantize the pruned claims (a narrow map
-            // over touched cells + the delta budget) and admit candidates
-            // at threshold − that claim's own quantization margin …
-            val claimedDv = store.readPruned(spark, touched)
-              .select("pk", "claim_id", "codes", "vmin", "scale")
-              .as[(Int, Long, Array[Byte], Double, Double)]
-              .map { case (pk, id, codes, vmin, scale) =>
-                val dv = new Array[Double](codes.length)
-                var n2 = 0.0
-                var i = 0
-                while (i < codes.length) {
-                  dv(i) = (codes(i).toInt + 128) * scale + vmin
-                  n2 += dv(i) * dv(i)
-                  i += 1
-                }
-                (pk, id, dv.toSeq,
-                  quantMargin(codes.length, scale, math.sqrt(n2)))
-              }
-              .toDF("pk", "claim_id", "dv", "margin")
-            val matches = probed
-              .join(claimedDv, Seq("pk"))
-              .select("vec_id", "claim_id", "v", "dv", "margin")
-              // crash-redelivered claim rows are identical, and several
-              // probe cells can reach the same claim — collapse per pair
-              // so n_matches counts claims, not deliveries or probes
-              .dropDuplicates("vec_id", "claim_id")
-              .filter(SimilarityOps.cosine(col("v"), col("dv"))
-                >= lit(threshold) - col("margin"))
-              // … then verify ONLY the shortlist at FULL precision: the
-              // claimed vectors come back from the corpus store, so the
-              // verdict expression is identical to the full-precision
-              // gate's — the claim store shrank, the verdicts did not
-              .join(vectors.select(col("vec_id").as("claim_id"),
-                col("v").as("cv")), Seq("claim_id"))
-              .filter(SimilarityOps.cosine(col("v"), col("cv")) >= threshold)
-              .groupBy("vec_id")
-              .agg(count(lit(1)).as("n_matches"),
-                min(col("claim_id")).as("min_match"))
-            val verdict = vecs
-              .join(matches, Seq("vec_id"), "left")
-              .select(col("vec_id"), col("orig_id"), col("kind"),
-                col("n_matches").isNull.as("admitted"),
-                coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-                coalesce(col("min_match"), lit(-1L)).as("min_match"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            verdict.count()
-            try {
-              verdict.write.mode(SaveMode.Append).parquet(outDir)
-              // novel vectors claim their (cell, int8 codes, affine
-              // params, epoch) BEFORE the checkpoint commits — the store
-              // grows into exactly the cell-partitioned QUANTIZED serving
-              // layout (`annIvfTopKStaged`'s payload, claim-store bones)
-              store.append(spark, celled
-                .join(verdict.filter(col("admitted")).select("vec_id"),
-                  Seq("vec_id"))
-                .select(col("pk"), col("vec_id").as("claim_id"), col("v"))
-                .as[(Int, Long, Seq[Double])]
-                .map { case (pk, id, v) =>
-                  val arr = v.toArray
-                  var vmin = Double.MaxValue
-                  var vmax = Double.MinValue
-                  var i = 0
-                  while (i < arr.length) {
-                    if (arr(i) < vmin) vmin = arr(i)
-                    if (arr(i) > vmax) vmax = arr(i)
-                    i += 1
-                  }
-                  val scale = if (vmax > vmin) (vmax - vmin) / 255.0 else 1.0
-                  val codes = new Array[Byte](arr.length)
-                  i = 0
-                  while (i < arr.length) {
-                    codes(i) = (math.floor((arr(i) - vmin) / scale + 0.5)
-                      .toInt - 128).toByte
-                    i += 1
-                  }
-                  (pk, id, codes, vmin, scale)
-                }
-                .toDF("pk", "claim_id", "codes", "vmin", "scale")
-                .withColumn("epoch", lit(epochBase + batchId)))
-            } finally verdict.unpersist()
-          } finally probed.unpersist()
-        } finally vecs.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Gate.run(incoming, outDir, checkpoint, epochBase) { b =>
+      val spark0 = spark
+      import spark0.implicits._
+      // filled by the assignment pass below; the probe + claim sides reuse it
+      val vecs = b.persist(b.frame.select("vec_id").join(vectors, Seq("vec_id")))
+      // ONE ranked assignment pass serves both sides: rank 0 is the
+      // argmax cell (where novel vectors CLAIM), and the full top-
+      // nprobe set is the PROBE side — the q_ann_ivf_recall accuracy
+      // knob applied to the gate: a near-pair straddling a cell
+      // boundary (parent argmax cell A, twin argmax cell B with A
+      // second-best) is caught at nprobe ≥ 2 without moving any
+      // claim off its argmax cell
+      val probed = b.persist(SimilarityOps
+        .assignCellsRanked(centroids, vecs.select("vec_id", "v"),
+          probes = math.max(1, nprobe))
+        .withColumn("pk", col("cell").cast("int"))
+        .join(vecs.select(col("vec_id"), col("v")), Seq("vec_id")))
+      val celled = probed.filter(col("rank") === 0)
+      // this collect IS the assignment pass's cache fill (it
+      // consumes every probed partition) — a separate count()
+      // paid one whole extra job per batch
+      val touched = probed.select("pk").distinct().as[Int].collect().toSeq
+      // int8 SHORTLIST: dequantize the pruned claims (a narrow map
+      // over touched cells + the delta budget) and admit candidates
+      // at threshold − that claim's own quantization margin …
+      val claimedDv = store.readPruned(spark, touched)
+        .select("pk", "claim_id", "codes", "vmin", "scale")
+        .as[(Int, Long, Array[Byte], Double, Double)]
+        .map { case (pk, id, codes, vmin, scale) =>
+          val dv = new Array[Double](codes.length)
+          var n2 = 0.0
+          var i = 0
+          while (i < codes.length) {
+            dv(i) = (codes(i).toInt + 128) * scale + vmin
+            n2 += dv(i) * dv(i)
+            i += 1
+          }
+          (pk, id, dv.toSeq,
+            quantMargin(codes.length, scale, math.sqrt(n2)))
+        }
+        .toDF("pk", "claim_id", "dv", "margin")
+      val matches = probed
+        .join(claimedDv, Seq("pk"))
+        .select("vec_id", "claim_id", "v", "dv", "margin")
+        // crash-redelivered claim rows are identical, and several
+        // probe cells can reach the same claim — collapse per pair
+        // so n_matches counts claims, not deliveries or probes
+        .dropDuplicates("vec_id", "claim_id")
+        .filter(SimilarityOps.cosine(col("v"), col("dv"))
+          >= lit(threshold) - col("margin"))
+        // … then verify ONLY the shortlist at FULL precision: the
+        // claimed vectors come back from the corpus store, so the
+        // verdict expression is identical to the full-precision
+        // gate's — the claim store shrank, the verdicts did not
+        .join(vectors.select(col("vec_id").as("claim_id"),
+          col("v").as("cv")), Seq("claim_id"))
+        .filter(SimilarityOps.cosine(col("v"), col("cv")) >= threshold)
+        .groupBy("vec_id")
+        .agg(count(lit(1)).as("n_matches"),
+          min(col("claim_id")).as("min_match"))
+      val verdict = b.persist(vecs
+        .join(matches, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("orig_id"), col("kind"),
+          col("n_matches").isNull.as("admitted"),
+          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+          coalesce(col("min_match"), lit(-1L)).as("min_match")))
+      // the verdict write fills the cache the claim side then reads;
+      // novel vectors claim their (cell, int8 codes, affine params) —
+      // the store grows into exactly the cell-partitioned QUANTIZED
+      // serving layout (`annIvfTopKStaged`'s payload, claim-store bones)
+      ClaimGate.Commit(verdict, claims = Seq(store -> celled
+        .join(verdict.filter(col("admitted")).select("vec_id"), Seq("vec_id"))
+        .select(col("pk"), col("vec_id").as("claim_id"), col("v"))
+        .as[(Int, Long, Seq[Double])]
+        .map { case (pk, id, v) =>
+          val arr = v.toArray
+          var vmin = Double.MaxValue
+          var vmax = Double.MinValue
+          var i = 0
+          while (i < arr.length) {
+            if (arr(i) < vmin) vmin = arr(i)
+            if (arr(i) > vmax) vmax = arr(i)
+            i += 1
+          }
+          val scale = if (vmax > vmin) (vmax - vmin) / 255.0 else 1.0
+          val codes = new Array[Byte](arr.length)
+          i = 0
+          while (i < arr.length) {
+            codes(i) = (math.floor((arr(i) - vmin) / scale + 0.5)
+              .toInt - 128).toByte
+            i += 1
+          }
+          (pk, id, codes, vmin, scale)
+        }
+        .toDF("pk", "claim_id", "codes", "vmin", "scale")))
+    }
   }
 
   /** CLAIM MIGRATION — the centroid lifecycle consumed by the STREAMING
@@ -306,40 +295,14 @@ object EmbedDedupStream {
     * force on this corpus. Runs at nprobe=2 — the multi-cell probe must
     * leave the brute-force verdicts unchanged (verify is exact either
     * way; widening the candidate set can only confirm the contract). */
-  def embedDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embeddedup")
-    Seq("in", "out", "out_vfps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val universe = vectorUniverse(spark, dir)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    universe.count()
-    try {
-      universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-        .select("vec_id")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")
-        .select("vec_id")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val centroids = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      val src = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      run(src, universe, centroids, out, root.resolve("ckpt").toString,
-        nprobe = 2)
-        .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
-    } finally universe.unpersist()
-  }
+  def embedDedupStreamQuery(spark: SparkSession, dir: String): DataFrame =
+    universeQuery(spark, dir, "graft-embeddedup") { (fx, universe, out) =>
+      val src = fx.arrivals("in",
+        ids(universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")),
+        ids(universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")))
+      run(src, universe, pinnedCentroids(spark, dir), out, fx.path("ckpt"),
+        nprobe = 2).awaitTermination()
+    }
 
   /** Oracle-gated query for the CENTROID LIFECYCLE CONSUMED BY THE
     * STREAM — the full drift response a production deployment runs:
@@ -355,28 +318,12 @@ object EmbedDedupStream {
     * in a stale cell (a missed migration), a probe keyed by the wrong
     * artifact, or a cell-recall hole under the refreshed centroids
     * flips rows red. */
-  def embedReclusterStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embedrecluster")
-    Seq("in", "in2", "out", "out_vfps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val universe = vectorUniverse(spark, dir)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    universe.count()
-    try {
-      def src(path: String) = spark.readStream
-        .schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
+  def embedReclusterStreamQuery(spark: SparkSession, dir: String): DataFrame =
+    universeQuery(spark, dir, "graft-embedrecluster") { (fx, universe, out) =>
       val evens = universe
         .filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-      evens.select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val pinned = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      run(src(in), universe, pinned, out, root.resolve("ckpt").toString)
+      val pinned = pinnedCentroids(spark, dir)
+      run(fx.arrivals("in", ids(evens)), universe, pinned, out, fx.path("ckpt"))
         .awaitTermination()
       // the refresh between runs: one Lloyd update from the claimed
       // members under the pinned assignment, then claim migration
@@ -384,19 +331,11 @@ object EmbedDedupStream {
         SimilarityOps.assignCells(pinned, evens.select("vec_id", "v"), 1),
         evens.select("vec_id", "v"), pinned)
       migrateClaims(spark, out, universe.select("vec_id", "v"), newCen)
-      universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-      run(src(in2), universe, newCen, out, root.resolve("ckpt2").toString,
-        epochBase = 1L)
+      run(fx.arrivals("in2",
+        ids(universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale"))),
+        universe, newCen, out, fx.path("ckpt2"), epochBase = 1L)
         .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
-    } finally universe.unpersist()
-  }
+    }
 
   /** Oracle-gated RETENTION LIFECYCLE through the embedding gate — the
     * [[MediaDedupStream.audioClaimRetentionQuery]] pattern on vectors:
@@ -413,45 +352,47 @@ object EmbedDedupStream {
     * batch-1 ADMITTED odd vectors, and the twin verdicts against that
     * surviving set — a sweep that drops an in-horizon claim, keeps an
     * aged one, or a restarted stream whose epochs alias flips rows red. */
-  def embedClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embedretention")
-    Seq("in", "in2", "out", "out_vfps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val universe = vectorUniverse(spark, dir, extraTwinRem = Some(5))
+  def embedClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame =
+    universeQuery(spark, dir, "graft-embedretention", extraTwinRem = Some(5)) {
+      (fx, universe, out) =>
+        val centroids = pinnedCentroids(spark, dir)
+        run(fx.arrivals("in",
+          ids(universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")),
+          ids(universe.filter(col("vec_id") % 2 === 1 && col("kind") === "orig"))),
+          universe, centroids, out, fx.path("ckpt"))
+          .awaitTermination()
+        // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
+        // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
+        // cohort (the abort path is spec-covered elsewhere)
+        sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
+        run(fx.arrivals("in2",
+          ids(universe.filter(col("kind") === "scale" || col("kind") === "scale2"))),
+          universe, centroids, out, fx.path("ckpt2"), epochBase = 2L)
+          .awaitTermination()
+    }
+
+  private def ids(vectors: DataFrame): DataFrame = vectors.select("vec_id")
+
+  /** The pinned first-64 centroid artifact every fixture starts from. */
+  private def pinnedCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    SimilarityOps.collectCentroids(
+      Tables(spark, dir, "embeddings")
+        .withColumn("v", SimilarityOps.asDouble(col("embedding")))
+        .filter(col("vec_id") < 64))
+
+  /** A fixture lifecycle over the persisted vector universe: `streams`
+    * runs the gate into `out` (given the fixture and the universe), and
+    * the verdicts there are read back once the universe is released. */
+  private def universeQuery(spark: SparkSession, dir: String, tag: String,
+      extraTwinRem: Option[Int] = None)(
+      streams: (ClaimGate.Fixture, DataFrame, String) => Unit): DataFrame = {
+    val fx = ClaimGate.fixture(spark, tag)
+    val out = fx.path("out")
+    val universe = vectorUniverse(spark, dir, extraTwinRem)
       .persist(StorageLevel.MEMORY_AND_DISK)
     universe.count()
-    try {
-      def src(path: String) = spark.readStream
-        .schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      universe.filter(col("vec_id") % 2 === 1 && col("kind") === "orig")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val centroids = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      run(src(in), universe, centroids, out, root.resolve("ckpt").toString)
-        .awaitTermination()
-      // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
-      // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
-      // cohort (the abort path is spec-covered elsewhere)
-      sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-      universe.filter(col("kind") === "scale" || col("kind") === "scale2")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-      run(src(in2), universe, centroids, out, root.resolve("ckpt2").toString,
-        epochBase = 2L)
-        .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
-    } finally universe.unpersist()
+    try streams(fx, universe, out)
+    finally universe.unpersist()
+    Gate.verdicts.read(spark, out)
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** ONE guardrailed maintenance entry point for a composed pipeline's
   * deployed stores — the operational pass a 100 TB deployment schedules
-  * nightly. Each gate declares its claim stores once (`claimStores`) and
-  * turns that list into actions with [[sweepActions]]; the snapshot and
+  * nightly. Each gate declares its claim stores once on its [[ClaimGate]],
+  * which turns that list into actions with [[sweepActions]]; the snapshot and
   * training stores add their own actions
   * ([[StreamPublish.maintenanceActions]],
   * [[CurationStream.storeMaintenanceActions]]). `Maintenance.run`

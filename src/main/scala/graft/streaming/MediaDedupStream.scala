@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.MultimodalOps
 import graft.sources.Tables
@@ -47,35 +46,36 @@ import graft.sources.Tables
   * are dropped whole (bounded recall loss on pathological keys for a
   * hard bound on candidate volume, the containment DF-cap discipline).
   *
-  * At-least-once: verdicts land, then claims, then the checkpoint — a
-  * batch replayed AFTER its claims landed sees its own winners as
-  * already claimed and re-emits corrupted match counts, so the read
-  * side resolves per doc with admitted = ANY delivery admitted and the
-  * match stats from the row with the MINIMUM n_matches (the store only
-  * grows, so the original delivery's match set is a subset of any
-  * replay's — equal counts imply the identical set). [[resolveVerdicts]]
-  * is that shared read contract. */
+  * At-least-once: the batch commits as [[ClaimGate]] orders it, and
+  * [[resolveVerdicts]] reads back under the gate's [[StreamVerdicts]]
+  * contract. */
 object MediaDedupStream {
 
-  /** The perceptual claim store — see the object doc. */
-  def claimStores(outDir: String): Seq[ClaimStore] =
-    Seq(ClaimStore(s"${outDir}_fps", MultimodalOps.BandedClaims, Some("pk")))
+  /** The perceptual claim store — see the object doc — and the verdict
+    * read contract (see [[resolveVerdicts]]). */
+  private val Gate = ClaimGate(
+    outDir => Seq(ClaimStore(s"${outDir}_fps", MultimodalOps.BandedClaims, Some("pk"))),
+    StreamVerdicts(Seq("doc_id", "orig_id", "kind", "admitted", "n_matches", "min_match"),
+      anyTrue = Seq("admitted"),
+      preClaim = Seq("n_matches", "min_match"),
+      carried = Seq("orig_id", "kind")))
 
-  /** RETENTION for the perceptual claim store — the
-    * [[ClaimStore.retentionSweep]] discipline wired into the gate:
-    * claims older than `minEpoch` fold away under the drop-fraction
-    * guardrail, so an asset whose every claim aged out RE-ADMITS on its
-    * next arrival while in-horizon claims keep rejecting. Run between
-    * stream runs (offline, like compaction). */
+  def claimStores(outDir: String): Seq[ClaimStore] = Gate.claimStores(outDir)
+
+  /** RETENTION for the perceptual claim store: claims older than
+    * `minEpoch` fold away under the drop-fraction guardrail, so an asset
+    * whose every claim aged out RE-ADMITS on its next arrival while
+    * in-horizon claims keep rejecting. Run between stream runs (offline,
+    * like compaction). */
   def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Long =
-    claimStores(outDir).map(_.retentionSweep(spark, minEpoch, maxDropFrac)).sum
+    Gate.sweepClaims(spark, outDir, minEpoch, maxDropFrac).sum
 
   /** The perceptual claim store as a [[Maintenance.Action]] — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
+    * [[Maintenance.run]]. */
   def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
       maxDropFrac: Double): Seq[Maintenance.Action] =
-    Maintenance.sweepActions(spark, claimStores(outDir), minEpoch, maxDropFrac)
+    Gate.maintenanceActions(spark, outDir, minEpoch, maxDropFrac)
 
   /** Per-batch gate: hash → banded candidate join against the pruned
     * claim store → radius verify → verdict append → claim append.
@@ -91,73 +91,55 @@ object MediaDedupStream {
       epochBase: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
     val Seq(store) = claimStores(outDir)
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark0 = spark
-        import spark0.implicits._
-        val hashed = batch
-          .select(col("doc_id"), col("orig_id"), col("kind"))
-          // spread the per-asset codec work across cores: an arriving
-          // micro-batch is partitioned by its SOURCE file layout (the
-          // fixture's one file = ONE partition), and without this the
-          // whole encode+decode+hash pass ran in a single task per batch
-          // (Probe: a 6.9 s one-task stage at sf0.1). Only the ~24-byte
-          // id rows shuffle — binaries never do (the mediaAssets
-          // discipline; guide §2.5 input skew: repartition after read)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .as[(Long, Long, String)]
-          .mapPartitions(_.map { case (d, o, k) =>
-            (d, o, k, modality.hashForKind(o, k))
-          })
-          .toDF("doc_id", "orig_id", "kind", "fhash")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val probes = MultimodalOps.probeBands(
-            hashed.select(col("doc_id"), col("fhash").as("h_t")), modality.radius)
-          // the touched probe-key set is bounded by the key space (2048)
-          // whatever the batch size — a tiny driver collect that lets the
-          // store read partition-prune to the keys this batch can hit.
-          // This collect IS the codec pass's cache fill (it consumes
-          // every hashed partition) — a separate count() paid one whole
-          // extra job per batch; probe + claim sides reuse the cache
-          val touched = probes.select("pk").distinct().as[Int].collect().toSeq
-          // hot-key guard: per-pk claim counts are exact on the pruned
-          // read (pruning keeps every row of a touched key)
-          val corpus = MultimodalOps.capHotKeys(
-            store.readPruned(spark, touched),
-            Seq("pk"), maxBandFreq)
-          val matches = MultimodalOps.verifiedPairs(probes, corpus, modality.radius)
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_matches"), min(col("claim_id")).as("min_match"))
-          val verdict = hashed
-            .join(matches, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("orig_id"), col("kind"),
-              col("n_matches").isNull.as("admitted"),
-              coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-              coalesce(col("min_match"), lit(-1L)).as("min_match"),
-              col("fhash"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          verdict.count()
-          try {
-            verdict.drop("fhash")
-              .write.mode(SaveMode.Append).parquet(outDir)
-            // novel assets claim their fingerprint BEFORE the checkpoint
-            // commits — pre-exploded to the probe-key layout; the shared
-            // ClaimStore folds the file set at the delta budget
-            // epoch stamp: a RESTARTED stream's batch ids begin at 0
-            // again, so retention epochs are epochBase + batchId with
-            // the base threaded by the caller as a monotone build
-            // number — raw batch ids would alias across runs and let a
-            // sweep age out fresh claims
-            store.append(spark, MultimodalOps.claimBands(verdict.filter(col("admitted"))
-              .select(col("doc_id").as("claim_id"), col("fhash")))
-              .withColumn("epoch", lit(epochBase + batchId)))
-          } finally verdict.unpersist()
-        } finally hashed.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Gate.run(incoming, outDir, checkpoint, epochBase) { b =>
+      val spark0 = spark
+      import spark0.implicits._
+      val hashed = b.persist(b.frame
+        .select(col("doc_id"), col("orig_id"), col("kind"))
+        // spread the per-asset codec work across cores: an arriving
+        // micro-batch is partitioned by its SOURCE file layout (the
+        // fixture's one file = ONE partition), and without this the
+        // whole encode+decode+hash pass ran in a single task per batch
+        // (Probe: a 6.9 s one-task stage at sf0.1). Only the ~24-byte
+        // id rows shuffle — binaries never do (the mediaAssets
+        // discipline; guide §2.5 input skew: repartition after read)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .as[(Long, Long, String)]
+        .mapPartitions(_.map { case (d, o, k) =>
+          (d, o, k, modality.hashForKind(o, k))
+        })
+        .toDF("doc_id", "orig_id", "kind", "fhash"))
+      val probes = MultimodalOps.probeBands(
+        hashed.select(col("doc_id"), col("fhash").as("h_t")), modality.radius)
+      // the touched probe-key set is bounded by the key space (2048)
+      // whatever the batch size — a tiny driver collect that lets the
+      // store read partition-prune to the keys this batch can hit.
+      // This collect IS the codec pass's cache fill (it consumes
+      // every hashed partition) — a separate count() paid one whole
+      // extra job per batch; probe + claim sides reuse the cache
+      val touched = probes.select("pk").distinct().as[Int].collect().toSeq
+      // hot-key guard: per-pk claim counts are exact on the pruned
+      // read (pruning keeps every row of a touched key)
+      val corpus = MultimodalOps.capHotKeys(
+        store.readPruned(spark, touched),
+        Seq("pk"), maxBandFreq)
+      val matches = MultimodalOps.verifiedPairs(probes, corpus, modality.radius)
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_matches"), min(col("claim_id")).as("min_match"))
+      val verdict = b.persist(hashed
+        .join(matches, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("orig_id"), col("kind"),
+          col("n_matches").isNull.as("admitted"),
+          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+          coalesce(col("min_match"), lit(-1L)).as("min_match"),
+          col("fhash")))
+      // the verdict write fills the cache the claim side then reads;
+      // novel assets claim their fingerprint, pre-exploded to the
+      // probe-key layout
+      ClaimGate.Commit(verdict.drop("fhash"), claims = Seq(
+        store -> MultimodalOps.claimBands(verdict.filter(col("admitted"))
+          .select(col("doc_id").as("claim_id"), col("fhash")))))
+    }
   }
 
   /** Oracle-gated query: PNG (even-id) assets stream through the gate
@@ -171,49 +153,37 @@ object MediaDedupStream {
     * dHash-bit-identical on the DCT-aligned checkerboards —
     * spec-asserted over the full asset period). */
   def imageDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-mediadedup")
-    Seq("in", "out", "out_fps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val fx = ClaimGate.fixture(spark, "graft-mediadedup")
+    val out = fx.path("out")
     val evens = Tables(spark, dir, "documents")
       .select(col("doc_id")).filter(col("doc_id") % 2 === 0)
-    evens.filter(col("doc_id") % 4 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    evens.filter(col("doc_id") % 4 === 2)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .union(evens
-        .filter(col("doc_id") % 4 === 0)
-        .filter(col("doc_id") % 6 === 0 &&
-          abs(lit(2) * (lit(28) + (col("doc_id") * 37) % 200) - 255) >= 64)
-        .select((col("doc_id") + 3000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("reencode").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream
-      .schema(spark.read.parquet(in).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    run(src, out, ckpt).awaitTermination()
+    val src = fx.arrivals("in",
+      origs(evens.filter(col("doc_id") % 4 === 0)),
+      origs(evens.filter(col("doc_id") % 4 === 2))
+        .union(evens
+          .filter(col("doc_id") % 4 === 0)
+          .filter(col("doc_id") % 6 === 0 &&
+            abs(lit(2) * (lit(28) + (col("doc_id") * 37) % 200) - 255) >= 64)
+          .select((col("doc_id") + 3000000L).as("doc_id"),
+            col("doc_id").as("orig_id"), lit("reencode").as("kind"))))
+    run(src, out, fx.path("ckpt")).awaitTermination()
     resolveVerdicts(spark, out)
   }
 
-  /** The shared at-least-once READ CONTRACT for perceptual-gate verdict
-    * stores: admitted = ANY delivery admitted (a doc's own claim in the
+  /** The perceptual-gate verdicts under the gate's [[StreamVerdicts]]
+    * contract: admitted = ANY delivery admitted (a doc's own claim in the
     * store proves its admission — the replay of an admitted doc
     * self-matches and re-emits admitted = false), and the match stats
     * come from the delivery with the MINIMUM n_matches: the claim store
-    * only ever grows, so the original delivery's match set is a subset
-    * of any replay's — the smaller count IS the pre-claim verdict, and
-    * equal counts imply the identical set (hence identical min_match).
+    * only ever grows, so the smaller count IS the pre-claim verdict.
     * Taking max(n_matches) here would surface a replay's self-match-
     * inflated count instead of the original verdict. */
   def resolveVerdicts(spark: SparkSession, out: String): DataFrame =
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-      anyTrue = Seq("admitted"),
-      preClaim = Seq("n_matches", "min_match"),
-      carried = Seq("orig_id", "kind"))
-      .select("doc_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
+    Gate.verdicts.read(spark, out)
+
+  /** Arrival rows for original assets: (doc_id, orig_id = doc_id, 'orig'). */
+  private def origs(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
 
   /** The AUDIO modality through the same gate: even-id assets stream as
     * batch 0 and seed the claim store; batch 1 brings the odd-id assets
@@ -224,26 +194,14 @@ object MediaDedupStream {
     * audio verify radius 7 — the [[imageDedupStreamQuery]] discipline
     * with zero PNG/JPEG asymmetry. */
   def audioDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-audiodedup")
-    Seq("in", "out", "out_fps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val fx = ClaimGate.fixture(spark, "graft-audiodedup")
+    val out = fx.path("out")
     val docs = Tables(spark, dir, "documents").select(col("doc_id"))
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .union(docs.filter(col("doc_id") % 6 === 4)
-        .select((col("doc_id") + 5000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("gain").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream
-      .schema(spark.read.parquet(in).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    run(src, out, ckpt, MultimodalOps.Modality.Audio).awaitTermination()
+    val src = fx.arrivals("in",
+      origs(docs.filter(col("doc_id") % 2 === 0)),
+      origs(docs.filter(col("doc_id") % 2 === 1))
+        .union(gainTwins(docs, 4, 5000000L)))
+    run(src, out, fx.path("ckpt"), MultimodalOps.Modality.Audio).awaitTermination()
     resolveVerdicts(spark, out)
   }
 
@@ -264,39 +222,29 @@ object MediaDedupStream {
     * claim, keeps an aged one, or a restarted stream whose epochs alias
     * flips rows red. */
   def audioClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-audioretention")
-    Seq("in", "in2", "out", "out_fps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
+    val fx = ClaimGate.fixture(spark, "graft-audioretention")
+    val out = fx.path("out")
     val docs = Tables(spark, dir, "documents").select(col("doc_id"))
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    def src(path: String) = spark.readStream
-      .schema(spark.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), out, root.resolve("ckpt").toString,
-      MultimodalOps.Modality.Audio).awaitTermination()
+    run(fx.arrivals("in",
+      origs(docs.filter(col("doc_id") % 2 === 0)),
+      origs(docs.filter(col("doc_id") % 2 === 1))),
+      out, fx.path("ckpt"), MultimodalOps.Modality.Audio).awaitTermination()
     // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
     // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
     // cohort, and at larger corpora batch 1 admits few novel claims
     // (most odds match an even within the radius), so the aged fraction
     // legitimately approaches 1 — the abort path is spec-covered
     sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-    docs.filter(col("doc_id") % 6 === 4)
-      .select((col("doc_id") + 5000000L).as("doc_id"),
-        col("doc_id").as("orig_id"), lit("gain").as("kind"))
-      .union(docs.filter(col("doc_id") % 6 === 3)
-        .select((col("doc_id") + 7000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("gain").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-    run(src(in2), out, root.resolve("ckpt2").toString,
-      MultimodalOps.Modality.Audio, epochBase = 2L).awaitTermination()
+    run(fx.arrivals("in2",
+      gainTwins(docs, 4, 5000000L).union(gainTwins(docs, 3, 7000000L))),
+      out, fx.path("ckpt2"), MultimodalOps.Modality.Audio, epochBase = 2L)
+      .awaitTermination()
     resolveVerdicts(spark, out)
   }
+
+  /** 2×-gain twins of the (6k+`rem`)-th assets, ids offset by `idBase`. */
+  private def gainTwins(docs: DataFrame, rem: Int, idBase: Long): DataFrame =
+    docs.filter(col("doc_id") % 6 === rem)
+      .select((col("doc_id") + idBase).as("doc_id"),
+        col("doc_id").as("orig_id"), lit("gain").as("kind"))
 }

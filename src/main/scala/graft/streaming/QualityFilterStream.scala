@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextOps
 import graft.sources.Tables
 
@@ -28,14 +28,10 @@ object QualityFilterStream {
       means: Seq[Long],
       outDir: String,
       checkpoint: String): StreamingQuery =
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextOps.scoreQualityRows(batch, weights, means)
-          .write.mode(SaveMode.Append).parquet(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    ClaimGate.start(incoming, checkpoint) { (batch, _) =>
+      TextOps.scoreQualityRows(batch, weights, means)
+        .write.mode(SaveMode.Append).parquet(outDir)
+    }
 
   /** Oracle-gated query: fit on the even doc_id half in batch, then
     * stream the held-out odd half through the filter as two
@@ -44,25 +40,13 @@ object QualityFilterStream {
     * order and SQL-expressible: the oracle replays the fit and predicts
     * each odd doc relationally. */
   def qualityFilterStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    // shared pid-scoped root (exit-hook cleanup + dead-sibling sweep);
-    // clear the stream dirs so a repeat invocation starts fresh
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-qfs")
-    Seq("in", "out", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val fx = ClaimGate.fixture(spark, "graft-qfs")
     val docs = Tables(spark, dir, "documents")
     val (_, w, m) = TextOps.qualityTrainLoop(docs.filter(col("doc_id") % 2 === 0), 12)
     val held = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    held.filter(col("doc_id") % 4 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    held.filter(col("doc_id") % 4 === 3)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream.schema(held.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = run(src, w, m, out, ckpt)
-    q.awaitTermination()
-    spark.read.parquet(out).orderBy("doc_id")
+    val src = fx.arrivals("in",
+      held.filter(col("doc_id") % 4 === 1), held.filter(col("doc_id") % 4 === 3))
+    run(src, w, m, fx.path("out"), fx.path("ckpt")).awaitTermination()
+    spark.read.parquet(fx.path("out")).orderBy("doc_id")
   }
 }

@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Publish
 import graft.sources.Hfs
-import java.nio.file.Files
 
 /** Continuous metadata publishing: a streaming source MERGE-upserted into
   * a BUCKETED versioned snapshot per micro-batch — the reference's
@@ -211,14 +210,10 @@ object StreamPublish {
       orderCols: Seq[Column],
       tagPrefix: String = "batch_",
       nBuckets: Int = DefaultBuckets): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publishBatch(batch, batchId, baseDir, keyCol, attrCols, orderCols,
-          tagPrefix, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    ClaimGate.start(events, checkpoint) { (batch, batchId) =>
+      publishBatch(batch, batchId, baseDir, keyCol, attrCols, orderCols,
+        tagPrefix, nBuckets)
+    }
 
   /** Compact the committed snapshot: rewrite every live bucket into ONE
     * fresh generation, swap the manifest, and delete every generation
@@ -315,30 +310,19 @@ object StreamPublish {
     * so the result is deterministic and SQL-expressible even though
     * FileStreamSource's batch order is not. */
   def streamPublishFoldQuery(spark: SparkSession, dir: String): DataFrame = {
-    // per-process fixed dirs, wiped per run: repeated bench/verify passes
-    // reuse the same paths instead of leaking an events-table-sized copy
-    // per invocation; the pid suffix isolates concurrent graft JVMs
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-spq")
-    graft.sources.TmpStores.deleteRecursively(root)
-    Files.createDirectories(root)
-    val in = root.resolve("in").toString
-    val base = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val fx = ClaimGate.fixture(spark, "graft-spq")
+    val base = fx.path("out")
     val ev = graft.sources.Tables(spark, dir, "events")
       .select(col("user_id").cast("string").as("key"),
         col("event_type"),
         col("event_id").cast("string").as("eid"),
         col("ts"), col("event_id"), col("user_id"))
-    ev.filter(col("user_id") % 3 === 0).drop("user_id")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    ev.filter(col("user_id") % 3 =!= 0).drop("user_id")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream.schema(ev.drop("user_id").schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+    val src = fx.arrivals("in",
+      ev.filter(col("user_id") % 3 === 0).drop("user_id"),
+      ev.filter(col("user_id") % 3 =!= 0).drop("user_id"))
     val attrs = Seq("event_type", "eid")
-    val q = publishStream(src, base, ckpt, "key", attrs,
-      Seq(col("ts"), col("event_id")), "fold_")
-    q.awaitTermination()
+    publishStream(src, base, fx.path("ckpt"), "key", attrs,
+      Seq(col("ts"), col("event_id")), "fold_").awaitTermination()
     readCurrent(spark, base, Some(snapshotSchema("key", attrs)))
       .select(col("key"), col("event_type"), col("eid"))
       .orderBy("key")

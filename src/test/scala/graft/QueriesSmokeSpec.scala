@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.PlanWalk.allExpressions
 import graft.queries.Query
 
 /** Smoke: every declared query runs and returns rows at sf0.001, plans no
   * cartesian product, no ScalaUDF and no unlisted nested-loop join, and
-  * the registry pairs every query with exactly one oracle. Exact-value
-  * equivalence is covered by the DuckDB gate (tools/check.py); this keeps
-  * `sbt test` self-contained.
+  * the registry pairs every query with exactly one oracle. A query that
+  * starts a stream is run a second time in the same session and must
+  * return the same rows: every fixture starts from nothing, so no store,
+  * claim or checkpoint of the first run may leak into the second.
+  * Exact-value equivalence is covered by the DuckDB gate
+  * (tools/check.py); this keeps `sbt test` self-contained.
   */
 class QueriesSmokeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -22,6 +27,26 @@ class QueriesSmokeSpec extends AnyFunSuite {
     .getOrCreate()
 
   val dir = "/root/testdata/sf0.001"
+
+  /** Streams started in this suite's session (`onQueryStarted` runs
+    * before `start()` returns). */
+  private lazy val streamStarts: AtomicInteger = {
+    val n = new AtomicInteger(0)
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        n.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+    n
+  }
+
+  /** Rows as a multiset; binary cells compare by content. */
+  private def multiset(rows: Array[Row]): Map[Seq[Any], Int] =
+    rows.toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).groupBy(identity).view.mapValues(_.size).toMap
 
   test("every query has exactly one non-empty oracle") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
@@ -84,12 +109,20 @@ class QueriesSmokeSpec extends AnyFunSuite {
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
+      val started = streamStarts.get
       val df = fn(spark, dir)
       assert(df.columns.nonEmpty)
       assert(df.count() > 0, s"$name returned 0 rows")
       // q_neardup_groups executes its fixpoint loop eagerly at construction
       // and returns a checkpoint scan — there is no plan left to inspect
       if (name != "q_neardup_groups") assertPlanShape(name, df)
+      if (streamStarts.get != started) {
+        // collect before the second run: it wipes the first run's files
+        val first = df.collect()
+        val again = fn(spark, dir).collect()
+        assert(multiset(again) == multiset(first),
+          s"$name returned different rows when run again in the same session")
+      }
     }
   }
 }
